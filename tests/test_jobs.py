@@ -78,6 +78,38 @@ def test_full_dag(spark, tmp_path):
     assert seg["Alpha"]["normalized_score_3m"] is not None
 
 
+def test_job_row_counts_equal_table_scans(spark, tmp_path):
+    """The runners return footer row counts (no Spark job); each must
+    equal a full scan of the table just committed."""
+    downloads = tmp_path / "downloads"
+    downloads.mkdir()
+    _write_csv(downloads / "Technicals_1.csv", schemas.TECHNICAL_HEADER_MAP,
+               n=12)
+    _write_csv(downloads / "funda_1.csv", schemas.FUNDAMENTAL_HEADER_MAP,
+               n=8, prefix="FUN")
+    tables = jobs.warehouse_tables(spark, str(tmp_path / "wh"))
+    stock = tables["stock_data"]
+
+    n = jobs.run_technical_upload(spark, str(downloads), tables)
+    assert n == stock.read().count() == 12
+    n = jobs.run_fundamental_upload(spark, str(downloads), tables)
+    assert n == stock.read().count() == 20
+    out = jobs.run_backfill(spark, str(downloads), tables)
+    assert out["stock_data_rows"] == stock.read().count() == 20
+
+    ov = spark.createDataFrame(
+        [("Alpha", "2.5T INR", "100"), ("Beta", "1.0T INR", "50"),
+         ("Gamma", "0.5T INR", "10")],
+        "sector string, market_cap string, stocks string")
+    pf = spark.createDataFrame(
+        [(s, "+1%", "1", "2", "3", "4", "5", "6")
+         for s in ("Alpha", "Beta", "Gamma")],
+        "sector string, change_pct string, perf_1w string, perf_1m string, "
+        "perf_3m string, perf_6m string, perf_ytd string, perf_1y string")
+    n = jobs.run_segment_job(spark, tables, ov, pf, key="sector")
+    assert n == tables["sector_data"].read().count() == 3
+
+
 def test_missing_download_is_noop(spark, tmp_path):
     tables = jobs.warehouse_tables(spark, str(tmp_path / "wh2"))
     assert jobs.run_technical_upload(spark, str(tmp_path / "empty"), tables) == 0

@@ -54,12 +54,48 @@ def test_minhash_detects_near_duplicates(spark):
     pairs = dd.lsh_candidate_pairs(df, "doc_id", "text", k=8, bands=4)
     got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
     assert (1, 4) in got                     # exact copy always a candidate
-    verified = dd.jaccard_verify(pairs, dd.shingle_rows(df, "doc_id", "text"),
+    verified = dd.jaccard_verify(pairs, dd.shingle_sets(df, "doc_id", "text"),
                                  "doc_id", threshold=0.3)
     v = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in verified.collect()}
     assert v[(1, 4)] == 1.0
     for (a, b) in v:
         assert 3 not in (a, b)               # unrelated doc never survives
+
+
+def _py_shingles(text):
+    words = text.split()
+    if len(words) < 3:
+        return {" ".join(words)}
+    return {" ".join(words[i:i + 3]) for i in range(len(words) - 2)}
+
+
+def test_jaccard_verify_matches_python_set_jaccard(spark):
+    texts = {1: "alpha beta gamma delta epsilon zeta",
+             2: "alpha beta gamma delta epsilon zeta",      # exact copy
+             3: "one two three four five",                  # disjoint
+             4: "spam spam spam spam spam eggs",            # repeated words
+             5: "spam spam spam eggs ham"}
+    docs = spark.createDataFrame(
+        list(texts.items()) + [(6, None)], "doc_id long, text string")
+    sets = dd.shingle_sets(docs, "doc_id", "text").unionByName(
+        spark.createDataFrame([(7, [])], "doc_id long, ss array<bigint>"))
+    pairs = spark.createDataFrame(
+        [(1, 2), (1, 3), (4, 5), (1, 4), (1, 6), (2, 7), (6, 7)],
+        "doc_a long, doc_b long")
+    out = dd.jaccard_verify(pairs, sets, "doc_id")
+    assert dict(out.dtypes) == {"doc_a": "bigint", "doc_b": "bigint",
+                                "inter": "bigint", "union_n": "bigint",
+                                "jaccard": "double"}
+    got = {(r["doc_a"], r["doc_b"]): (r["inter"], r["union_n"], r["jaccard"])
+           for r in out.collect()}
+    want = {}
+    for a, b in [(1, 2), (1, 3), (4, 5), (1, 4)]:
+        sa, sb = _py_shingles(texts[a]), _py_shingles(texts[b])
+        inter, union = len(sa & sb), len(sa | sb)
+        want[(a, b)] = (inter, union, inter / union)
+    assert got == want                  # docs 6 (NULL) and 7 (empty) absent
+    assert got[(1, 2)][2] == 1.0
+    assert got[(1, 3)][0] == 0 and got[(4, 5)] == (2, 3, 2 / 3)
 
 
 def test_minhash_long_matches_array_form(spark):

@@ -12,7 +12,7 @@ reports per-query wall time + the finalized-plan feature counts, so the
 Methodology notes (mirrored in SCALING.md):
 - Each scale starts with a cleared q28-family candidate cache, so
   q28 pays the shared LSH materialization at every scale (comparable
-  numbers); q42/q59 then measure their own work on top of it.
+  numbers); q42/q70 then measure their own work on top of it.
 - Queries are materialized through the noop sink (full execution, no
   driver collect) after one un-timed warm-up of q1 per scale to absorb
   parquet-footer/JIT effects; an un-timed count() records output rows

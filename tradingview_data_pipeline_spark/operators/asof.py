@@ -53,8 +53,10 @@ def asof_join(
     ``<name><suffix>``); ``tiebreak`` is a right-side column that makes
     the pick deterministic when two right rows share a timestamp (the
     larger (time, tiebreak) pair wins, matching an ``ORDER BY time,
-    tiebreak`` running-last semantics).  Left rows with no prior right
-    row keep NULLs.
+    tiebreak`` running-last semantics).  Right rows that tie on both
+    are ordered by their payload, so the larger payload wins and the
+    result never depends on partition order.  Left rows with no prior
+    right row keep NULLs.
     """
     rtagged = right.select(
         F.col(on).alias("__k"),
@@ -75,10 +77,10 @@ def asof_join(
     )
     # side 0 sorts before side 1 at equal time: a right row exactly at the
     # left row's time counts as "at-or-before".  __tb orders duplicate
-    # right timestamps deterministically.
+    # right timestamps, and __p the rows that tie on __tb as well.
     w = (
         Window.partitionBy("__k")
-        .orderBy("__t", "__side", "__tb")
+        .orderBy("__t", "__side", "__tb", "__p")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = ltagged.unionByName(rtagged).withColumn(

@@ -4,12 +4,15 @@ Scale architecture (the 100 TB story):
 - **Exact**: hash-groupBy on a 128-bit content digest. The shuffle carries
   (digest, doc_id) — 40 bytes/row — never the payload. At 100 TB of text
   that is a ~0.1% shuffle.
-- **MinHash+LSH**: signature computation is map-only (per-row array fold
-  over shingle hashes, no explode). Banding turns the O(n²) similarity
-  join into a groupBy on (band_id, band_hash) — only docs sharing a band
-  bucket meet. Candidate verification (exact Jaccard over distinct
-  shingles) runs on the candidate pairs only. Skewed buckets (boilerplate
-  docs) are handled by AQE skew-join / bucket-size capping.
+- **MinHash+LSH**: one per-doc shingle-set frame ``(id, ss)`` (distinct
+  md5-60 hash array, built map-side once and pinned) feeds both the
+  signatures and the verify. Signatures explode ``ss`` into one
+  codegen'd min aggregate. Banding turns the O(n²) similarity join into
+  a groupBy on (band_id, band_hash) — only docs sharing a band bucket
+  meet. Candidate verification (exact Jaccard) joins each pair to both
+  docs' sets and intersects the arrays map-side: Θ(pairs) rows, never
+  Θ(pairs × shingles/doc). Skewed buckets (boilerplate docs) are
+  handled by AQE skew-join / bucket-size capping.
 - **SimHash**: map-only 16..64-bit signature; near-dup = signatures within
   Hamming distance d, found by pigeonhole banding of the bits.
 
@@ -83,15 +86,24 @@ def with_minhash_signature(df: DataFrame, text_col: str, id_cols: list[str],
     return step.select(*id_cols, sig.alias(out_col))
 
 
+def shingle_sets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, ss): one distinct shingle-hash array per doc — the set
+    representation shared by MinHash and Jaccard. Map-only, docs-sized.
+    A NULL text has no shingles: its set is NULL, so it gets no
+    signature and joins no verified pair."""
+    text = F.col(text_col)
+    return df.select(F.col(id_col),
+                     F.when(text.isNotNull(), base_hashes(text)).alias("ss"))
+
+
 def _minhash_agg(df: DataFrame, id_col: str, text_col: str, k: int,
                  shingles: DataFrame | None = None) -> DataFrame:
     """(id, m0..m{k-1}) via explode + one codegen'd aggregate. Pass a
-    precomputed (id, s) shingle-hash frame (``shingle_rows``, ideally
-    cached) to share the md5 work with Jaccard verification."""
-    if shingles is not None:
-        ex = shingles.select(F.col(id_col), F.col("s").alias("h"))
-    else:
-        ex = df.select(F.col(id_col), F.explode(base_hashes(F.col(text_col))).alias("h"))
+    precomputed (id, ss) set frame (``shingle_sets``, ideally pinned)
+    to share the md5 work with Jaccard verification."""
+    if shingles is None:
+        shingles = shingle_sets(df, id_col, text_col)
+    ex = shingles.select(F.col(id_col), F.explode("ss").alias("h"))
     aggs = [F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_P).alias(f"m{j}")
             for j, (a, b) in enumerate(_affine_coeffs(k))]
     return ex.groupBy(id_col).agg(*aggs)
@@ -106,17 +118,6 @@ def minhash_signatures_long(df: DataFrame, id_col: str, text_col: str,
     g = _minhash_agg(df, id_col, text_col, k)
     stack = ", ".join(f"CAST({j} AS BIGINT), m{j}" for j in range(k))
     return g.select(id_col, F.expr(f"stack({k}, {stack}) AS (j, minhash)"))
-
-
-def lsh_band_hashes(sig: Column, bands: int, rows_per_band: int) -> Column:
-    """array<struct<band:int, bh:string>>: md5 of the ':'-joined band slice."""
-    hashes = []
-    for b in range(bands):
-        parts = [F.element_at(sig, b * rows_per_band + i + 1).cast("string")
-                 for i in range(rows_per_band)]
-        hashes.append(F.struct(F.lit(b).cast("int").alias("band"),
-                               F.md5(F.concat_ws(":", *parts)).alias("bh")))
-    return F.array(*hashes)
 
 
 LSH_MAX_BUCKET_DEFAULT = 1000
@@ -414,16 +415,20 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
     quadratic path) or not meaningfully similar (band collision without
     high Jaccard). The cap bounds per-bucket join output at
     ~``max_bucket``²/2 and is mirrored in the DuckDB oracles (q28/q42/
-    q59) so capped semantics stay engine-verified. ``None`` disables.
+    q70) so capped semantics stay engine-verified. ``None`` disables.
     Cost: one map-side-combined count over the (id, band, bh) frame and
     a broadcast anti-join against the (tiny) over-cap bucket list.
+
+    ``shingles``: a ``shingle_sets`` frame (ideally pinned) to read
+    instead of re-hashing the text — the substrate ``jaccard_verify``
+    reads too.
     """
     g = _minhash_agg(df, id_col, text_col, k, shingles=shingles)
     banded = _banded_signatures(g, id_col, k, bands)
     # the banded frame feeds THREE subtrees (the over-cap bucket count
     # and both sides of the band self-join) whose differing downstream
     # aggregates defeat canonical-plan exchange reuse — unpinned, the
-    # minhash shuffle+aggregate (and the shingle explode under it when
+    # minhash shuffle+aggregate (and the shingle hashing under it when
     # the caller didn't pass a pinned ``shingles``) re-runs per subtree.
     # Eager-checkpoint the tiny (id, band, 16-byte bh) frame once
     # (docs × bands rows, never the text): one signature pass feeds all
@@ -444,59 +449,43 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
         .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
         .distinct()
     )
-    # Checkpoint the pair list itself (r13): jaccard_verify consumes it
-    # TWICE (the intersection join and the final pair-metadata join)
-    # and the differing downstream join keys defeat exchange reuse, so
-    # the band self-join + distinct re-ran per consumer. The frame is
-    # two ids per row and bounded by the LSH funnel + bucket cap — the
-    # cheapest thing in this pipeline to materialize, and it caps the
-    # self-join at exactly one execution no matter how many consumers.
+    # Checkpoint the pair list itself (r13): downstream plans reference
+    # it more than once (connected_components' distributed path unions
+    # the verified pairs with themselves, callers count or collect the
+    # candidates), and unpinned the band self-join + distinct re-runs
+    # per consumer. The frame is two ids per row and bounded by the LSH
+    # funnel + bucket cap — the cheapest thing in this pipeline to
+    # materialize, and it caps the self-join at exactly one execution
+    # no matter how many consumers.
     return pins.checkpoint(out)
 
 
 # ---------------------------------------------------------------------------
 # Exact n-gram Jaccard verification of candidate pairs — over the same
-# distinct shingle-hash sets (8-byte ints join far faster than shingle
-# strings; the md5 image preserves set overlap).
+# distinct shingle-hash sets MinHash reads (8-byte ints intersect far
+# faster than shingle strings; the md5 image preserves set overlap).
 # ---------------------------------------------------------------------------
 
-def shingle_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, shingle-hash) distinct — the set representation for Jaccard."""
-    return df.select(F.col(id_col), F.explode(base_hashes(F.col(text_col))).alias("s"))
-
-
-def jaccard_verify(pairs: DataFrame, shingles: DataFrame, id_col: str,
-                   *, threshold: float = 0.0,
-                   partitions: int | None = None) -> DataFrame:
+def jaccard_verify(pairs: DataFrame, sets: DataFrame, id_col: str,
+                   *, threshold: float = 0.0) -> DataFrame:
     """Exact Jaccard over distinct shingle sets for each candidate pair.
 
-    inter via join on shingle equality; union = |A| + |B| - inter. Integer
-    counts -> exact double division, engine-reproducible.
-
-    ``partitions``: width hint for the two joins against the
-    corpus-sized shingle frame (~100 hashes/doc) — at the 5M-doc decade
-    their sort-merge sorts exceed the per-task budget at the session's
-    small-data shuffle width (the SCALING addendum-22 rule; caught on
-    q70, whose connected-components run sits downstream of this
-    verify).
+    ``sets`` is a ``shingle_sets`` frame (id, ss). Each pair joins it
+    twice, by ``doc_a`` and by ``doc_b``; inter = |A ∩ B| by
+    ``array_intersect`` and union = |A| + |B| - inter, both map-side —
+    Θ(pairs) rows through two joins. Integer counts -> exact double
+    division, engine-reproducible. A doc with an empty (or NULL) set is
+    in no output pair.
     """
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    sa = shingles.select(F.col(id_col).alias("doc_a"), F.col("s"))
-    sb = shingles.select(F.col(id_col).alias("doc_b"), F.col("s"))
-    if partitions is not None:
-        sa = sa.repartition(partitions, F.col("doc_a"))
-        sb = sb.repartition(partitions, F.col("doc_b"), F.col("s"))
-    inter = (
-        pairs.join(sa, "doc_a").join(sb, ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b").agg(F.count(F.lit(1)).alias("inter"))
-    )
-    na = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n").alias("nb"))
+    s = sets.where(F.size("ss") > 0)
+    sa = s.select(F.col(id_col).alias("doc_a"), F.col("ss").alias("sa"))
+    sb = s.select(F.col(id_col).alias("doc_b"), F.col("ss").alias("sb"))
+    inter = F.size(F.array_intersect("sa", "sb")).cast("bigint")
     out = (
-        pairs.join(inter, ["doc_a", "doc_b"], "left")
-        .withColumn("inter", F.coalesce(F.col("inter"), F.lit(0)))
-        .join(na, "doc_a").join(nb, "doc_b")
-        .withColumn("union_n", F.col("na") + F.col("nb") - F.col("inter"))
+        pairs.join(sa, "doc_a").join(sb, "doc_b")
+        .withColumn("inter", inter)
+        .withColumn("union_n", (F.size("sa") + F.size("sb")).cast("bigint")
+                    - F.col("inter"))
         .withColumn("jaccard", F.col("inter") * 1.0 / F.col("union_n"))
         .select("doc_a", "doc_b", "inter", "union_n", "jaccard")
     )
@@ -661,10 +650,6 @@ def simhash(col: Column, bits: int = 16) -> Column:
     for j in range(1, bits):
         out = out + bit_term(j)
     return F.when(n > 0, out).otherwise(F.lit(None).cast("bigint"))
-
-
-def hamming_distance(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def simhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -1081,20 +1066,16 @@ def dedup_clusters(df: DataFrame, id_col: str, text_col: str,
     ideally cached) to reuse the shingle/LSH work across operators —
     the threshold is applied here as a plain filter either way."""
     if scored_pairs is None:
-        # the shingle frame feeds the minhash aggregate AND all three
-        # jaccard_verify subtrees (sizes, both join sides) — unpinned,
-        # the tokenize + explode + md5 pass re-runs per consumer (the
-        # q28 _scored_pairs lesson, guide §2.4). DISK_ONLY: corpus-
-        # sized, must not compete with the verify joins' execution
-        # memory (addendum-16 rule).
-        from pyspark import StorageLevel
-
+        # the set frame feeds the minhash aggregate AND both
+        # jaccard_verify join sides — unpinned, the tokenize + md5 pass
+        # re-runs per consumer (guide §2.4). Docs-sized (one array per
+        # doc); pins.checkpoint is DISK_ONLY, so it never competes with
+        # the verify joins' execution memory (addendum-16 rule).
         from tradingview_data_pipeline_spark.operators import pins
-        shingles = pins.track(shingle_rows(df, id_col, text_col)
-                              .persist(StorageLevel.DISK_ONLY))
+        sets = pins.checkpoint(shingle_sets(df, id_col, text_col))
         pairs = lsh_candidate_pairs(df, id_col, text_col, k=k, bands=bands,
-                                    shingles=shingles, max_bucket=max_bucket)
-        scored_pairs = jaccard_verify(pairs, shingles, id_col)
+                                    shingles=sets, max_bucket=max_bucket)
+        scored_pairs = jaccard_verify(pairs, sets, id_col)
     verified = scored_pairs.where(F.col("jaccard") >= jaccard_threshold) \
         .select("doc_a", "doc_b")
     comp = connected_components(verified)

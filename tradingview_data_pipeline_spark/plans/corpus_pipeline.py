@@ -33,7 +33,7 @@ Scale shape: two corpus-sized shuffles (content-hash dedup, LSH band
 join), everything else map-side or keyed joins against the small
 cluster frame. The near-dup clustering output is localCheckpointed and
 reused for BOTH keeper selection and the leakage-safe split — one LSH
-pass, two consumers (the q28/q42/q59 sharing pattern).
+pass, two consumers (the q28/q42/q70 sharing pattern).
 
 The composition is pytest-verified end-to-end (no exact dups in the
 output, no cluster split across train/test, shards on disk, metric
@@ -86,8 +86,9 @@ def run_corpus_prep(
     corpora — the measured q42 third-decade blowup, SCALING.md; k=16
     was measured to take the 500k-doc pipeline 396 -> 141 s, trading
     ~6% of borderline-Jaccard candidate recall. Pipeline cost is
-    CANDIDATE-PAIR-bound (exact Jaccard verification is Θ(pairs ×
-    shingles/doc)); see the round-8 SCALING.md stage table for the
+    CANDIDATE-PAIR-bound (exact Jaccard verification is Θ(pairs): two
+    joins against the per-doc shingle-set frame, with the intersection
+    computed map-side); see the round-8 SCALING.md stage table for the
     measured attribution.
 
     ``dedupe_repeated_lines`` applies C4-style within-document line
@@ -646,9 +647,8 @@ class IncrementalCorpusBuilder:
                          .join(F.broadcast(seen_member_ids), "doc_id",
                                "left_semi")
                          .select("doc_id", "text")))
-            shingles = dd.shingle_rows(texts, "doc_id", "text")
             verified = dd.jaccard_verify(
-                pairs, shingles, "doc_id",
+                pairs, dd.shingle_sets(texts, "doc_id", "text"), "doc_id",
                 threshold=self.jaccard_threshold)
             comps = dd.connected_components(verified)
             old_comps = (comps.join(batch_ids, "doc_id", "left_anti")

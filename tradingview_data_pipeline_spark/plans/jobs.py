@@ -60,7 +60,7 @@ def run_technical_upload(spark: SparkSession, downloads_dir: str,
     if df is None:
         return 0
     tables["stock_data"].merge_upsert(df)
-    return tables["stock_data"].read().count()
+    return tables["stock_data"].row_count()
 
 
 def run_fundamental_upload(spark: SparkSession, downloads_dir: str,
@@ -71,7 +71,7 @@ def run_fundamental_upload(spark: SparkSession, downloads_dir: str,
     if df is None:
         return 0
     tables["stock_data"].merge_upsert(df)
-    return tables["stock_data"].read().count()
+    return tables["stock_data"].row_count()
 
 
 def run_backfill(spark: SparkSession, downloads_dir: str,
@@ -92,7 +92,7 @@ def run_backfill(spark: SparkSession, downloads_dir: str,
         "fundamental_files": backfill_all(
             spark, downloads_dir, "funda",
             schemas.FUNDAMENTAL_HEADER_MAP, sch, sink),
-        "stock_data_rows": tables["stock_data"].read().count(),
+        "stock_data_rows": tables["stock_data"].row_count(),
     }
 
 
@@ -128,7 +128,7 @@ def run_segment_job(spark: SparkSession, tables: dict[str, ParquetTable],
     scored = ss.segment_scores(merged)
     table = tables[f"{key}_data"]
     table.overwrite(scored)
-    return table.read().count()
+    return table.row_count()
 
 
 def parse_repetition_limits(spec: str | None) -> dict[str, float] | None:

@@ -226,11 +226,11 @@ comp AS (SELECT doc_id, MIN(reach) AS cluster_id FROM walk GROUP BY doc_id)"""
 
 
 # One Jaccard-scored LSH candidate frame per (session, sf_dir), shared
-# by q28 / q42 / q59 — the md5 shingle pass and the LSH band join run
-# ONCE per session instead of once per query.  The (big) shingle-hash
-# cache lives only while the scored frame materializes; what stays
-# cached is candidates-only (bounded by the LSH funnel, a vanishing
-# fraction of the corpus at any scale).
+# by q28 / q42 / q70 — the md5 shingle pass and the LSH band join run
+# ONCE per session instead of once per query.  What stays cached is
+# candidates-only (bounded by the LSH funnel, a vanishing fraction of
+# the corpus at any scale); the docs-sized shingle-set pin is released
+# with the query's other checkpoints.
 _DEDUP_CACHE: dict[tuple[int, str], tuple] = {}
 
 # Wall seconds spent materializing each session-shared substrate, keyed
@@ -258,37 +258,25 @@ def _scored_pairs(spark, sf_dir):
     import time as _time
     _t0 = _time.perf_counter()
     d = _t(spark, sf_dir, "documents")
-    # DISK_ONLY, not .cache(): the exploded shingle frame is
-    # corpus-sized (~100 hashes/doc -> ~500M rows at the 5M-doc
-    # decade) and a deserialized memory cache heap-OOMs there — the
-    # addendum-16 pin rule (corpus-sized pins never compete with
-    # execution memory; caught at decade 4, SCALING addendum 23)
-    from pyspark import StorageLevel
-    shingles = dd.shingle_rows(d, "doc_id", "text") \
-        .persist(StorageLevel.DISK_ONLY)
+    # one (doc_id, ss) set frame feeds the minhash aggregate and both
+    # verify joins; pins.checkpoint is DISK_ONLY (the addendum-16 pin
+    # rule: docs-sized pins never compete with execution memory)
+    sets = pins.checkpoint(dd.shingle_sets(d, "doc_id", "text"))
     pairs = dd.lsh_candidate_pairs(d, "doc_id", "text", k=_LSH_K,
                                    bands=_LSH_K // _LSH_ROWS,
-                                   shingles=shingles)
-    # localCheckpoint (NOT cache): it truncates the lineage, so freeing
-    # the shingle cache afterwards cannot cascade-invalidate it — a
-    # plain .cache() here is silently dropped by Spark's CacheManager
-    # the moment the upstream shingles frame is unpersisted, and every
-    # downstream query would rebuild the full LSH pipeline per
-    # reference (q59's triangle join references it 5x: 327-exchange
-    # plan vs 11 with the checkpoint).
-    # same size-gated width hint as q72/q73 (SCALING addendum 22): the
-    # verify joins sort the ~100x-exploded shingle frame; footer-sized,
-    # no count() action
-    n_parts = int(table_rows(sf_dir, "documents") * 100 // 1_500_000)
-    pre = dd.jaccard_verify(pairs, shingles, "doc_id",
-                            partitions=n_parts if n_parts > 32 else None)
+                                   shingles=sets)
+    pre = dd.jaccard_verify(pairs, sets, "doc_id")
+    # localCheckpoint (NOT cache): it truncates the lineage, so
+    # releasing the set and pair pins at the query boundary cannot
+    # cascade-invalidate it — a plain .cache() is dropped by Spark's
+    # CacheManager once an upstream pin goes, and every downstream
+    # query would rebuild the full LSH pipeline per reference.
     scored = pre.localCheckpoint(eager=True)
     # audit visibility only (r12, plan-audit checkpoint blind spot):
     # this checkpoint's lifecycle belongs to _DEDUP_CACHE (q28/q42/q70
     # share it across queries), so it must NOT be release-tracked —
     # record the pre-truncation plan without registering the blocks
     pins.record_plan(pre, "scored_pairs")
-    shingles.unpersist()
     _DEDUP_CACHE[key] = (spark, scored)
     SUBSTRATE_BUILD_SEC["lsh_scored_pairs"] = round(
         _time.perf_counter() - _t0, 3)

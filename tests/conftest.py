@@ -114,8 +114,6 @@ _SCALE_TESTS = {
     # test_streaming_windows.py
     "test_stream_stream_join_matches_batch",
     # test_temporal_corpus_vectors.py
-    "test_semantic_dedup_blas_matches_fold",
-    "test_semantic_dedup_int_matches_fold_groups",
     "test_semantic_dedup_multi_probe_finds_straddling_pair",
     "test_weighted_sample_k_deterministic_and_biased",
     # test_text_dedup_similarity.py

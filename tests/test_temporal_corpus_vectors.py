@@ -196,10 +196,10 @@ def test_group_centroids_quantized_exact(spark):
     df = spark.createDataFrame(
         [(1, "a", [1.0, 2.0]), (2, "a", [3.0, 6.0]), (3, "b", [10.0, 0.0])],
         "vec_id long, g string, embedding array<float>")
-    cent = {(r["g"], r["dim"]): (r["n"], r["centroid"]) for r in
+    cent = {(r["g"], r["dim"]): (r["n"], r["centroid"], r["qcent"]) for r in
             sim.group_centroids_quantized(df, "g", "embedding").collect()}
-    assert cent == {("a", 0): (2, 2.0), ("a", 1): (2, 4.0),
-                    ("b", 0): (1, 10.0), ("b", 1): (1, 0.0)}
+    assert cent == {("a", 0): (2, 2.0, 2_000_000), ("a", 1): (2, 4.0, 4_000_000),
+                    ("b", 0): (1, 10.0, 10_000_000), ("b", 1): (1, 0.0, 0)}
 
 
 def test_assign_nearest_centroid_ties_break_low_label(spark):
@@ -238,42 +238,36 @@ def test_one_lloyd_iteration_reduces_inertia(spark, tmp_path):
     assert inertia1 <= inertia0 + 1e-9
 
 
-def test_with_nearest_centroid_matches_windowed(spark):
-    import random
-    random.seed(11)
-    rows = [(i, i % 3, [random.gauss(3.0 * (i % 3), 1.0) for _ in range(6)])
-            for i in range(120)]
-    df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<float>")
-    cent = sim.group_centroids_quantized(df, "label", "embedding")
-    a_win = {r["vec_id"]: (r["assigned"], r["dist"]) for r in
-             sim.assign_nearest_centroid(df.select("vec_id", "embedding"),
-                                         "vec_id", "embedding", cent, "label").collect()}
-    a_fold = {r["vec_id"]: (r["assigned"], r["dist"]) for r in
-              sim.with_nearest_centroid(df.select("vec_id", "embedding"),
-                                        "embedding", cent, "label").collect()}
-    assert a_win == a_fold  # bit-equal dist, same assignment + tie rule
+def _q8(v):
+    """int8 quantization of the SemDeDup pair scorer (quantize_int8)."""
+    import math
+    s = max(abs(x) for x in v)
+    if s == 0.0:
+        return [0] * len(v)
+    return [max(-127, math.floor(x * 127.0 / s)) for x in v]
 
 
 def _semdedup_reference(rows, threshold, keep_policy="farthest"):
-    """Pure-Python SemDeDup: quantized centroids, argmin assign (low
-    label ties), within-cluster cosine pairs, union-find, one keeper."""
+    """Pure-Python SemDeDup with the q77 oracle's integer semantics:
+    1e-6-grid vectors, ``qcent = floor(Σ/n)``, BIGINT squared-L2 argmin
+    (low label ties), within-cluster int8 cosine pairs
+    ``dot / sqrt(na·nb)``, union-find, one keeper."""
     import math
     from collections import defaultdict
+    grid = {r[0]: [math.floor(x * 1000000.0) for x in r[2]] for r in rows}
     by_label = defaultdict(list)
-    for _id, lbl, v in rows:
-        by_label[lbl].append(v)
-    dims = len(rows[0][2])
-    cents = {}
-    for lbl, vecs in by_label.items():
-        cents[lbl] = [sum(math.floor(v[d] * 1e6) for v in vecs)
-                      / (len(vecs) * 1e6) for d in range(dims)]
+    for _id, lbl, _v in rows:
+        by_label[lbl].append(grid[_id])
+    cents = {lbl: [math.floor(sum(col) / len(qs)) for col in zip(*qs)]
+             for lbl, qs in by_label.items()}
     assigned, dist = {}, {}
-    for _id, _lbl, v in rows:
-        best = min(sorted(cents),
-                   key=lambda c: (sum((x - y) ** 2 for x, y in zip(v, cents[c])), c))
+    for _id, _lbl, _v in rows:
+        d = {c: sum((x - y) * (x - y) for x, y in zip(grid[_id], cents[c]))
+             for c in cents}
+        best = min(sorted(cents), key=lambda c: (d[c], c))
         assigned[_id] = best
-        dist[_id] = sum((x - y) ** 2 for x, y in zip(v, cents[best]))
-    vec = {r[0]: r[2] for r in rows}
+        dist[_id] = d[best]
+    vec = {r[0]: _q8(r[2]) for r in rows}
     parent = {r[0]: r[0] for r in rows}
 
     def find(x):
@@ -288,9 +282,11 @@ def _semdedup_reference(rows, threshold, keep_policy="farthest"):
             if assigned[a] != assigned[b]:
                 continue
             va, vb = vec[a], vec[b]
-            na = math.sqrt(sum(x * x for x in va))
-            nb = math.sqrt(sum(x * x for x in vb))
-            cos = sum(x * y for x, y in zip(va, vb)) / (na * nb)
+            na = sum(x * x for x in va)
+            nb = sum(x * x for x in vb)
+            if na == 0 or nb == 0:
+                continue
+            cos = sum(x * y for x, y in zip(va, vb)) / math.sqrt(na * nb)
             if cos >= threshold:
                 ra, rb = find(a), find(b)
                 if ra != rb:
@@ -365,67 +361,11 @@ def test_semantic_dedup_keep_policies(spark):
                            keep_policy="nope")
 
 
-def test_with_nearest_centroid_blas_matches_fold(spark):
-    import random
-    random.seed(31)
-    # well-separated clusters: BLAS last-ulp reassociation can't flip
-    # any assignment
-    rows = [(i, i % 4, [random.gauss(10.0 * (i % 4), 1.0) for _ in range(6)])
-            for i in range(160)]
-    df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<float>")
-    cent = sim.group_centroids_quantized(df, "label", "embedding")
-    fold = {r["vec_id"]: r["assigned"] for r in
-            sim.with_nearest_centroid(df.select("vec_id", "embedding"),
-                                      "embedding", cent, "label").collect()}
-    blas = {r["vec_id"]: (r["assigned"], r["dist"]) for r in
-            sim.with_nearest_centroid_blas(df.select("vec_id", "embedding"),
-                                           "embedding", cent, "label").collect()}
-    assert {k: v[0] for k, v in blas.items()} == fold
-    # dist agrees to float tolerance (different summation order)
-    fold_d = {r["vec_id"]: r["dist"] for r in
-              sim.with_nearest_centroid(df.select("vec_id", "embedding"),
-                                        "embedding", cent, "label").collect()}
-    for k in fold_d:
-        assert blas[k][1] == pytest.approx(fold_d[k], rel=1e-9)
-    # probes: top-p labels are distance-ordered and start with assigned
-    pr = sim.with_nearest_centroid_blas(
-        df.select("vec_id", "embedding"), "embedding", cent, "label",
-        probes_col="pp", probes=3).collect()
-    for r in pr:
-        assert r["pp"][0] == r["assigned"] and len(r["pp"]) == 3
-
-
-def test_semantic_dedup_blas_matches_fold(spark):
-    import random
-    random.seed(37)
-    rows = []
-    for i in range(80):
-        lbl = i % 4
-        rows.append((i, lbl, [random.gauss(8.0 * lbl, 1.0) for _ in range(8)]))
-    for j in range(4):
-        rows.append((200 + j, rows[j][1],
-                     [x * 1.01 for x in rows[j][2]]))
-    df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<float>")
-    cent = sim.group_centroids_quantized(df, "label", "embedding")
-    for probes in (1, 2):
-        a = sim.semantic_dedup(df, "vec_id", "embedding", cent, "label",
-                               threshold=0.9, probes=probes)
-        b = sim.semantic_dedup(df, "vec_id", "embedding", cent, "label",
-                               threshold=0.9, probes=probes,
-                               assign_method="blas")
-        ka = {(r["vec_id"], r["sd_group"], r["keep"]) for r in a.collect()}
-        kb = {(r["vec_id"], r["sd_group"], r["keep"]) for r in b.collect()}
-        assert ka == kb
-    with pytest.raises(ValueError):
-        sim.semantic_dedup(df, "vec_id", "embedding", cent, "label",
-                           assign_method="gpu")
-
-
 def test_with_nearest_centroid_int_exact(spark):
     """The integer path (1e-6-grid BIGINT squared-L2 via int64 matmul)
-    must (a) agree with the fold on separated data and (b) reproduce a
-    pure-python integer reference BIT-EXACTLY — that exactness is what
-    lets q77 register it against a DuckDB oracle at any k."""
+    must reproduce a pure-python integer reference BIT-EXACTLY — that
+    exactness is what lets q77 register it against a DuckDB oracle at
+    any k."""
     import math
     import random
     import struct
@@ -436,16 +376,10 @@ def test_with_nearest_centroid_int_exact(spark):
             for i in range(160)]
     df = spark.createDataFrame(
         rows, "vec_id long, label int, embedding array<float>")
-    ci = sim.group_centroids_int(df, "label", "embedding")
+    ci = sim.group_centroids_quantized(df, "label", "embedding")
     got = {r["vec_id"]: (r["assigned"], r["dist"]) for r in
            sim.with_nearest_centroid_int(df.select("vec_id", "embedding"),
                                          "embedding", ci, "label").collect()}
-    fold = {r["vec_id"]: r["assigned"] for r in
-            sim.with_nearest_centroid(
-                df.select("vec_id", "embedding"), "embedding",
-                sim.group_centroids_quantized(df, "label", "embedding"),
-                "label").collect()}
-    assert {k: v[0] for k, v in got.items()} == fold
     # pure-python integer reference (same IEEE ops, same floor/grid)
     by_lbl = {}
     for _, lbl, v in rows:
@@ -470,8 +404,8 @@ def test_with_nearest_centroid_int_exact(spark):
 
 def test_embedding_near_dups_int_matches_reference(spark):
     """int8-quantized Gram pairs: bit-exact vs a pure-python quantize +
-    integer-dot reference; zero vectors never pair; the i<j order and
-    bucket scoping match the join form's contract."""
+    integer-dot reference; zero vectors never pair; pairs are i<j and
+    never cross buckets."""
     import math
     import struct
     f32 = lambda x: struct.unpack("f", struct.pack("f", x))[0]
@@ -488,18 +422,12 @@ def test_embedding_near_dups_int_matches_reference(spark):
            sim.embedding_near_dups_int(df, "vec_id", "embedding", "bk",
                                        threshold=0.5).collect()}
 
-    def q8(v):
-        s = max(abs(x) for x in v)
-        if s == 0.0:
-            return [0] * len(v)
-        return [max(-127, math.floor(x * 127.0 / s)) for x in v]
-
     exp = {}
     for i, (ia, ba, va) in enumerate(rows):
         for ib, bb, vb in rows[i + 1:]:
             if ba != bb:
                 continue
-            qa, qb = q8(va), q8(vb)
+            qa, qb = _q8(va), _q8(vb)
             na = sum(x * x for x in qa)
             nb = sum(x * x for x in qb)
             if na == 0 or nb == 0:
@@ -512,48 +440,18 @@ def test_embedding_near_dups_int_matches_reference(spark):
     assert all(4 not in p for p in got)   # zero vector never pairs
 
 
-def test_semantic_dedup_int_matches_fold_groups(spark):
-    """assign_method='int' + pair_method='int' reproduce the fold
-    pipeline's groups/keepers on separated data (int8 quantization
-    perturbs cosines ~1%, far from the 0.9-vs-0.999 margin here)."""
-    import random
-    random.seed(43)
-    rows = []
-    for i in range(80):
-        lbl = i % 4
-        rows.append((i, lbl,
-                     [random.gauss(8.0 * lbl + 1.0, 1.0) for _ in range(8)]))
-    for j in range(4):
-        rows.append((200 + j, rows[j][1], [x * 1.01 for x in rows[j][2]]))
-    df = spark.createDataFrame(
-        rows, "vec_id long, label int, embedding array<float>")
-    cf = sim.group_centroids_quantized(df, "label", "embedding")
-    ci = sim.group_centroids_int(df, "label", "embedding")
-    for probes in (1, 2):
-        a = sim.semantic_dedup(df, "vec_id", "embedding", cf, "label",
-                               threshold=0.9, probes=probes)
-        b = sim.semantic_dedup(df, "vec_id", "embedding", ci, "label",
-                               threshold=0.9, probes=probes,
-                               assign_method="int", pair_method="int")
-        ka = {(r["vec_id"], r["sd_group"], r["keep"]) for r in a.collect()}
-        kb = {(r["vec_id"], r["sd_group"], r["keep"]) for r in b.collect()}
-        assert ka == kb
-    with pytest.raises(ValueError):
-        sim.semantic_dedup(df, "vec_id", "embedding", ci, "label",
-                           pair_method="nope")
-
-
 def test_semantic_dedup_multi_probe_finds_straddling_pair(spark):
-    # two centroids at (1,0) and (0.94, 0.34); the dup pair sits near the
-    # boundary so its members assign to DIFFERENT top-1 centroids
+    # two centroids at (1,0) and (0.94, 0.342) on the 1e-6 grid; the dup
+    # pair sits near the boundary so its members assign to DIFFERENT
+    # top-1 centroids
     import math
     a = [math.cos(0.16), math.sin(0.16)]   # nearer c0
     b = [math.cos(0.19), math.sin(0.19)]   # nearer c1 (boundary ~0.175)
     rows = [(1, a), (2, b), (3, [1.0, 0.0]), (4, [0.94, 0.342])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cents = spark.createDataFrame(
-        [(0, 0, 1.0), (0, 1, 0.0), (1, 0, 0.94), (1, 1, 0.342)],
-        "label int, dim long, centroid double")
+        [(0, 0, 1_000_000), (0, 1, 0), (1, 0, 940_000), (1, 1, 342_000)],
+        "label int, dim long, qcent long")
     one = sim.semantic_dedup(df, "vec_id", "embedding", cents, "label",
                              threshold=0.999).collect()
     assigned = {r["vec_id"]: r["assigned"] for r in one}

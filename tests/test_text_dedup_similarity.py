@@ -522,11 +522,12 @@ def test_incremental_neardup_banded_store_crash_replay(spark, tmp_path,
     assert {tuple(r) for r in idx.table.read().collect()} == want_sigs
 
 
-def test_simhash_arrow_impl_identical_to_sql(spark):
+def test_simhash_table_identical_to_column_form(spark):
     """The numpy mapInPandas signature path must be integer-identical to
-    the SQL fold — including groups that STRADDLE Arrow batches (forced
-    with a tiny maxRecordsPerBatch so the carry buffer is exercised) and
-    zero-token docs (NULL signature both ways)."""
+    the column form ``dd.simhash`` — including groups that STRADDLE
+    Arrow batches (forced with a tiny maxRecordsPerBatch so the carry
+    buffer is exercised) and zero-token docs (NULL signature both
+    ways)."""
     import random
     rng = random.Random(7)
     vocab = [f"tok{i}" for i in range(300)]
@@ -540,15 +541,15 @@ def test_simhash_arrow_impl_identical_to_sql(spark):
     try:
         spark.conf.set(key, "7")               # force batch straddling
         got_a = {r["doc_id"]: r["simhash"] for r in dd.simhash_table(
-            df, "doc_id", "text", bits=60, impl="arrow").collect()}
+            df, "doc_id", "text", bits=60).collect()}
     finally:
         if old is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
-    got_s = {r["doc_id"]: r["simhash"] for r in dd.simhash_table(
-        df, "doc_id", "text", bits=60, impl="sql").collect()}
-    assert got_a == got_s
+    got_c = {r["doc_id"]: r["s"] for r in df.select(
+        "doc_id", dd.simhash(F.col("text"), 60).alias("s")).collect()}
+    assert got_a == got_c
     assert got_a[900] is None and got_a[901] is None
 
 
@@ -775,7 +776,8 @@ def test_embedding_near_dups_threshold(spark):
         [(1, [1.0, 0.0], 0), (2, [1.0, 0.01], 0), (3, [0.0, 1.0], 0),
          (4, [1.0, 0.0], 1)],                 # other bucket: never compared
         "vec_id long, embedding array<float>, label int")
-    out = sim.embedding_near_dups(df, "vec_id", "embedding", "label", threshold=0.99)
+    out = sim.embedding_near_dups_int(df, "vec_id", "embedding", "label",
+                                      threshold=0.99)
     pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
     assert pairs == {(1, 2)}
 
@@ -787,11 +789,12 @@ def test_embedding_near_dups_bucket_cap(spark):
         [(101, [0.0, 1.0], 7), (102, [0.0, 1.0], 7)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
     capped = {(r["id_a"], r["id_b"]) for r in
-              sim.embedding_near_dups(df, "vec_id", "embedding", "label",
-                                      threshold=0.99, max_bucket=10).collect()}
+              sim.embedding_near_dups_int(df, "vec_id", "embedding", "label",
+                                          threshold=0.99,
+                                          max_bucket=10).collect()}
     assert capped == {(101, 102)}
-    uncapped = sim.embedding_near_dups(df, "vec_id", "embedding", "label",
-                                       threshold=0.99, max_bucket=None)
+    uncapped = sim.embedding_near_dups_int(df, "vec_id", "embedding", "label",
+                                           threshold=0.99, max_bucket=None)
     assert uncapped.where("bk = 0").count() == 66
 
 
@@ -928,18 +931,29 @@ def _unit_vectors(n, dim=8, seed=7, planted=()):
     return m
 
 
-def test_embedding_lsh_sql_and_vector_methods_identical(spark):
+def test_embedding_lsh_bands_match_python_reference(spark):
+    """Band keys equal an independent integer reference built from
+    ``hyperplane_signs``: floor(v·2^20) on the float32 values, one sign
+    bit per hyperplane (bit-sum >= 0), bit-packed per band."""
+    import numpy as np
     m = _unit_vectors(40, dim=8)
     df = spark.createDataFrame(
         [(i, [float(x) for x in row]) for i, row in enumerate(m)],
         "vec_id bigint, embedding array<float>")
-    a = sim.embedding_lsh_bands(df, "vec_id", "embedding", bits=24, bands=4,
-                                dim=8, method="vector")
-    b = sim.embedding_lsh_bands(df, "vec_id", "embedding", bits=24, bands=4,
-                                dim=8, method="sql")
-    rows_a = sorted(map(tuple, a.collect()))
-    rows_b = sorted(map(tuple, b.collect()))
-    assert rows_a == rows_b and len(rows_a) == 40 * 4
+    got = sorted(map(tuple, sim.embedding_lsh_bands(
+        df, "vec_id", "embedding", bits=24, bands=4, dim=8).collect()))
+    signs = sim.hyperplane_signs(24, 8)
+    chunk = 24 // 4
+    exp = []
+    for i, row in enumerate(m):
+        vq = [math.floor(float(np.float32(x)) * 2 ** 20) for x in row]
+        bits = [1 if sum(s * x for s, x in zip(hp, vq)) >= 0 else 0
+                for hp in signs]
+        for pos in range(4):
+            key = sum(b << k for k, b in
+                      enumerate(bits[pos * chunk:(pos + 1) * chunk]))
+            exp.append((i, pos, key))
+    assert got == sorted(exp) and len(got) == 40 * 4
 
 
 def test_embedding_near_dups_lsh_finds_planted_pairs(spark):
@@ -980,12 +994,12 @@ def test_embedding_near_dups_lsh_bucket_cap_drops_degenerate(spark):
 
 def test_embedding_near_dups_exact_bucketed(spark):
     # the exact intra-bucket form (valid when buckets come from a
-    # properly sized quantizer); q32 moved to the LSH path in round 6
+    # properly sized quantizer, as SemDeDup's clusters are)
     rows = [(0, [1.0, 0.0], 0), (1, [0.999, 0.04], 0),   # same bucket, near
             (2, [0.0, 1.0], 1), (3, [1.0, 0.0], 1)]      # cross-bucket pair unseen
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>, label int")
-    out = sim.embedding_near_dups(df, "vec_id", "embedding", "label",
-                                  threshold=0.95).collect()
+    out = sim.embedding_near_dups_int(df, "vec_id", "embedding", "label",
+                                      threshold=0.95).collect()
     assert [(r.id_a, r.id_b) for r in out] == [(0, 1)]
 
 

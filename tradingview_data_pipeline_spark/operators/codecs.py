@@ -151,16 +151,3 @@ def frame_rms(samples: np.ndarray, n_frames: int = 8) -> list[float]:
         seg = x[bounds[i]:max(bounds[i + 1], bounds[i] + 1)]
         out.append(float(np.sqrt(np.mean(seg * seg))))
     return out
-
-
-def wav_audio_decoder(payload: bytes) -> dict:
-    """``register_decoder``-contract decoder for WAV payloads (feature =
-    8 RMS frames; width/height carry n_samples/sample_rate so the one
-    contract covers both modalities)."""
-    samples, rate = decode_wav(payload)
-    return {
-        "width": int(len(samples)),
-        "height": int(rate),
-        "feature": frame_rms(samples),
-        "sha1": hashlib.sha1(payload).hexdigest(),
-    }

@@ -499,15 +499,15 @@ def jaccard_verify(pairs: DataFrame, sets: DataFrame, id_col: str,
 # at least half the tokens have bit j set in their md5. Integer counts
 # only -> exact.
 #
-# Two implementations with identical results:
-# - ``simhash`` (column expr): map-only, O(b × tokens) interpreted lambda
-#   evals per row — no shuffle, composable, slower locally.
-# - ``simhash_table`` (df-level): explode distinct tokens -> one md5 per
-#   token -> b conditional sums in one codegen'd aggregate. ~4× faster;
-#   costs a (doc_id, 16-byte) shuffle. Preferred when simhash is the
-#   terminal op.
+# ``simhash_table`` (df-level) is the operator: explode distinct tokens
+# -> one md5 per token -> a numpy majority vote per doc over Arrow
+# batches (q29, the SimHash index and ``simhash_candidate_pairs`` all
+# run it). ``simhash`` (column expr; O(b × tokens) interpreted lambda
+# evals per row) has no package caller — it is the independent
+# reference the tests compare ``simhash_table`` against, and the q29
+# oracle recomputes the same bits as conditional sums in SQL.
 #
-# Bit mapping (identical in both forms, any bits <= 60): bit j of the
+# Bit mapping (identical in every form, any bits <= 60): bit j of the
 # signature = bit (3 - j%4) of hex nibble j//4 of the md5 — i.e. bit
 # (59-j) of the md5's leading 60-bit word. 60 is the ceiling because the
 # signature must stay a positive BIGINT on both engines (2^59 is the
@@ -519,38 +519,22 @@ SIMHASH_MAX_BITS = 60
 
 def simhash_table(df: DataFrame, id_col: str, text_col: str,
                   bits: int = 16, out_col: str = "simhash",
-                  impl: str = "sql",
                   partitions: int | None = None) -> DataFrame:
-    """``impl="sql"``: the codegen'd conditional-sum aggregate (the
-    oracle-matched reference form). ``impl="arrow"``: identical bit
-    mapping computed by numpy over Arrow batches (``mapInPandas``) —
-    the per-row 60 shift/mask extractions that dominate the SQL form
-    become one vectorized ``(n, bits)`` bit-unpack + ``reduceat`` per
-    batch. Results are integer-for-integer identical by construction
-    (pinned by pytest); pick by measurement."""
+    """(id, signature) for every row of ``df``; a doc with no tokens
+    gets a NULL signature. The majority vote runs in numpy over Arrow
+    batches (``_simhash_agg_arrow``): one vectorized ``(n, bits)``
+    bit-unpack + ``reduceat`` per batch, where a SQL conditional-sum
+    aggregate spends its time on 60 per-row shift/mask extractions
+    (measured 2.4x slower at sf0.1, NOTES r5/r6). ``partitions``: width
+    hint for the token-hash shuffle (see ``_simhash_agg_arrow``)."""
     assert bits <= SIMHASH_MAX_BITS
     toks = F.array_distinct(tokens(F.col(text_col)))
     ex = (df.select(F.col(id_col), F.explode(toks).alias("__t"))
           .select(id_col,
                   F.conv(F.substring(F.md5("__t"), 1, 15), 16, 10)
                   .cast("bigint").alias("__h60")))
-    if impl == "arrow":
-        g = _simhash_agg_arrow(ex, id_col, df.schema[id_col].dataType,
-                               bits, out_col, partitions=partitions)
-    else:
-        assert impl == "sql", impl
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for j in range(bits):
-            shift = 59 - j
-            aggs.append(F.sum(F.shiftright(F.col("__h60"), shift)
-                              .bitwiseAND(F.lit(1))).alias(f"__b{j}"))
-        g = ex.groupBy(id_col).agg(*aggs)
-        sig = None
-        for j in range(bits):
-            term = F.when(F.col(f"__b{j}") * 2 >= F.col("__n"),
-                          F.lit(2 ** j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
-            sig = term if sig is None else sig + term
-        g = g.select(id_col, sig.alias(out_col))
+    g = _simhash_agg_arrow(ex, id_col, df.schema[id_col].dataType,
+                           bits, out_col, partitions=partitions)
     # docs with zero tokens vanish in the explode; rejoin with NULL signature
     return df.select(id_col).join(g, id_col, "left")
 

@@ -220,17 +220,6 @@ def peer_percentile(df: DataFrame, metric: str, partition_by: Sequence[str],
     )
 
 
-def peer_percentile_col(value: Column, rank_w: WindowSpec, group_w: WindowSpec,
-                        *, min_peers: int = 2) -> Column:
-    """Column-form of peer_percentile for composing several metrics over
-    pre-built windows (shares the shuffle across metrics)."""
-    n = F.count(value).over(group_w)
-    pct = (F.rank().over(rank_w) - F.lit(1)) * 100.0 / n
-    return (F.when(value.isNull(), F.lit(None).cast("double"))
-             .when(n < min_peers, F.lit(50.0))
-             .otherwise(pct))
-
-
 # ---------------------------------------------------------------------------
 # W4 at the "all" granularity — exact global (or tiny-key-grouped) peer
 # percentile WITHOUT a single-task window. An empty-partition Window

@@ -1,15 +1,19 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — a broadcast of the (small) query set
-against the corpus, per-row fold for the dot product, TakeOrdered per
-query. Scale path: coarse quantization (IVF-style) — restrict the search
-to the query's bucket/cluster partition, turning the cross join into a
-co-partitioned join on bucket id; and/or sign-bit LSH bucketing.
+Top-k search: brute-force cosine (a broadcast of the small query set
+against the corpus; per-pair fold, or one BLAS matmul per Arrow batch),
+multi-probe IVF (``ivf_topk``: search only the query's nearest centroid
+cells via an equi-join on cell id) and int8-quantized dot products.
+Near-dup retrieval: SemDeDup (exact integer centroid assignment and
+within-cluster int8 Gram pairs) and sign-bit hyperplane LSH with exact
+verification. Dimensionality reduction: exact-moment PCA and random
+projection.
 
-Numeric determinism: dot products are left-to-right folds over
+Numeric determinism: float dot products are left-to-right folds over
 double-cast elements (Spark ``aggregate`` ≡ DuckDB ``list_reduce`` —
-verified to produce bit-identical doubles), so rankings are reproducible
-across engines.
+verified to produce bit-identical doubles); the centroid, SemDeDup and
+LSH kernels score in integer arithmetic. Either way rankings and scores
+are reproducible across engines.
 """
 
 from __future__ import annotations
@@ -168,31 +172,6 @@ def brute_force_topk_blas(corpus: DataFrame, queries: DataFrame, id_col: str,
             .select("query_id", "neighbor_id", "cos", "rk"))
 
 
-def bucketed_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
-                  vec_col: str, bucket_col: str, k: int = 3) -> DataFrame:
-    """IVF-style approximate top-k: search only within the query's bucket
-    (cluster/partition id). The join is an equi-join on bucket id —
-    co-partitioned, no cross join; each bucket's candidates stay local.
-    """
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-                       F.col(bucket_col).alias("bk"),
-                       F.sqrt(l2_norm_sq(f"`{vec_col}`")).alias("qn"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-                      F.col(bucket_col).alias("bk"),
-                      F.sqrt(l2_norm_sq(f"`{vec_col}`")).alias("cn"))
-    scored = (
-        c.join(F.broadcast(q), "bk")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos", dot("qv", "cv") / (F.col("qn") * F.col("cn")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "bk", "neighbor_id", "cos", "rk")
-    )
-
-
 def ivf_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
              vec_col: str, bucket_col: str, centroids_long: DataFrame,
              *, nprobe: int = 2, k: int = 3) -> DataFrame:
@@ -246,39 +225,6 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
     )
 
 
-def embedding_near_dups(corpus: DataFrame, id_col: str, vec_col: str,
-                        bucket_col: str, *, threshold: float = 0.95,
-                        max_bucket: int | None = 10_000) -> DataFrame:
-    """Near-duplicate pairs by cosine >= threshold, bucketed to avoid the
-    full O(n²): only pairs within the same bucket are compared.
-
-    ``max_bucket`` is the same degenerate-bucket guard as the LSH path
-    (``dedup.lsh_candidate_pairs``): intra-bucket comparison is c²/2
-    dot products, so one mega-cluster (zero vectors, boilerplate
-    embeddings) turns the plan quadratic at a single join key. Buckets
-    over the cap are dropped entirely before the join — re-cluster with
-    a finer quantizer (more centroids) rather than raising the cap.
-    Mirrored in q32's DuckDB oracle; ``None`` disables."""
-    a = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-                      F.col(bucket_col).alias("bk"),
-                      F.sqrt(l2_norm_sq(f"`{vec_col}`")).alias("na"))
-    b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-                      F.col(bucket_col).alias("bk"),
-                      F.sqrt(l2_norm_sq(f"`{vec_col}`")).alias("nb"))
-    if max_bucket is not None:
-        over = (a.groupBy("bk").agg(F.count(F.lit(1)).alias("__n"))
-                .where(F.col("__n") > max_bucket).select("bk"))
-        a = a.join(F.broadcast(over), "bk", "left_anti")
-        b = b.join(F.broadcast(over), "bk", "left_anti")
-    return (
-        a.join(b, "bk")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", dot("va", "vb") / (F.col("na") * F.col("nb")))
-        .where(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "bk", "cos")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Vector clustering primitives: exact (quantized) group centroids and
 # nearest-centroid assignment — together, one deterministic Lloyd
@@ -292,21 +238,35 @@ def embedding_near_dups(corpus: DataFrame, id_col: str, vec_col: str,
 # any clustering decision boundary.)
 # ---------------------------------------------------------------------------
 
+CENTROID_GRID = 1_000_000.0  # 1e-6 element grid of the exact centroid math
+
+
 def group_centroids_quantized(df: DataFrame, group_col: str,
                               vec_col: str) -> DataFrame:
     """Per-group element-wise mean on a 1e-6 grid: (group, dim, n,
-    centroid).  Long-form posexplode -> BIGINT sum; shuffle rows =
-    groups x dims, payload 8 bytes."""
+    centroid, qcent).  Long-form posexplode -> BIGINT sum ``sq``;
+    shuffle rows = groups x dims, payload 8 bytes.
+
+    Two views of the one sum: ``centroid = sq / (n·1e6)`` (double, for
+    the float folds of ``assign_nearest_centroid`` / ``ivf_topk``) and
+    ``qcent = floor(sq / n)`` (BIGINT on the grid, for
+    ``with_nearest_centroid_int``).  The one division is a single IEEE
+    double op on exactly-representable integers (|sq| < 2^53 up to
+    ~9e9 unit-norm rows), so ``qcent`` is bit-identical in Spark and
+    DuckDB."""
     ex = df.select(
         F.col(group_col),
         F.posexplode(F.col(vec_col)).alias("dim", "val"))
     q = ex.withColumn(
-        "qv", F.floor(F.col("val").cast("double") * F.lit(1000000.0)).cast("long"))
+        "qv", F.floor(F.col("val").cast("double")
+                      * F.lit(CENTROID_GRID)).cast("long"))
     return (
         q.groupBy(group_col, F.col("dim").cast("bigint").alias("dim"))
         .agg(F.count(F.lit(1)).alias("n"), F.sum("qv").alias("sq"))
         .withColumn("centroid",
-                    F.col("sq").cast("double") / (F.col("n") * F.lit(1000000.0)))
+                    F.col("sq").cast("double") / (F.col("n") * F.lit(CENTROID_GRID)))
+        .withColumn("qcent", F.floor(F.col("sq").cast("double")
+                                     / F.col("n").cast("double")).cast("long"))
         .drop("sq")
     )
 
@@ -353,169 +313,26 @@ def assign_nearest_centroid(df: DataFrame, id_col: str, vec_col: str,
     )
 
 
-def with_nearest_centroid(df: DataFrame, vec_col: str,
-                          centroids_long: DataFrame, group_col: str, *,
-                          out_assigned: str = "assigned",
-                          out_dist: str = "dist",
-                          keep_ranked: str | None = None) -> DataFrame:
-    """Append (``assigned``, ``dist``) nearest-centroid columns with NO
-    shuffle and no per-vector window.
-
-    Same distance semantics and tie-break (smaller centroid id) as
-    ``assign_nearest_centroid``, different plan shape: the k centroids
-    collapse into ONE broadcast row of (label, cvec) structs, and each
-    vector scans them map-side — ``transform`` to (dist, label) structs,
-    ``array_sort`` (lexicographic: dist then label, i.e. exactly the
-    window's ORDER BY dist ASC, label ASC), take element 0.  Unlike
-    ``assign_nearest_centroid`` every input column is preserved in
-    place, so downstream per-cluster work (``semantic_dedup``'s pairwise
-    pass) starts with the vectors un-moved.  Per-centroid distance is
-    the identical left-to-right fold, so assignments and distances are
-    bit-equal to the windowed form (pinned in tests).
-
-    ``keep_ranked``: when set, also retain the FULL distance-sorted
-    (dist, lbl) struct array under that name — multi-probe consumers
-    (``semantic_dedup(probes=...)``) read the top-p labels from it."""
-    carr = _centroid_arrays(centroids_long, group_col)
-    cents = carr.agg(F.collect_list(F.struct("c_label", "cvec")).alias("__cents"))
-
-    def _dist_to(c):
-        sq = F.zip_with(F.col(vec_col), c["cvec"],
-                        lambda x, cc: (x.cast("double") - cc) * (x.cast("double") - cc))
-        return F.aggregate(sq, F.lit(0.0), lambda acc, v: acc + v)
-
-    scored = F.array_sort(F.transform(
-        F.col("__cents"),
-        lambda c: F.struct(_dist_to(c).alias("dist"), c["c_label"].alias("lbl"))))
-    out = (
-        df.crossJoin(F.broadcast(cents))
-        .withColumn("__ranked", scored)
-        .withColumn(out_assigned, F.col("__ranked")[0]["lbl"])
-        .withColumn(out_dist, F.col("__ranked")[0]["dist"])
-        .drop("__cents")
-    )
-    if keep_ranked is not None:
-        return out.withColumnRenamed("__ranked", keep_ranked)
-    return out.drop("__ranked")
-
-
-def with_nearest_centroid_blas(df: DataFrame, vec_col: str,
-                               centroids_long: DataFrame, group_col: str, *,
-                               out_assigned: str = "assigned",
-                               out_dist: str = "dist",
-                               probes_col: str | None = None,
-                               probes: int = 1) -> DataFrame:
-    """BLAS nearest-centroid assignment — the large-k scale path.
-
-    ``with_nearest_centroid``'s expression fold is O(k·d) INTERPRETED
-    work per row: measured on the SemDeDup decade bench, the k=800
-    assignment dominates the whole pipeline (tools/semdedup_bench.py,
-    SCALING.md).  Here the centroid matrix (k×d doubles — driver-side,
-    bounded by the model not the corpus) ships in the Arrow-batch
-    closure and each batch computes ‖x‖² − 2XCᵀ + ‖c‖² with one numpy
-    matmul, then argmin — the ``brute_force_topk_blas`` pattern.
-
-    Semantics match the fold on everything except last-ulp distance
-    rounding (BLAS reassociates the dot-product sum), so assignments
-    can differ only for vectors within float-epsilon of a Voronoi
-    boundary — pytest-pinned equal on separated data; use the fold
-    variant where cross-engine bit-stability matters (q53/q77 oracles).
-    Ties break to the smaller label (label-sorted centroid matrix,
-    argmin-first).  ``probes_col``: also emit the top-``probes`` labels
-    (distance-ordered) for multi-probe consumers.
-    """
-    import numpy as np
-
-    carr = _centroid_arrays(centroids_long, group_col).orderBy("c_label")
-    rows = carr.collect()
-    if not rows:
-        raise ValueError("centroids_long is empty")
-    labels = [r["c_label"] for r in rows]
-    cmat = np.asarray([r["cvec"] for r in rows], dtype=np.float64)
-    cnorm = (cmat * cmat).sum(axis=1)
-    p = min(probes, len(labels))
-    label_arr = np.asarray(labels)
-
-    label_field = [f for f in centroids_long.schema
-                   if f.name == group_col][0]
-    fields = list(df.schema.fields) + [
-        T.StructField(out_assigned, label_field.dataType),
-        T.StructField(out_dist, T.DoubleType()),
-    ]
-    if probes_col is not None:
-        fields.append(T.StructField(probes_col,
-                                    T.ArrayType(label_field.dataType)))
-    out_schema = T.StructType(fields)
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.asarray([np.asarray(v, dtype=np.float64)
-                            for v in pdf[vec_col]])
-            d2 = ((x * x).sum(axis=1)[:, None]
-                  - 2.0 * (x @ cmat.T) + cnorm[None, :])
-            idx = d2.argmin(axis=1)
-            pdf = pdf.copy()
-            pdf[out_assigned] = label_arr[idx]
-            pdf[out_dist] = d2[np.arange(len(pdf)), idx]
-            if probes_col is not None:
-                top = np.argsort(d2, axis=1, kind="stable")[:, :p]
-                pdf[probes_col] = [label_arr[t].tolist() for t in top]
-            yield pdf
-
-    return df.mapInPandas(assign, out_schema)
-
-
-def group_centroids_int(df: DataFrame, group_col: str, vec_col: str,
-                        *, scale: int = 1_000_000) -> DataFrame:
-    """Per-group INTEGER centroids on the 1e-6 grid: (group, dim, n,
-    qcent BIGINT) with ``qcent = floor(sum(floor(v*scale)) / n)``.
-
-    The component sum is an associative BIGINT aggregate (layout- and
-    engine-independent); the one division is a single IEEE double op on
-    exactly-representable integers (|sum| < 2^53 up to ~9e9 unit-norm
-    rows), so ``qcent`` is bit-identical in Spark and DuckDB. Feeds
-    ``with_nearest_centroid_int`` — the exact large-k assignment path
-    (``with_nearest_centroid_blas`` is fast but reassociates float
-    sums, so it cannot back an oracle-checked query)."""
-    ex = df.select(
-        F.col(group_col),
-        F.posexplode(F.col(vec_col)).alias("dim", "val"))
-    q = ex.withColumn(
-        "qv", F.floor(F.col("val").cast("double")
-                      * F.lit(float(scale))).cast("long"))
-    return (
-        q.groupBy(group_col, F.col("dim").cast("bigint").alias("dim"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("qv").alias("sq"))
-        .withColumn("qcent", F.floor(F.col("sq").cast("double")
-                                     / F.col("n").cast("double")).cast("long"))
-        .drop("sq")
-    )
-
-
 def with_nearest_centroid_int(df: DataFrame, vec_col: str,
                               centroids_long: DataFrame, group_col: str, *,
                               out_assigned: str = "assigned",
                               out_dist: str = "dist",
                               probes_col: str | None = None,
-                              probes: int = 1,
-                              scale: int = 1_000_000) -> DataFrame:
+                              probes: int = 1) -> DataFrame:
     """EXACT nearest-centroid assignment at any k — integer squared-L2
     on the 1e-6 grid via one int64 matmul per Arrow batch.
 
-    The fold path (``with_nearest_centroid``) is bit-stable but O(k·d)
-    INTERPRETED work per row — measured prohibitive past k≈100s of
-    centroids (tools/semdedup_bench.py: the k=800 decade-3 fold run was
-    killed at 35 min); the BLAS path is fast but reassociates float
-    sums, so assignments near Voronoi boundaries are not cross-engine
-    reproducible. This path is both: vectors and centroids quantize to
-    BIGINT (``floor(v*scale)``; centroids from
-    ``group_centroids_int``), and ``dist = Σ (qv−qc)²`` is pure integer
-    arithmetic — associative, so the numpy ``‖x‖² − 2xCᵀ + ‖c‖²``
-    decomposition is EXACT (terms bounded by 64·(2e6)² ≈ 2.6e14 « 2^63)
-    and a DuckDB ``list_reduce`` fold over the same integers produces
-    the identical BIGINT. Ties break to the smaller label (label-sorted
+    Vectors and centroids quantize to BIGINT (``floor(v·1e6)``; the
+    ``qcent`` column of ``group_centroids_quantized``), and
+    ``dist = Σ (qv−qc)²`` is pure integer arithmetic — associative, so
+    the numpy ``‖x‖² − 2xCᵀ + ‖c‖²`` decomposition is EXACT (terms
+    bounded by 64·(2e6)² ≈ 2.6e14 « 2^63) and a DuckDB per-dim SUM over
+    the same integers produces the identical BIGINT (the q77 oracle).
+    The vectorized kernel is what makes large k affordable: an
+    interpreted per-row fold over k centroids is O(k·d) expression work
+    and was killed at 35 min at k=800, where this path takes ~3 s
+    (200k vectors on a 32-core host; SEMDEDUP_BENCH_r9.jsonl; SCALING.md round-8 addendum 10, round-9
+    addendum 24). Ties break to the smaller label (label-sorted
     centroid matrix, argmin-first). ``out_dist`` is BIGINT in grid²
     units. ``probes_col``: also emit the distance-ordered top-``probes``
     labels (stable argsort ⇒ label-ascending on exact ties)."""
@@ -531,7 +348,6 @@ def with_nearest_centroid_int(df: DataFrame, vec_col: str,
     cnorm = (cmat * cmat).sum(axis=1)
     p = min(probes, len(labels))
     label_arr = np.asarray(labels)
-    fscale = float(scale)
 
     label_field = [f for f in centroids_long.schema
                    if f.name == group_col][0]
@@ -550,7 +366,7 @@ def with_nearest_centroid_int(df: DataFrame, vec_col: str,
                 continue
             x = np.asarray([np.asarray(v, dtype=np.float64)
                             for v in pdf[vec_col]])
-            q = np.floor(x * fscale).astype(np.int64)
+            q = np.floor(x * CENTROID_GRID).astype(np.int64)
             d2 = ((q * q).sum(axis=1)[:, None]
                   - 2 * (q @ cmat.T) + cnorm[None, :])
             idx = d2.argmin(axis=1)
@@ -569,23 +385,26 @@ def embedding_near_dups_int(corpus: DataFrame, id_col: str, vec_col: str,
                             bucket_col: str, *, threshold: float = 0.95,
                             max_bucket: int | None = 10_000,
                             block: int = 2048) -> DataFrame:
-    """Within-bucket near-dup pairs by EXACT int8-quantized cosine —
-    the vectorized scale path for ``embedding_near_dups``.
+    """Within-bucket near-dup pairs by EXACT int8-quantized cosine:
+    (id_a < id_b, bk, cos) for every same-bucket pair with
+    cos >= ``threshold``.
 
-    The join+fold form materializes one row per candidate pair (two
-    64-float arrays each) and folds the dot product interpreted —
-    measured ~50k pairs/s wall at 32 cores (the q77 decade-2 ×48
-    blowup). Here each bucket is one ``applyInPandas`` group: vectors
-    int8-quantize (identical IEEE ops to ``quantize_int8``), the pair
-    scores come from one integer Gram matmul per row-block (exact —
-    integer arithmetic is associative), and only the surviving pairs
-    materialize. ``cos = dot / sqrt(na*nb)`` with the norm PRODUCT
-    under one sqrt (``na·nb ≤ (127²·64)² < 2^53`` — exact; a
+    Each bucket is one ``applyInPandas`` group: vectors int8-quantize
+    (identical IEEE ops to ``quantize_int8``), the pair scores come
+    from one integer Gram matmul per row-block (exact — integer
+    arithmetic is associative), and only the surviving pairs
+    materialize; a pair join with a per-pair fold instead ships two
+    vectors per candidate pair (measured ~50k pairs/s at 32 cores, the
+    q77 decade-2 ×48 blowup). ``cos = dot / sqrt(na*nb)`` with the norm
+    PRODUCT under one sqrt (``na·nb ≤ (127²·64)² < 2^53`` — exact; a
     ``sqrt(na)*sqrt(nb)`` form would round differently), so scores are
     bit-identical to a DuckDB ``list_reduce`` mirror. Zero vectors
-    never pair. ``max_bucket`` is the same degenerate-bucket guard as
-    the join form; ``block`` caps the Gram slab at block×max_bucket
-    int64s (~160 MB at defaults)."""
+    never pair. ``max_bucket`` is the degenerate-bucket guard of the
+    LSH path (``dedup.lsh_candidate_pairs``): intra-bucket comparison
+    is c²/2 dot products, so buckets over the cap are dropped before
+    pairing (mirrored in q77's oracle; ``None`` disables). ``block``
+    caps the Gram slab at block×max_bucket int64s (~160 MB at
+    defaults)."""
     import numpy as np
     import pandas as pd
 
@@ -647,27 +466,21 @@ def semantic_dedup(corpus: DataFrame, id_col: str, vec_col: str,
                    centroids_long: DataFrame, group_col: str, *,
                    threshold: float = 0.95, max_bucket: int | None = 10_000,
                    keep_policy: str = "farthest", probes: int = 1,
-                   assign_method: str = "fold",
-                   pair_method: str = "fold",
                    verify_vectors: DataFrame | None = None,
                    candidate_threshold: float | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster-then-prune
     semantic deduplication over an embedding column.
 
     Pipeline: (1) assign every vector to its nearest centroid —
-    map-side, zero shuffle (``assign_method``: 'fold' =
-    ``with_nearest_centroid`` interpreted expression, bit-stable but
-    small-k only; 'int' = ``with_nearest_centroid_int`` exact integer
-    matmul, bit-stable at ANY k — the registered-q77 scale path;
-    'blas' = float matmul, fastest but not cross-engine stable);
-    (2) within each cluster only, cosine pairs >= ``threshold``
-    (``pair_method``: 'fold' = ``embedding_near_dups`` pair join,
-    'int' = ``embedding_near_dups_int`` exact int8 Gram matmul —
-    both honor the ``max_bucket`` degenerate-cluster guard; note the
-    two score different cosines: float vs int8-quantized);
-    (3) connected components over the duplicate pairs (tiny — the
-    pair set, not the corpus); (4) keep exactly one member per
-    duplicate group.
+    map-side, zero shuffle (``with_nearest_centroid_int``: exact
+    integer squared-L2 on the 1e-6 grid, bit-stable at any k;
+    ``centroids_long`` must carry the BIGINT ``qcent`` column of
+    ``group_centroids_quantized``); (2) within each cluster only,
+    int8-quantized cosine pairs >= ``threshold``
+    (``embedding_near_dups_int``, one integer Gram matmul per cluster,
+    with the ``max_bucket`` degenerate-cluster guard); (3) connected
+    components over the duplicate pairs (tiny — the pair set, not the
+    corpus); (4) keep exactly one member per duplicate group.
 
     ``keep_policy``:
       * ``"farthest"`` (paper §3: keep the example with LOW similarity
@@ -683,7 +496,8 @@ def semantic_dedup(corpus: DataFrame, id_col: str, vec_col: str,
     under.  At production k (clusters sized to keep the pairwise
     bounded) a near-dup pair can straddle a Voronoi boundary and be
     missed at probes=1 — the measured recall on planted cos≈0.98 pairs
-    fell 92% → 80% between decades as k grew (tools/semdedup_bench.py).
+    fell 92% → 80% between decades as k grew (SEMDEDUP_BENCH_r9.jsonl;
+    SCALING.md round-8 addendum 10).
     probes=2 is the standard IVF multi-probe remedy: each vector is
     candidate-paired under its top-2 centroids, so a straddling pair
     meets in the shared neighbor cell.  Cost: the pairing input
@@ -717,45 +531,22 @@ def semantic_dedup(corpus: DataFrame, id_col: str, vec_col: str,
         raise ValueError(f"unknown keep_policy {keep_policy!r}")
     if probes < 1:
         raise ValueError(f"probes must be >= 1, got {probes}")
-    if assign_method not in ("fold", "blas", "int"):
-        raise ValueError(f"unknown assign_method {assign_method!r}")
-    if pair_method not in ("fold", "int"):
-        raise ValueError(f"unknown pair_method {pair_method!r}")
-    src = corpus.select(id_col, vec_col)
-    if assign_method == "blas":
-        # large-k float scale path (see with_nearest_centroid_blas):
-        # not bit-stable cross-engine — oracle-pinned callers use
-        # "int" (exact at any k) or "fold" (exact, small k only)
-        ac = with_nearest_centroid_blas(
-            src, vec_col, centroids_long, group_col,
-            probes_col="__probes" if probes > 1 else None, probes=probes)
-    elif assign_method == "int":
-        # exact large-k path: centroids_long must carry the BIGINT
-        # "qcent" column (group_centroids_int); dist is BIGINT grid²
-        ac = with_nearest_centroid_int(
-            src, vec_col, centroids_long, group_col,
-            probes_col="__probes" if probes > 1 else None, probes=probes)
-    else:
-        ac = with_nearest_centroid(
-            src, vec_col, centroids_long, group_col,
-            keep_ranked="__ranked" if probes > 1 else None)
-        if probes > 1:
-            ac = ac.withColumn(
-                "__probes", F.slice(
-                    F.transform(F.col("__ranked"), lambda s: s["lbl"]),
-                    1, probes)).drop("__ranked")
-    pair_fn = (embedding_near_dups_int if pair_method == "int"
-               else embedding_near_dups)
+    # dist is BIGINT grid² units
+    ac = with_nearest_centroid_int(
+        corpus.select(id_col, vec_col), vec_col, centroids_long, group_col,
+        probes_col="__probes" if probes > 1 else None, probes=probes)
     cand_thr = threshold if candidate_threshold is None else candidate_threshold
     if probes > 1:
         probed = ac.select(id_col, vec_col,
                            F.explode(F.col("__probes")).alias("__probe"))
         ac = ac.drop("__probes")
-        pairs = pair_fn(probed, id_col, vec_col, "__probe",
-                        threshold=cand_thr, max_bucket=max_bucket)
+        pairs = embedding_near_dups_int(probed, id_col, vec_col, "__probe",
+                                        threshold=cand_thr,
+                                        max_bucket=max_bucket)
     else:
-        pairs = pair_fn(ac, id_col, vec_col, "assigned",
-                        threshold=cand_thr, max_bucket=max_bucket)
+        pairs = embedding_near_dups_int(ac, id_col, vec_col, "assigned",
+                                        threshold=cand_thr,
+                                        max_bucket=max_bucket)
     if verify_vectors is not None:
         # the LSH→exact-Jaccard pattern applied to projected pairing:
         # when `corpus` carries REDUCED vectors (pca_project /
@@ -874,8 +665,8 @@ def quantized_topk(corpus: DataFrame, queries: DataFrame, id_col: str,
 # Why it replaced the label-bucketed exact form in q32: comparing all
 # intra-bucket pairs is c²/2 dot products per bucket, and with a FIXED
 # bucket count the population c grows with the corpus — measured x82
-# wall-time at 10x data on the scale bench (quadratic, as predicted by
-# the embedding_near_dups docstring).  Near-duplicates in a real corpus
+# wall-time at 10x data on the scale bench (quadratic — the cost the
+# ``max_bucket`` guard of ``embedding_near_dups_int`` caps).  Near-duplicates in a real corpus
 # are O(n) (each doc has O(1) perturbed copies), so retrieval should be
 # ~linear: a map-only signature pass + a banded equi-join that only
 # near-identical vectors collide in, + exact verification of the tiny
@@ -923,46 +714,29 @@ def quantize_grid(v: "Column | str") -> Column:
 
 
 def embedding_lsh_bands(df: DataFrame, id_col: str, vec_col: str, *,
-                        bits: int = 96, bands: int = 8, dim: int = 64,
-                        method: str = "vector") -> DataFrame:
+                        bits: int = 96, bands: int = 8,
+                        dim: int = 64) -> DataFrame:
     """(id, pos, key): one row per band, key = the band's sign bits.
 
-    ``method="vector"`` (default): per-Arrow-batch numpy — quantize,
-    one (n,dim)x(dim,bits) integer matmul, bit-pack.  Map-only, no
-    shuffle, no per-row Python.  ``method="sql"``: the engine-agnostic
-    long form (explode dims -> broadcast-join the ±1 matrix -> two
-    hash aggregations) that the DuckDB oracle mirrors; integer
-    arithmetic makes the two methods equal by construction (pinned in
-    pytest, like simhash_table's sql/arrow pair).
+    Per-Arrow-batch numpy: quantize to the 2^-20 grid, one
+    (n,dim)x(dim,bits) integer matmul against ``hyperplane_signs``,
+    bit-pack.  Map-only, no shuffle, no per-row Python.  The q29
+    oracle recomputes the same keys in long form (explode dims -> join
+    the ±1 matrix -> two aggregations); integer arithmetic makes the
+    two equal by construction.
 
     NULL vectors are dropped (they have no signature — mirrors the
     text simhash's NULL-signature contract); vectors must be
     ``dim``-length (a ragged batch fails loudly in the matmul)."""
     chunk = bits // bands
     assert chunk * bands == bits
-    # keys are BIGINT shifts: numpy 1<<chunk is UB past 62 and Spark
-    # shiftleft wraps mod 64 — the two "equal by construction" methods
-    # would silently diverge instead of failing loudly
+    # keys are BIGINT shifts: numpy 1<<chunk is UB past 62 and SQL
+    # shifts wrap mod 64 — the kernel and the oracle's long form would
+    # silently diverge instead of failing loudly
     assert chunk <= 62, f"band key width {chunk} exceeds a BIGINT shift"
     signs = hyperplane_signs(bits, dim)
     id_type = df.schema[id_col].dataType
     df = df.where(F.col(vec_col).isNotNull())
-    if method == "sql":
-        spark = df.sparkSession
-        sdf = spark.createDataFrame(
-            [(i, d, s) for i, row in enumerate(signs) for d, s in enumerate(row)],
-            schema="i INT, d INT, s BIGINT")
-        vq = df.select(
-            F.col(id_col),
-            F.posexplode(quantize_grid(f"`{vec_col}`")).alias("d", "x"))
-        bitsum = (vq.join(F.broadcast(sdf), "d")
-                  .groupBy(id_col, "i")
-                  .agg(F.sum(F.col("s") * F.col("x")).alias("bs")))
-        return (bitsum
-                .withColumn("b", F.when(F.col("bs") >= 0, F.lit(1)).otherwise(F.lit(0)).cast("bigint"))
-                .groupBy(id_col, F.floor(F.col("i") / chunk).cast("bigint").alias("pos"))
-                .agg(F.sum(F.expr(f"b * shiftleft(CAST(1 AS BIGINT), CAST(i % {chunk} AS INT))")).alias("key")))
-    assert method == "vector", method
     out_schema = T.StructType([T.StructField(id_col, id_type),
                                T.StructField("pos", T.LongType()),
                                T.StructField("key", T.LongType())])
@@ -993,7 +767,6 @@ def embedding_near_dups_lsh(corpus: DataFrame, id_col: str, vec_col: str, *,
                             threshold: float = 0.95, bits: int = 96,
                             bands: int = 8, dim: int = 64,
                             max_bucket: int = 1000,
-                            method: str = "vector",
                             size_hint: int | None = None) -> DataFrame:
     """Per-vector near-dup retrieval: (id, sig_key, neardup_n).
 
@@ -1024,7 +797,7 @@ def embedding_near_dups_lsh(corpus: DataFrame, id_col: str, vec_col: str, *,
     from tradingview_data_pipeline_spark.operators import pins
     br = pins.checkpoint(
         embedding_lsh_bands(corpus, id_col, vec_col, bits=bits,
-                            bands=bands, dim=dim, method=method))
+                            bands=bands, dim=dim))
     sig = (br.groupBy(id_col)
            .agg(F.array_sort(F.collect_list(F.struct("pos", "key"))).alias("a"))
            .select(id_col,
@@ -1225,7 +998,7 @@ class IncrementalEmbeddingIndex:
 # The 100-TB pre-step for the pairwise/ANN family: SemDeDup's in-cluster
 # Gram and brute-force top-k both cost O(d) per pair, so projecting
 # 64→16 dims cuts the dominant stage ~4× at a measured recall cost
-# (tools/semdedup_bench.py records the tradeoff).
+# (SEMDEDUP_BENCH_r9.jsonl PCA legs; SCALING.md round-9 addendum 25).
 # ---------------------------------------------------------------------------
 
 PCA_GRID = 10_000  # 1e-4 element quantization for the exact moment pass

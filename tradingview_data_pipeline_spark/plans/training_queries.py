@@ -426,10 +426,8 @@ def q29_signature_neardup(spark, sf_dir):
     # degree join; the three subtrees do NOT get exchange-reused (the
     # aggregate runs 3x in the plain plan), so materialize the tiny
     # (id, 8-byte sig) frame once — measured 4.8s -> 3.3s at sf0.1
-    # impl="arrow": the numpy bit-unpack path — measured 2.4x faster than
-    # the SQL fold at sf0.1 steady-state (0.8s vs 1.9s signature cost;
-    # the per-row 60 shift/mask extractions were the bottleneck, NOTES
-    # r5/r6). Integer-identical to the SQL form the oracle runs.
+    # simhash_table votes in numpy over Arrow batches — integer-identical
+    # to the conditional-sum SQL the oracle runs (_simhash_oracle).
     # size-gated width hint (addendum 22): the exploded token-hash
     # frame is ~60x docs and the arrow path's per-task sort OOMs at the
     # 5M-doc decade on the session width; footer-sized, no count()
@@ -442,7 +440,7 @@ def q29_signature_neardup(spark, sf_dir):
     # interleaved). MEMORY_AND_DISK still spills if a bigger corpus
     # ever needs it.
     sigs = pins.checkpoint(
-        dd.simhash_table(d, "doc_id", "text", bits=60, impl="arrow",
+        dd.simhash_table(d, "doc_id", "text", bits=60,
                          partitions=sh_parts if sh_parts > 32 else None),
         storage_level=StorageLevel.MEMORY_AND_DISK)
     pairs = dd.simhash_candidate_pairs(d, "doc_id", "text", bits=60,

@@ -178,19 +178,16 @@ def q81_embedding_moments(spark, sf_dir):
 #     synthetic seed labels (vec_id % L; equally oracle-expressible —
 #     DuckDB computes L from COUNT(*) in a CTE), so per-cluster
 #     populations stay ~500 and the pairwise stage is linear in n;
-#   * assignment via the EXACT integer path (assign_method='int':
-#     1e-6-grid BIGINT squared-L2, one int64 matmul per Arrow batch —
-#     with_nearest_centroid_int); the interpreted fold is measured
-#     prohibitive at the k this formula reaches by decade 3 (k=800
-#     killed at 35 min, SCALING.md), and BLAS floats aren't bit-stable
-#     cross-engine. Integer arithmetic is associative, so numpy's
-#     matmul and DuckDB's per-dim SUM produce the identical BIGINT.
-#   * pairwise via the EXACT int8-quantized Gram path
-#     (pair_method='int', embedding_near_dups_int): the join+fold form
-#     materializes every candidate pair (~50k pairs/s measured);
-#     the Gram matmul scores them vectorized, and cos = dot /
-#     sqrt(na*nb) is one integer dot + one exact int product under a
-#     single sqrt — bit-identical in both engines.
+#   * assignment is EXACT integer (with_nearest_centroid_int: 1e-6-grid
+#     BIGINT squared-L2, one int64 matmul per Arrow batch) — vectorized
+#     at the k this formula reaches by decade 3 (k=800; an interpreted
+#     fold was killed at 35 min there, SCALING.md). Integer arithmetic
+#     is associative, so numpy's matmul and DuckDB's per-dim SUM
+#     produce the identical BIGINT.
+#   * pairwise is the EXACT int8-quantized Gram path
+#     (embedding_near_dups_int): one matmul per cluster scores every
+#     pair, and cos = dot / sqrt(na*nb) is one integer dot + one exact
+#     int product under a single sqrt — bit-identical in both engines.
 # The oracle recomputes all of it: quantized centroids and integer
 # distances as plain BIGINT SUMs, int8 quantization + integer dots as
 # list_reduce folds, components via a recursive closure, the keeper
@@ -283,9 +280,8 @@ def q77_semantic_dedup(spark, sf_dir):
     labels = max(10, -(-n // 500))      # ceil(n/500), clusters of ~500
     lab = e.withColumn(
         "slabel", F.pmod(F.col("vec_id"), F.lit(labels)).cast("bigint"))
-    cent = sim.group_centroids_int(lab, "slabel", "embedding")
+    cent = sim.group_centroids_quantized(lab, "slabel", "embedding")
     out = sim.semantic_dedup(lab, "vec_id", "embedding", cent, "slabel",
-                             threshold=0.30, max_bucket=10_000,
-                             assign_method="int", pair_method="int")
+                             threshold=0.30, max_bucket=10_000)
     return out.select("vec_id", "assigned", "dist", "sd_group",
                       F.col("keep").cast("bigint").alias("keep"))

@@ -151,6 +151,99 @@ def test_backfill_replays_history_in_mtime_order(spark, tmp_path):
     assert st["bytes"] > 0
 
 
+_FACTORY_MODE = "spark.sql.codegen.factoryMode"
+
+
+def _spy_factory_mode(monkeypatch, module, name, seen):
+    """Append to ``seen`` the codegen factory mode each call of
+    ``module.name(df, ...)`` runs under."""
+    orig = getattr(module, name)
+
+    def spy(df, *a, **kw):
+        seen.append(df.sparkSession.conf.get(_FACTORY_MODE, None))
+        return orig(df, *a, **kw)
+    monkeypatch.setattr(module, name, spy)
+
+
+def _rankings(table):
+    df = table.read()
+    cols = [c for c in df.columns if not c.endswith("date")]
+    return sorted(tuple(round(v, 6) if isinstance(v, float) else v
+                        for v in r) for r in df.select(*cols).collect())
+
+
+def _score_day(spark, downloads, wh):
+    tables = jobs.warehouse_tables(spark, wh)
+    jobs.run_technical_upload(spark, downloads, tables)
+    jobs.run_fundamental_upload(spark, downloads, tables)
+    jobs.run_composite_job(spark, tables)
+    jobs.run_fundamental_job(spark, tables)
+    return tables
+
+
+def test_interpreted_rankings_equal_compiled(spark, tmp_path, monkeypatch):
+    """The runners score a small table interpreted (the session's
+    small-plan posture); the same runners with the posture off compile.
+    stock_rankings must agree on every column to 6 dp."""
+    from tradingview_data_pipeline_spark import session
+    from tradingview_data_pipeline_spark.plans import composite_score as cs
+    from tradingview_data_pipeline_spark.plans import fundamental_score as fs
+
+    downloads = tmp_path / "downloads"
+    downloads.mkdir()
+    _write_csv(downloads / "Technicals_1.csv", schemas.TECHNICAL_HEADER_MAP, n=40)
+    _write_csv(downloads / "funda_1.csv", schemas.FUNDAMENTAL_HEADER_MAP, n=40)
+    seen = []
+    _spy_factory_mode(monkeypatch, cs, "composite_scores", seen)
+    _spy_factory_mode(monkeypatch, fs, "fundamental_scores", seen)
+
+    interpreted = _score_day(spark, str(downloads), str(tmp_path / "wh_i"))
+    assert seen == ["NO_CODEGEN", "NO_CODEGEN"]
+    monkeypatch.setattr(session, "SMALL_PLAN_MAX_ROWS", -1)
+    compiled = _score_day(spark, str(downloads), str(tmp_path / "wh_c"))
+    assert seen[2:] == [None, None]
+    want = _rankings(compiled["stock_rankings"])
+    assert len(want) == 40
+    assert _rankings(interpreted["stock_rankings"]) == want
+
+    # bound 0: a 40-row table is above it, so codegen stays on
+    monkeypatch.setattr(session, "SMALL_PLAN_MAX_ROWS", 0)
+    jobs.run_composite_job(spark, interpreted)
+    assert seen[4:] == [None]
+    assert _rankings(interpreted["stock_rankings"]) == want
+    assert spark.conf.get(_FACTORY_MODE, None) is None
+
+
+def test_runner_restores_codegen_setting(spark, tmp_path, monkeypatch):
+    downloads = tmp_path / "downloads"
+    downloads.mkdir()
+    _write_csv(downloads / "Technicals_1.csv", schemas.TECHNICAL_HEADER_MAP, n=5)
+    tables = jobs.warehouse_tables(spark, str(tmp_path / "wh"))
+    modes = []
+    orig = jobs.ingest_newest
+
+    def ingest(sp, *a):
+        modes.append(sp.conf.get(_FACTORY_MODE, None))
+        return orig(sp, *a)
+    monkeypatch.setattr(jobs, "ingest_newest", ingest)
+    assert jobs.run_technical_upload(spark, str(downloads), tables) == 5
+    assert modes == ["NO_CODEGEN"]
+    assert spark.conf.get(_FACTORY_MODE, None) is None
+
+    def broken(sp, *a):
+        modes.append(sp.conf.get(_FACTORY_MODE, None))
+        raise RuntimeError("bad download")
+    monkeypatch.setattr(jobs, "ingest_newest", broken)
+    try:
+        jobs.run_fundamental_upload(spark, str(downloads), tables)
+    except RuntimeError:
+        pass
+    else:
+        raise AssertionError("the runner swallowed the error")
+    assert modes == ["NO_CODEGEN", "NO_CODEGEN"]
+    assert spark.conf.get(_FACTORY_MODE, None) is None
+
+
 def test_cli_reports_job_status_to_webhook(spark, tmp_path, monkeypatch):
     """CLI e2e: `jobs technical --webhook-url ...` runs the pipeline and
     delivers the ✅ report (reference run_technical.sh wrapper parity)."""
@@ -189,6 +282,7 @@ def test_cli_reports_job_status_to_webhook(spark, tmp_path, monkeypatch):
     msg = received[0]["content"]
     assert "✅ **Technical Pipeline Success**" in msg
     assert "stock_data_rows: 30" in msg
+    assert "codegen_classes: " in msg
 
 
 def test_cli_reconcile_detects_divergence(spark, tmp_path, capsys,

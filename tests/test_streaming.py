@@ -135,6 +135,27 @@ def test_stream_news_dedup(spark, tmp_path):
     assert len(urls) == 3 and urls[0].endswith("/news/a")
 
 
+def test_news_stream_empty_watermark_batch_commits_nothing(spark, tmp_path,
+                                                          monkeypatch):
+    """availableNow closes with a no-data batch that only advances the
+    watermark; its sink must not rewrite the news table."""
+    src_dir = tmp_path / "news_in"
+    src_dir.mkdir()
+    table = ParquetTable(spark, str(tmp_path / "tweets"), NEWS_SCHEMA, key="tweet_id")
+    spark.createDataFrame(_news_rows(), RAW_NEWS).coalesce(1) \
+        .write.parquet(str(src_dir / "b1"))
+    writes = []
+    append = table.append_dedup
+    monkeypatch.setattr(table, "append_dedup",
+                        lambda df: (writes.append(1), append(df))[1])
+    raw = spark.readStream.schema(RAW_NEWS).parquet(str(src_dir) + "/*")
+    q = stream_news_to_table(raw, table, str(tmp_path / "ckpt_news"))
+    q.awaitTermination(120)
+    assert [p["numInputRows"] for p in q.recentProgress] == [4, 0]
+    assert writes == [1]
+    assert len(table.read().collect()) == 2
+
+
 def test_stream_neardup_candidates_across_batches(spark, tmp_path):
     """Streaming near-dup: candidate pairs span micro-batch boundaries
     via the persisted signature index, nothing is re-reported, and the

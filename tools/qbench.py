@@ -11,6 +11,10 @@ bench.py stays the driver-contract artifact (one cold pass over the whole
 registry); this tool is for OPTIMIZATION deep dives — repeats isolate a
 single query's steady-state cost from session warm-up and neighbors, and
 `setJobDescription` labels make the UI/event-log attribution readable.
+Each run also reports the classes Spark generated and compiled for it
+and their Janino compile milliseconds (``codegen_classes``,
+``compile_ms``, read from the JVM's codegen counters, no Spark job), so
+a "compile less" claim can name that layer.
 
 Usage:
 
@@ -58,7 +62,7 @@ def main() -> None:
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
     names = args[1:]
 
-    from tradingview_data_pipeline_spark.session import get_spark
+    from tradingview_data_pipeline_spark.session import codegen_counters, get_spark
     from tradingview_data_pipeline_spark.operators import pins
     import __spark_entry__ as entrymod
 
@@ -77,9 +81,11 @@ def main() -> None:
     for name, fn in queries.items():
         runs = []
         cpu_runs = []
+        classes, compile_ms = [], []
         for i in range(repeats):
             spark.sparkContext.setJobDescription(f"{name} run {i}")
             c0 = _cpu_sec()
+            k0, ms0 = codegen_counters(spark)
             t0 = time.perf_counter()
             try:
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -87,6 +93,9 @@ def main() -> None:
                 c1 = _cpu_sec()
                 if c0 is not None and c1 is not None:
                     cpu_runs.append(round(c1 - c0, 3))
+                k1, ms1 = codegen_counters(spark)
+                classes.append(k1 - k0)
+                compile_ms.append(round(ms1 - ms0, 1))
             except Exception as exc:  # noqa: BLE001
                 out[name] = {"error": f"{type(exc).__name__}: {exc}"[:300]}
                 break
@@ -105,7 +114,9 @@ def main() -> None:
             out[name] = {"runs": runs, "min": srt[0],
                          "median": srt[len(srt) // 2],
                          "cpu_runs": cpu_runs,
-                         "cpu_min": min(cpu_runs) if cpu_runs else None}
+                         "cpu_min": min(cpu_runs) if cpu_runs else None,
+                         "codegen_classes": classes,
+                         "compile_ms": compile_ms}
         print(f"{name}: {out[name]}", flush=True)
     print(json.dumps(out))
     spark.stop()

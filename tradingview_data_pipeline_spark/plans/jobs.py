@@ -17,6 +17,12 @@ Each runner is also callable from the CLI:
 
 The warehouse layout is one ParquetTable per domain table (production:
 Delta/Iceberg paths, same call sites).
+
+Every runner executes inside ``session.small_plan_posture``, gated on the
+footer row count of the table it reads or maintains: at the reference's
+~1.6k symbols the plans run interpreted instead of compiling ~300
+classes a day. The lazily returned frames (the composite top-10, the
+fundamental projection) execute later, outside it.
 """
 
 from __future__ import annotations
@@ -32,6 +38,7 @@ from tradingview_data_pipeline_spark.plans import composite_score as cs
 from tradingview_data_pipeline_spark.plans import fundamental_score as fs
 from tradingview_data_pipeline_spark.plans import segment_merge as sm
 from tradingview_data_pipeline_spark.plans import segment_score as ss
+from tradingview_data_pipeline_spark.session import small_plan_posture
 from tradingview_data_pipeline_spark.sources.csv_adapter import ingest_newest
 
 
@@ -55,23 +62,27 @@ def warehouse_tables(spark: SparkSession, warehouse: str) -> dict[str, ParquetTa
 def run_technical_upload(spark: SparkSession, downloads_dir: str,
                          tables: dict[str, ParquetTable]) -> int:
     """Newest Technicals*.csv -> clean -> MERGE stock_data (§3.1 stage 2)."""
-    df = ingest_newest(spark, downloads_dir, "Technicals",
-                       schemas.TECHNICAL_HEADER_MAP, tables["stock_data"].schema)
-    if df is None:
-        return 0
-    tables["stock_data"].merge_upsert(df)
-    return tables["stock_data"].row_count()
+    stock = tables["stock_data"]
+    with small_plan_posture(spark, stock.row_count()):
+        df = ingest_newest(spark, downloads_dir, "Technicals",
+                           schemas.TECHNICAL_HEADER_MAP, stock.schema)
+        if df is None:
+            return 0
+        stock.merge_upsert(df)
+    return stock.row_count()
 
 
 def run_fundamental_upload(spark: SparkSession, downloads_dir: str,
                            tables: dict[str, ParquetTable]) -> int:
     """Newest funda*.csv -> clean -> MERGE stock_data (§3.2 stage 2)."""
-    df = ingest_newest(spark, downloads_dir, "funda",
-                       schemas.FUNDAMENTAL_HEADER_MAP, tables["stock_data"].schema)
-    if df is None:
-        return 0
-    tables["stock_data"].merge_upsert(df)
-    return tables["stock_data"].row_count()
+    stock = tables["stock_data"]
+    with small_plan_posture(spark, stock.row_count()):
+        df = ingest_newest(spark, downloads_dir, "funda",
+                           schemas.FUNDAMENTAL_HEADER_MAP, stock.schema)
+        if df is None:
+            return 0
+        stock.merge_upsert(df)
+    return stock.row_count()
 
 
 def run_backfill(spark: SparkSession, downloads_dir: str,
@@ -83,39 +94,42 @@ def run_backfill(spark: SparkSession, downloads_dir: str,
     what daily newest-only runs would have produced."""
     from tradingview_data_pipeline_spark.sources.csv_adapter import backfill_all
 
-    sink = tables["stock_data"].merge_upsert
-    sch = tables["stock_data"].schema
-    return {
-        "technical_files": backfill_all(
-            spark, downloads_dir, "Technicals",
-            schemas.TECHNICAL_HEADER_MAP, sch, sink),
-        "fundamental_files": backfill_all(
-            spark, downloads_dir, "funda",
-            schemas.FUNDAMENTAL_HEADER_MAP, sch, sink),
-        "stock_data_rows": tables["stock_data"].row_count(),
-    }
+    stock = tables["stock_data"]
+    with small_plan_posture(spark, stock.row_count()):
+        files = {
+            "technical_files": backfill_all(
+                spark, downloads_dir, "Technicals",
+                schemas.TECHNICAL_HEADER_MAP, stock.schema, stock.merge_upsert),
+            "fundamental_files": backfill_all(
+                spark, downloads_dir, "funda",
+                schemas.FUNDAMENTAL_HEADER_MAP, stock.schema, stock.merge_upsert),
+        }
+    return {**files, "stock_data_rows": stock.row_count()}
 
 
 def run_composite_job(spark: SparkSession, tables: dict[str, ParquetTable],
                       *, bucket_mode: str = "parity") -> DataFrame:
     """stock_data -> composite scores -> MERGE stock_rankings; returns the
     top-10 report (§3.1 stage 3)."""
-    scored = cs.composite_scores(tables["stock_data"].read(), bucket_mode=bucket_mode)
-    tables["stock_rankings"].merge_upsert(cs.rankings_output(scored))
-    top, _ = cs.top_bottom_report(scored)
+    stock = tables["stock_data"]
+    with small_plan_posture(spark, stock.row_count()):
+        scored = cs.composite_scores(stock.read(), bucket_mode=bucket_mode)
+        tables["stock_rankings"].merge_upsert(cs.rankings_output(scored))
+        top, _ = cs.top_bottom_report(scored)
     return top
 
 
 def run_fundamental_job(spark: SparkSession, tables: dict[str, ParquetTable]) -> DataFrame:
     """stock_data -> fundamental scores + ranks -> MERGE stock_rankings
     (§3.2 stage 3); returns the scored frame projection."""
-    scored = fs.fundamental_scores(
-        tables["stock_data"].read(),
-        size_hint_rows=tables["stock_data"].row_count())
-    ranked = fs.fundamental_ranks(
-        scored, tables["stock_rankings"].read().select("symbol", "market_cap_category"))
-    out = fs.rankings_output(ranked)
-    tables["stock_rankings"].merge_upsert(out)
+    stock = tables["stock_data"]
+    rows = stock.row_count()
+    with small_plan_posture(spark, rows):
+        scored = fs.fundamental_scores(stock.read(), size_hint_rows=rows)
+        ranked = fs.fundamental_ranks(
+            scored, tables["stock_rankings"].read().select("symbol", "market_cap_category"))
+        out = fs.rankings_output(ranked)
+        tables["stock_rankings"].merge_upsert(out)
     return out
 
 
@@ -124,10 +138,10 @@ def run_segment_job(spark: SparkSession, tables: dict[str, ParquetTable],
                     *, key: str = "sector") -> int:
     """scraped overview+performance -> J1 merge -> scores -> overwrite
     segment table (secondary DAG, §3 end)."""
-    merged = sm.merge_overview_performance(overview, performance, key)
-    scored = ss.segment_scores(merged)
     table = tables[f"{key}_data"]
-    table.overwrite(scored)
+    with small_plan_posture(spark, table.row_count()):
+        merged = sm.merge_overview_performance(overview, performance, key)
+        table.overwrite(ss.segment_scores(merged))
     return table.row_count()
 
 
@@ -152,9 +166,8 @@ def parse_repetition_limits(spec: str | None) -> dict[str, float] | None:
 def main(argv: list[str] | None = None) -> None:
     import argparse
 
-    from tradingview_data_pipeline_spark.session import get_spark
-
     from tradingview_data_pipeline_spark.notify import notify, timed_job
+    from tradingview_data_pipeline_spark.session import codegen_counters, get_spark
 
     ap = argparse.ArgumentParser(prog="tradingview-data-pipeline-spark jobs")
     ap.add_argument("job", choices=["technical", "fundamental", "composite",
@@ -226,10 +239,16 @@ def main(argv: list[str] | None = None) -> None:
 
     def reported(name, body):
         # per-job ✅/❌ report, the reference's run_*.sh wrapper behavior:
-        # a failing job still notifies (❌ + error), then propagates
+        # a failing job still notifies (❌ + error), then propagates.
+        # codegen_classes: classes the job compiled (no Spark job to read)
         try:
             with timed_job(name) as t:
-                body(t)
+                classes0, _ = codegen_counters(spark)
+                try:
+                    body(t)
+                finally:
+                    t.metrics["codegen_classes"] = \
+                        codegen_counters(spark)[0] - classes0
         finally:
             notify(t.report, args.webhook_url)
 

@@ -6,12 +6,40 @@ application. Local profile is used by tests and bench; the cluster profile
 documents the settings we'd ship to a 1000-executor deployment (AQE on,
 shuffle partitions sized by data volume, Arrow enabled for the few
 Pandas-UDF operators).
+
+Small-plan posture. Spark compiles every plan it runs: whole-stage
+codegen emits one Janino class per stage, and projections, predicates
+and orderings get their own. A cold market day runs six jobs over
+warehouse tables of at most ~2.3k rows, and compiled 309 classes for
+them (9.2 s of Janino time, before the JVM's own JIT of the result).
+``small_plan_posture(spark, rows)`` runs its body with
+``spark.sql.codegen.factoryMode=NO_CODEGEN`` when ``rows`` is at most
+``SMALL_PLAN_MAX_ROWS``: expressions are then evaluated by Spark's
+interpreted path, and on Spark 4.1 the same setting also turns off
+whole-stage codegen. Measured on 4 cores (``perfbench`` market_daily,
+seed 1): 309 -> 28 classes a day, Janino time 9.2 -> 1.1 s. The market
+job runners (``plans/jobs.py``) and the news stream's sink enter it,
+gated on the footer row count of the table they read or maintain;
+nothing else does, so the row-heavy corpus and registry plans stay
+compiled.
+
+Caveat: Spark marks ``factoryMode`` internal ("not supposed to be set by
+end users"). It is still the only switch for interpreted evaluation,
+and Spark's own expression suites run every expression in both modes.
+``tests/test_session.py`` fails if an upgrade stops honouring it.
+
+The bound is the measured crossover, not a guess: interpreted
+evaluation costs more per row, compiling costs a fixed price per plan,
+and ``SMALL_PLAN_MAX_ROWS`` records where the scoring jobs break even.
+The setting is session-wide while the body runs, so a concurrent job
+on the same session runs interpreted too.
 """
 
 from __future__ import annotations
 
 import os
 import weakref
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -125,8 +153,18 @@ _LOCAL_DEFAULTS = {
     "spark.driver.extraJavaOptions": "-Xss32m",
     "spark.executor.extraJavaOptions": "-Xss32m",
     "spark.ui.enabled": "false",
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
 }
+
+
+def local_conf(extra_conf: dict[str, str] | None = None) -> dict[str, str]:
+    """The local profile's session conf. ``SPARK_GRAFT_CPUS`` is read here,
+    at session build, like ``master`` — a process that sets it after
+    importing the package still gets a matching shuffle width."""
+    conf = dict(_LOCAL_DEFAULTS)
+    conf["spark.sql.shuffle.partitions"] = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if extra_conf:
+        conf.update(extra_conf)
+    return conf
 
 
 def get_spark(app_name: str = "tradingview-data-pipeline-spark",
@@ -143,12 +181,52 @@ def get_spark(app_name: str = "tradingview-data-pipeline-spark",
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(_LOCAL_DEFAULTS)
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    for k, v in local_conf(extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# Largest table, in rows, whose plans run interpreted: the measured
+# crossover. tools/scoring_scale_bench.py 16430 164300, 4 cores, one cold
+# JVM per run, factoryMode forced on vs off, 2 runs each (compiled ->
+# interpreted, seconds): at 16,430 rows composite 14.6/15.8 -> 9.6/10.8
+# and fundamental 23.1/26.3 -> 25.2/27.1; at 164,300 rows composite
+# 17.9/19.4 -> 14.3/16.9 and fundamental 85.1/97.4 -> 112.0/116.7. The
+# pair still wins interpreted at 16k, but the fundamental job alone
+# already loses there, so the bound sits at that job's crossover.
+SMALL_PLAN_MAX_ROWS = 16_000
+
+_FACTORY_MODE = "spark.sql.codegen.factoryMode"
+
+
+@contextmanager
+def small_plan_posture(spark: SparkSession, rows: int):
+    """Run the body's plans interpreted when ``rows`` <= SMALL_PLAN_MAX_ROWS
+    (module docstring); restore the prior setting on exit or error."""
+    if rows > SMALL_PLAN_MAX_ROWS:
+        yield
+        return
+    prior = spark.conf.get(_FACTORY_MODE, None)
+    spark.conf.set(_FACTORY_MODE, "NO_CODEGEN")
+    try:
+        yield
+    finally:
+        if prior is None:
+            spark.conf.unset(_FACTORY_MODE)
+        else:
+            spark.conf.set(_FACTORY_MODE, prior)
+
+
+def codegen_counters(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, compile ms) since the JVM started, read from
+    Spark's ``CodegenMetrics`` and ``CodeGenerator.compileTime`` over
+    py4j — no Spark job. Diff two reads to attribute a span."""
+    jvm = spark.sparkContext._jvm
+    metrics = getattr(jvm.org.apache.spark.metrics.source, "CodegenMetrics")
+    gen = getattr(getattr(jvm.org.apache.spark.sql.catalyst.expressions.codegen,
+                          "CodeGenerator$"), "MODULE$")
+    return (int(metrics.METRIC_COMPILATION_TIME().getCount()),
+            gen.compileTime() / 1e6)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):

@@ -11,9 +11,10 @@ audit timestamp. Here the same contract is a declarative pipeline:
       -> cast + clean (F1/F2 semantics: NaN/Inf/empty -> NULL, round 2dp)
       -> audit timestamp
 
-Duplicate CSV headers: Spark appends numeric suffixes differently from
-pandas, so the adapter normalizes the second occurrence of a header to
-pandas' ``.1`` convention before mapping (uploadtodb.py:113-114 parity).
+Duplicate CSV headers: the adapter parses the header line itself and
+names the second occurrence of a header with pandas' ``.1`` convention
+before mapping (uploadtodb.py:113-114 parity); Spark's own inference
+would suffix it differently, and costs a job.
 
 Scale note: for directory-ingest at scale use ``streaming/file_ingest``
 (Structured Streaming file source with Trigger.AvailableNow) — this batch
@@ -95,26 +96,23 @@ def read_csv_with_mapping(
     - numeric columns get F1 cleaning (NaN/±Inf/empty -> NULL, round 2dp),
       longs are tolerant-cast (F2), strings are trimmed with empty -> NULL.
     """
-    raw = spark.read.option("header", True).csv(path)  # all strings
-
-    # Spark disambiguates duplicate headers with positional suffixes
-    # ("Col2", "Col3"); pandas uses "Col", "Col.1". Re-read the header
-    # line (driver-side, one line) and rename positionally to the pandas
-    # convention the reference's map expects (uploadtodb.py:113-114).
+    # The header line is parsed once, driver-side, and named the pandas
+    # way: a repeated header becomes "Col", "Col.1", the convention the
+    # reference's map expects (uploadtodb.py:113-114). An explicit
+    # all-string schema spares the Spark job header inference would run.
     import csv as _csv
     with open(path, newline="") as fh:
         header = next(_csv.reader(fh))
-    if len(header) == len(raw.columns):
-        seen: dict[str, int] = {}
-        cols = []
-        for c in header:
-            if c in seen:
-                seen[c] += 1
-                cols.append(f"{c}.{seen[c]}")
-            else:
-                seen[c] = 0
-                cols.append(c)
-        raw = raw.toDF(*cols)
+    seen: dict[str, int] = {}
+    fields = []
+    for c in header:
+        if c in seen:
+            seen[c] += 1
+            c = f"{c}.{seen[c]}"
+        else:
+            seen[c] = 0
+        fields.append(T.StructField(c, T.StringType()))
+    raw = spark.read.schema(T.StructType(fields)).option("header", True).csv(path)
 
     target_fields = {f.name: f for f in schema.fields}
     # SQL-text projection (r12, guide §7.3): the cleaning expressions are

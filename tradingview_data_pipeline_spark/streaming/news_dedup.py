@@ -22,13 +22,15 @@ truncation (F12), provider prefix strip (F13), URL composition (F16).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tradingview_data_pipeline_spark.functions.cleaning import (
     compose_url, hash_id, strip_prefix, truncate_str,
 )
 from tradingview_data_pipeline_spark.operators.merge import ParquetTable
+from tradingview_data_pipeline_spark.session import small_plan_posture
 
 
 def normalize_news(df: DataFrame) -> DataFrame:
@@ -65,7 +67,19 @@ def stream_news_to_table(
     deduped = normalized.dropDuplicatesWithinWatermark(["tweet_id"])
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        table.append_dedup(batch_df)
+        # Run the stateful batch exactly once: Spark requires every state
+        # partition to commit, and the pinned rows then feed the write.
+        # The row count rides on that same job. An empty batch (e.g.
+        # availableNow's closing batch, run only to advance the
+        # watermark) commits nothing instead of rewriting the table.
+        seen = Observation()
+        batch = batch_df.observe(seen, F.count(F.lit(1)).alias("rows")) \
+            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        if seen.get["rows"] == 0:
+            return
+        # the write executes on table.spark, not the stream's session
+        with small_plan_posture(table.spark, table.row_count()):
+            table.append_dedup(batch)
 
     writer = deduped.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint_dir)

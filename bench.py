@@ -144,8 +144,8 @@ def main():
     # Now: the calibration probe IS a suite-shaped query (q1: parquet
     # scan + hash aggregate + sort) on the warm session, timed several
     # times with the MEDIAN reported; the individual runs are recorded
-    # so readers can see the noise band. bench_compare flags a query
-    # only when raw AND normalized both move beyond the threshold.
+    # so readers can see the noise band. The gated comparison is
+    # perfbench/compare.py, not this file.
     cal_runs = []
     for _ in range(5):
         t0 = time.perf_counter()

@@ -55,6 +55,31 @@ def test_append_dedup(spark, tmp_path):
     assert got == {"A": (1.0, None), "B": (3.0, None)}  # A kept its first version
 
 
+def test_append_dedup_file_count_stays_bounded(spark, tmp_path):
+    """Daily append_dedup on an unbucketed table rewrites it whole; the
+    rewrite's file count follows the shuffle width, not the number of
+    days, so ten days of news do not pile up files."""
+    t = table(spark, tmp_path)
+
+    def day(lo, hi):
+        return (spark.range(lo, hi)
+                .selectExpr("format_string('S%05d', id) AS symbol",
+                            "CAST(id AS DOUBLE) AS price",
+                            "CAST(NULL AS DOUBLE) AS pe"))
+
+    t.overwrite(day(0, 2_000).coalesce(1))
+    assert t.status()["parquet_files"] == 1
+    bound = 2 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    files = []
+    for d in range(10):
+        lo = 2_000 + 150 * d
+        # 150 fresh keys plus 50 keys the table already holds
+        t.append_dedup(day(lo, lo + 150).unionByName(day(lo - 50, lo)))
+        files.append(t.status()["parquet_files"])
+    assert max(files) <= bound, files
+    assert t.read().count() == 3_500
+
+
 def test_update_where_merge(spark, tmp_path):
     t = table(spark, tmp_path)
     t.overwrite(spark.createDataFrame([("A", 1.0, 2.0), ("B", 3.0, 4.0)], SCHEMA))

@@ -45,10 +45,34 @@ def test_aggregate_is_partial_then_final(spark):
     assert "Exchange" in p
 
 
-def test_no_cartesian_products_anywhere(spark):
+def test_no_cartesian_products_anywhere(spark, monkeypatch):
+    """No query plan, and no substrate a query checkpoints while it is
+    built, contains a cartesian product. An eager checkpoint cuts the
+    lineage, so the query's own plan shows only a LogicalRDD stub where
+    the substrate was; the wrapper records each checkpointed frame's
+    executed plan before the cut hides it."""
+    from tradingview_data_pipeline_spark.plans import training_queries
+
+    DataFrame = type(spark.range(1))    # the classic frame, not the ABC
+    substrates = []                     # (query, executed plan)
+    real = DataFrame.localCheckpoint
+
+    def recording(self, *a, **kw):
+        ck = real(self, *a, **kw)
+        substrates.append(
+            (name, self._jdf.queryExecution().executedPlan().toString()))
+        return ck
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    # q28/q42/q70 share a memoised substrate: build it inside this test
+    training_queries._DEDUP_CACHE.clear()
     for name, fn in analytics.QUERIES.items():
         p = explain(fn(spark, SF))
         assert "CartesianProduct" not in p, name
+    assert training_queries._DEDUP_CACHE, "q28 substrate not rebuilt"
+    assert substrates
+    for name, sub in substrates:
+        assert "CartesianProduct" not in sub, f"{name} substrate"
 
 
 def test_region_pick_joins_are_broadcast(spark):

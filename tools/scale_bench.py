@@ -16,9 +16,9 @@ Methodology notes (mirrored in SCALING.md):
 - Queries are materialized through the noop sink (full execution, no
   driver collect) after one un-timed warm-up of q1 per scale to absorb
   parquet-footer/JIT effects; an un-timed count() records output rows
-  so output growth is visible next to time growth.  Finalized-plan
-  feature counts come from `tools/plan_audit.py <sf_dir> <queries...>`,
-  which collect()s to finalize the adaptive plan.
+  so output growth is visible next to time growth.  Cartesian products,
+  including any upstream of an eager checkpoint, are caught by
+  `tests/test_plan_shapes.py::test_no_cartesian_products_anywhere`.
 - A fixed-work JVM calibration job is timed per scale for drift checks.
 """
 

@@ -161,7 +161,7 @@ class LogRegModel:
     NONZERO coordinates (vocabulary-bounded, broadcastable), ``bias``
     the intercept, ``n_buckets`` the feature-hash modulus (scoring must
     reuse it), ``history`` the mean training loss per iteration.  The
-    dense vector stays driver-side in ``dense`` for tests/persistence.
+    dense vector stays driver-side in ``dense`` for tests and persistence.
     """
 
     def __init__(self, weights: DataFrame, bias: float, n_buckets: int,

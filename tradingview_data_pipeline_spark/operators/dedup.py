@@ -1235,8 +1235,8 @@ class IncrementalContainmentIndex:
     (c) exact prefix filtering (PPJoin-style) at the default
     threshold 0.5 only halves the probe keys — pigeonhole gives a
     (1-t)·|set|+1 prefix, no better. The levers that DO hold, both
-    measured at 5M stored docs (round 10, phase-profiled via
-    tools/containment_profile.py):
+    measured at 5M stored docs (round 10, phase-profiled; SCALING.md
+    round-10 addendum 26, evidence/INCR_BENCH_r10.jsonl):
 
       * the ParquetTable hardlink insert fast path — the largest
         phase of the trigger was not the probe but the UPSERT's
@@ -1448,8 +1448,8 @@ class ShardedContainmentIndex:
     its ``shard_col`` and each trigger reads ONLY the shards the batch
     touches — a single-source batch against an S-shard store reads 1/S
     of the gram mass, so per-trigger cost tracks docs-per-touched-shard,
-    not total store size (measured: tools/containment_shard_bench.py,
-    SCALING addendum 30).
+    not total store size (measured:
+    evidence/CONTAINMENT_SHARD_BENCH_r11.jsonl, SCALING addendum 30).
 
     Semantics contract (deliberate, documented): containment pairs are
     reported WITHIN a shard only. Sharding by source encodes the policy

@@ -21,16 +21,6 @@ from __future__ import annotations
 
 _LIVE: list = []
 _LIVE_CKPT: list = []          # (spark_context, rdd_id) of localCheckpoints
-_SUBSTRATE_PLANS: list = []    # (label, executed-plan string) per checkpoint
-
-# Substrate-plan capture is OPT-IN (r13 advisor catch): each captured
-# executed-plan string is tens-to-hundreds of KB with AQE, and only
-# tools/plan_audit.py ever drains the list — with capture always on,
-# bench/verify/scale harnesses and any long-lived production session
-# accumulated plan strings for the session lifetime, the exact
-# accumulation failure mode this module exists to prevent. plan_audit
-# sets ``pins.CAPTURE_PLANS = True`` before running queries.
-CAPTURE_PLANS = False
 
 
 def track(df):
@@ -74,43 +64,7 @@ def checkpoint(df, *, storage_level=None):
         _LIVE_CKPT.append((ck.sparkSession.sparkContext, rdd_id))
     except Exception:   # plan shape drift — leak (old behavior), don't fail
         pass
-    if CAPTURE_PLANS:
-        try:
-            # r12 (VERDICT r11 "what's wrong" #4): a checkpoint truncates
-            # lineage, so a post-hoc plan audit sees only the LogicalRDD
-            # stub and a cartesian/unpruned scan UPSTREAM of the pin would
-            # be invisible. The eager checkpoint just executed df's own
-            # QueryExecution, so its finalized adaptive plan is available
-            # here — record it for tools/plan_audit.py to audit alongside
-            # the query's visible plan.
-            _SUBSTRATE_PLANS.append(
-                ("checkpoint",
-                 df._jdf.queryExecution().executedPlan().toString()))
-        except Exception:   # diagnostics only — never fail the operator
-            pass
     return ck
-
-
-def record_plan(df, label: str = "substrate") -> None:
-    """Capture ``df``'s finalized executed plan for the audit WITHOUT
-    release-tracking — for checkpoints whose lifecycle is owned by a
-    session memo (q28's _DEDUP_CACHE) rather than the per-query release.
-    No-op unless ``CAPTURE_PLANS`` is set (see its comment)."""
-    if not CAPTURE_PLANS:
-        return
-    try:
-        _SUBSTRATE_PLANS.append(
-            (label, df._jdf.queryExecution().executedPlan().toString()))
-    except Exception:
-        pass
-
-
-def drain_substrate_plans() -> list:
-    """Return and clear the pre-truncation plans captured by
-    :func:`checkpoint` since the last drain (plan-audit hook)."""
-    out = list(_SUBSTRATE_PLANS)
-    _SUBSTRATE_PLANS.clear()
-    return out
 
 
 def release_checkpoints(*, blocking: bool = False) -> int:
@@ -129,8 +83,4 @@ def release_checkpoints(*, blocking: bool = False) -> int:
         except Exception:  # session gone / already released — harmless
             pass
     _LIVE_CKPT.clear()
-    # belt-and-braces vs unbounded growth: any captures a harness never
-    # drained (plan_audit drains BEFORE releasing) die at the same
-    # query boundary as the blocks they describe
-    _SUBSTRATE_PLANS.clear()
     return n

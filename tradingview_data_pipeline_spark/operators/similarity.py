@@ -331,11 +331,12 @@ def with_nearest_centroid_int(df: DataFrame, vec_col: str,
     The vectorized kernel is what makes large k affordable: an
     interpreted per-row fold over k centroids is O(k·d) expression work
     and was killed at 35 min at k=800, where this path takes ~3 s
-    (200k vectors on a 32-core host; SEMDEDUP_BENCH_r9.jsonl; SCALING.md round-8 addendum 10, round-9
-    addendum 24). Ties break to the smaller label (label-sorted
-    centroid matrix, argmin-first). ``out_dist`` is BIGINT in grid²
-    units. ``probes_col``: also emit the distance-ordered top-``probes``
-    labels (stable argsort ⇒ label-ascending on exact ties)."""
+    (200k vectors on a 32-core host; evidence/SEMDEDUP_BENCH_r9.jsonl;
+    SCALING.md round-8 addendum 10, round-9 addendum 24). Ties break
+    to the smaller label (label-sorted centroid matrix, argmin-first).
+    ``out_dist`` is BIGINT in grid² units. ``probes_col``: also emit the
+    distance-ordered top-``probes`` labels (stable argsort ⇒
+    label-ascending on exact ties)."""
     import numpy as np
 
     carr = _centroid_arrays(centroids_long, group_col,
@@ -496,8 +497,8 @@ def semantic_dedup(corpus: DataFrame, id_col: str, vec_col: str,
     under.  At production k (clusters sized to keep the pairwise
     bounded) a near-dup pair can straddle a Voronoi boundary and be
     missed at probes=1 — the measured recall on planted cos≈0.98 pairs
-    fell 92% → 80% between decades as k grew (SEMDEDUP_BENCH_r9.jsonl;
-    SCALING.md round-8 addendum 10).
+    fell 92% → 80% between decades as k grew
+    (evidence/SEMDEDUP_BENCH_r9.jsonl; SCALING.md round-8 addendum 10).
     probes=2 is the standard IVF multi-probe remedy: each vector is
     candidate-paired under its top-2 centroids, so a straddling pair
     meets in the shared neighbor cell.  Cost: the pairing input
@@ -998,7 +999,7 @@ class IncrementalEmbeddingIndex:
 # The 100-TB pre-step for the pairwise/ANN family: SemDeDup's in-cluster
 # Gram and brute-force top-k both cost O(d) per pair, so projecting
 # 64→16 dims cuts the dominant stage ~4× at a measured recall cost
-# (SEMDEDUP_BENCH_r9.jsonl PCA legs; SCALING.md round-9 addendum 25).
+# (evidence/SEMDEDUP_BENCH_r9.jsonl PCA legs; SCALING.md round-9 addendum 25).
 # ---------------------------------------------------------------------------
 
 PCA_GRID = 10_000  # 1e-4 element quantization for the exact moment pass

@@ -1,7 +1,7 @@
 """Skew-handling primitives for hot keys (SURVEY §4 / scale design).
 
-Measured guidance (tools/skew_bench.py, 32M rows with one key owning
-50% of the fact — SKEW_BENCH_r6.jsonl):
+Measured guidance (32M rows with one key owning 50% of the fact,
+round 6 — evidence/SKEW_BENCH_r6.jsonl):
 
 - **Algebraic groupBy skew is a non-problem in Spark**: map-side
   partial aggregation collapses each map partition to one row per key

@@ -351,8 +351,8 @@ def q48_decontamination(spark, sf_dir):
 # q49 — corpus term statistics, both granularities tagged and unioned:
 # per-document TF-IDF top-3 characteristic terms (scope='doc'; linear
 # idf: score = tf * (N/df), IEEE-exact cross-engine; log-idf variant is
-# pytest-verified in tests/test_corpus.py) and the corpus-wide top-20
-# word bigrams (scope='corpus'; explode + hash agg +
+# pytest-verified in tests/test_temporal_corpus_vectors.py) and the
+# corpus-wide top-20 word bigrams (scope='corpus'; explode + hash agg +
 # TakeOrderedAndProject, deterministic tie-break on the bigram).
 # (Consolidates the former q49 + q51.)
 # ---------------------------------------------------------------------------

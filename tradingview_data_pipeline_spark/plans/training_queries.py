@@ -46,7 +46,7 @@ def _hits_sql(markers: list[str]) -> str:
 # wins ties), length/stopword/punctuation quality blend, and the
 # min-shingle-hash fingerprint (1-function MinHash).  Consolidates the
 # former q23/q24/q25/q26; each underlying operator also has focused
-# pytest coverage in tests/test_text.py.
+# pytest coverage in tests/test_text_dedup_similarity.py.
 # ---------------------------------------------------------------------------
 
 _EN = ", ".join(f"'{m}'" for m in tx.LANG_MARKERS["en"])
@@ -142,9 +142,10 @@ def _pii_total_col():
 # MinHash-signature CTE (k=16, affine permutations over distinct 60-bit
 # shingle hashes) — shared by every LSH oracle below.  The signature
 # operator itself (dd.minhash_signatures_long) is exercised inside q28's
-# banding path and pinned component-by-component in tests/test_dedup.py;
-# its former standalone query (q27) was folded into q28 to keep the
-# registry inside the driver's 50-query correctness window.
+# banding path and pinned component-by-component in
+# tests/test_text_dedup_similarity.py; its former standalone query (q27)
+# was folded into q28 to keep the registry inside the driver's 50-query
+# correctness window.
 # k=16 / 4-row bands is the SCALE-SAFE config (round-9 change, was
 # k=8 / 2-row bands): 2-row bands collide en masse past ~10^5 docs on
 # low-entropy corpora — the measured q42 third-decade x31 blowup
@@ -270,13 +271,9 @@ def _scored_pairs(spark, sf_dir):
     # releasing the set and pair pins at the query boundary cannot
     # cascade-invalidate it — a plain .cache() is dropped by Spark's
     # CacheManager once an upstream pin goes, and every downstream
-    # query would rebuild the full LSH pipeline per reference.
+    # query would rebuild the full LSH pipeline per reference. It is
+    # not release-tracked: _DEDUP_CACHE owns its lifecycle.
     scored = pre.localCheckpoint(eager=True)
-    # audit visibility only (r12, plan-audit checkpoint blind spot):
-    # this checkpoint's lifecycle belongs to _DEDUP_CACHE (q28/q42/q70
-    # share it across queries), so it must NOT be release-tracked —
-    # record the pre-truncation plan without registering the blocks
-    pins.record_plan(pre, "scored_pairs")
     _DEDUP_CACHE[key] = (spark, scored)
     SUBSTRATE_BUILD_SEC["lsh_scored_pairs"] = round(
         _time.perf_counter() - _t0, 3)

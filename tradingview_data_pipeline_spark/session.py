@@ -228,9 +228,3 @@ def codegen_counters(spark: SparkSession) -> tuple[int, float]:
     return (int(metrics.METRIC_COMPILATION_TIME().getCount()),
             gen.compileTime() / 1e6)
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Load the driver's parquet tables from ``sf_dir`` as a dict of DataFrames."""
-    names = names or ["region", "nation", "customer", "supplier", "part",
-                      "orders", "lineitem", "events", "documents", "embeddings"]
-    return {n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names}

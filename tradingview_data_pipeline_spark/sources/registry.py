@@ -68,13 +68,3 @@ class SourceRegistry:
         for name in self._sources:
             self.load(spark, name).createOrReplaceTempView(name)
 
-
-def default_registry(sf_dir: str = "/root/testdata/sf0.001") -> SourceRegistry:
-    """Registry pre-wired with the driver's tables (the engine's stand-in
-    for the reference's three screener URLs)."""
-    reg = SourceRegistry()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "documents", "embeddings"]:
-        reg.add_path(t, f"{sf_dir}/{t}.parquet", "parquet",
-                     description=f"driver table {t} @ {sf_dir}")
-    return reg

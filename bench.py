@@ -173,7 +173,7 @@ def main():
         # block-manager spill (pins are performance artifacts; results
         # stay correct if one is ever released early)
         pins.release_all()
-        pins.release_checkpoints()   # media-substrate checkpoint blocks
+        pins.release_checkpoints()   # query-owned checkpoint blocks
 
     try:
         _bench_pipelines(spark, timings)
@@ -194,10 +194,10 @@ def main():
     # comparisons across rounds aren't misled by first-toucher order.
     from tradingview_data_pipeline_spark.plans import training_queries as tq
     substrates = {
-        name: {"sec": sec, "charged_to": "q28_lsh_near_dup",
-               "consumers": ["q28_lsh_near_dup", "q42_dedup_graph",
-                             "q70_leakage_safe_split"]}
-        for name, sec in tq.SUBSTRATE_BUILD_SEC.items()}
+        key[0]: {"sec": sec, "charged_to": "q28_lsh_near_dup",
+                 "consumers": ["q28_lsh_near_dup", "q42_dedup_graph",
+                               "q70_leakage_safe_split"]}
+        for key, sec in pins.BUILD_SEC.items() if key[0] == tq.LSH_SUBSTRATE}
     print(json.dumps({
         "metric": "declared_queries_plus_pipelines_total",
         "value": total,

@@ -51,6 +51,7 @@ def test_no_cartesian_products_anywhere(spark, monkeypatch):
     lineage, so the query's own plan shows only a LogicalRDD stub where
     the substrate was; the wrapper records each checkpointed frame's
     executed plan before the cut hides it."""
+    from tradingview_data_pipeline_spark.operators import pins
     from tradingview_data_pipeline_spark.plans import training_queries
 
     DataFrame = type(spark.range(1))    # the classic frame, not the ABC
@@ -65,11 +66,13 @@ def test_no_cartesian_products_anywhere(spark, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
     # q28/q42/q70 share a memoised substrate: build it inside this test
-    training_queries._DEDUP_CACHE.clear()
+    pins.forget()
     for name, fn in analytics.QUERIES.items():
         p = explain(fn(spark, SF))
         assert "CartesianProduct" not in p, name
-    assert training_queries._DEDUP_CACHE, "q28 substrate not rebuilt"
+    assert (training_queries.LSH_SUBSTRATE, SF) in pins.BUILD_SEC, \
+        "q28 substrate not rebuilt"
+    assert any(name == "q28_lsh_near_dup" for name, _ in substrates)
     assert substrates
     for name, sub in substrates:
         assert "CartesianProduct" not in sub, f"{name} substrate"

@@ -104,22 +104,27 @@ def ref_bigram_lm(docs, scale=1_000_000):
 @settings(max_examples=10, deadline=None)
 @given(st.lists(doc, min_size=1, max_size=30))
 def test_bigram_lm_profile_matches_reference(spark, docs):
+    from tradingview_data_pipeline_spark.operators import pins
+
+    def stored():
+        return {i.id(): i.storageLevel()
+                for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
     sdf = spark.createDataFrame(list(enumerate(docs)), "i long, text string")
+    before = stored()
     out = cp.bigram_lm_profile(sdf, "i", "text")
     got = {r["i"]: (r["n_bigrams"], r["bigram_score"]) for r in
            out.collect()}
     exp = ref_bigram_lm(docs)
     for i, d in enumerate(docs):
         assert got[i] == exp[i], (d, got[i], exp[i])
-    # pin-lifecycle contract: the shared pre-aggregate rides on the
-    # result and unpersist_pins releases it (long-lived sessions)
-    assert len(getattr(out, "_pinned_deps", [])) == 1
-    assert out._pinned_deps[0].storageLevel.useDisk
-    cp.unpersist_pins(out)
-    assert not out._pinned_deps[0].storageLevel.useDisk
-    # ...and the session registry tracked it too (harnesses bulk-release
+    # the shared pre-aggregate is pinned DISK_ONLY (off the execution
+    # memory pool) while the query runs...
+    new = [lv for rid, lv in stored().items() if rid not in before]
+    assert all(lv.useDisk() and not lv.useMemory() for lv in new)
+    assert new or not any(n for n, _ in got.values())
+    # ...and the session registry tracks it (harnesses bulk-release
     # between queries; release_all is idempotent on already-released)
-    from tradingview_data_pipeline_spark.operators import pins
     assert pins.release_all() >= 1
     assert pins.release_all() == 0
 

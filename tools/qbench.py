@@ -102,13 +102,9 @@ def main() -> None:
             finally:
                 pins.release_all()
                 pins.release_checkpoints()
-                # per-session substrate memos would make repeat 2+ measure
-                # a cache hit, not the query — clear them between repeats
-                try:
-                    from tradingview_data_pipeline_spark.plans import training_queries
-                    training_queries._DEDUP_CACHE.clear()
-                except Exception:
-                    pass
+                # session memos would make repeat 2+ measure a cache
+                # hit, not the query — forget them between repeats
+                pins.forget()
         if runs:
             srt = sorted(runs)
             out[name] = {"runs": runs, "min": srt[0],

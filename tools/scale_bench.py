@@ -65,22 +65,17 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
     from tradingview_data_pipeline_spark.session import get_spark
-    from tradingview_data_pipeline_spark.plans import training_queries as tq
+    from tradingview_data_pipeline_spark.operators import pins
 
     spark = get_spark("scale-bench")
     spark.sparkContext.setLogLevel("ERROR")
     qmap = entrymod.queries()
     out = []
     for sf_dir in sf_dirs:
-        # q28 pays materialization per scale; unpersist BEFORE clearing so
-        # the prior scale's checkpointed blocks don't linger into this
-        # scale's timed runs (same loop as _scored_pairs' own eviction)
-        for _, (_, sc) in tq._DEDUP_CACHE.items():
-            try:
-                sc.unpersist()
-            except Exception:
-                pass
-        tq._DEDUP_CACHE.clear()
+        # q28 pays materialization per scale: free the prior scale's
+        # session memos (and their checkpoint blocks) before this
+        # scale's timed runs
+        pins.forget()
         # size the session shuffle width by the scale point (the SURVEY
         # §6 doctrine: partitions ~ input volume, AQE coalesces the
         # tail) — the fixed small-data width leaves decade-4 sorts
@@ -112,7 +107,6 @@ def main() -> None:
                 errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             # release operator DISK_ONLY pins between queries (outside
             # the timed block) — see operators/pins.py
-            from tradingview_data_pipeline_spark.operators import pins
             pins.release_all()
             pins.release_checkpoints()
         rec = {"sf_dir": sf_dir, "calibration_sec": calibration,

@@ -59,6 +59,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tradingview_data_pipeline_spark.operators import pins
 from tradingview_data_pipeline_spark.operators import text as tx
 
 END_OF_WORD = "</w>"
@@ -292,8 +293,8 @@ def bpe_train(
                 stats_out["n_actions"] = n_actions + 1   # the collect
                 stats_out["merges_per_action"] = float(len(merges))
             return merges
-    words = wf_table.withColumn(
-        "symbols", _initial_symbols(F.col("word"))).localCheckpoint(eager=True)
+    words = pins.checkpoint(wf_table.withColumn(
+        "symbols", _initial_symbols(F.col("word"))), storage_level=None)
     merges: list[tuple[str, str]] = []
     since_ckpt = 0
     n_actions = 0
@@ -320,7 +321,7 @@ def bpe_train(
                                      _merge_pair(F.col("symbols"), a, b))
         since_ckpt += len(batch)
         if since_ckpt >= checkpoint_every:
-            words = words.localCheckpoint(eager=True)
+            words = pins.checkpoint(words, storage_level=None)
             since_ckpt = 0
     if stats_out is not None:
         stats_out["path"] = "distributed"

@@ -224,7 +224,6 @@ def logreg_train(df: DataFrame, text_col: str, label_col: str, *,
     import numpy as np
     import pandas as pd
 
-    from tradingview_data_pipeline_spark.operators import pins
     from pyspark import StorageLevel
 
     if iters < 1:
@@ -252,7 +251,7 @@ def logreg_train(df: DataFrame, text_col: str, label_col: str, *,
                        F.struct(F.col("bucket"), F.col("cnt")))))
                  .alias("bc"))
             .select("__y", "bc"))
-    feat = pins.track(feat.persist(StorageLevel.DISK_ONLY))
+    feat = feat.persist(StorageLevel.DISK_ONLY)
 
     out_schema = "bucket long, g long"
 

@@ -630,34 +630,21 @@ def bigram_lm_profile(df: DataFrame, id_col: str,
     array — no token-per-row explode of unigrams), the corpus bigram
     and prefix tables are two re-aggregations of that same frame, and
     everything joins on 8-byte xxhash64 keys (the q72 lesson), never
-    strings.
-
-    Caller contract (pin lifecycle): the plan DISK_ONLY-persists its
-    shared per-(doc, bigram) pre-aggregate (three consumers whose
-    differing pushed null filters defeat exchange reuse — NOTES 31).
-    The persisted handle rides on the returned frame as
-    ``result._pinned_deps``; one-shot queries can ignore it (the
-    context cleaner reclaims the blocks), but a long-lived session
-    calling this repeatedly should ``unpersist_pins(result)`` after
-    the result materializes, or disk-cached blocks accumulate until
-    GC happens to collect the handles."""
-    agg, per = _bigram_lm_stats(df, id_col, text_col, scale=scale)
+    strings."""
+    agg = _bigram_lm_stats(df, id_col, text_col, scale=scale)
     zero = F.lit(0).cast("bigint")
-    out = (df.select(id_col).join(agg, id_col, "left")
-           .select(id_col,
-                   F.coalesce(F.col("__n"), zero).alias("n_bigrams"),
-                   F.coalesce(F.col("__s"), zero).alias("bigram_score")))
-    out._pinned_deps = [per]  # see docstring: unpersist_pins(out)
-    return out
+    return (df.select(id_col).join(agg, id_col, "left")
+            .select(id_col,
+                    F.coalesce(F.col("__n"), zero).alias("n_bigrams"),
+                    F.coalesce(F.col("__s"), zero).alias("bigram_score")))
 
 
 def _bigram_lm_stats(df: DataFrame, id_col: str, text_col: str,
                      *, scale: int = 1_000_000):
-    """The aggregate half of :func:`bigram_lm_profile` — returns
-    ``(agg, per)``: one stats row per document WITH bigrams
-    (id, __n, __s) plus the DISK_ONLY-pinned per-(doc, bigram) frame
-    (already ``pins.track``-ed). Factored out (r13, guide §2.4) so q74
-    can attach both corpus-frequency profiles with one document join."""
+    """The aggregate half of :func:`bigram_lm_profile` — one stats
+    row per document WITH bigrams (id, __n, __s). Factored out (r13,
+    guide §2.4) so q74 can attach both corpus-frequency profiles with
+    one document join."""
     toks = tx.tokens(F.coalesce(F.col(text_col), F.lit("")))
 
     def bigram_structs(t: Column) -> Column:
@@ -689,7 +676,9 @@ def _bigram_lm_stats(df: DataFrame, id_col: str, text_col: str,
     # aggregate); spilled-to-disk blocks stay out of the unified pool
     # and re-reading them is cheaper than three explode passes.
     from pyspark import StorageLevel
-    per = per.persist(StorageLevel.DISK_ONLY)
+
+    from tradingview_data_pipeline_spark.operators import pins
+    per = pins.track(per.persist(StorageLevel.DISK_ONLY))
     # corpus statistics as ONE re-aggregation chain: cg is the bigram
     # table, c1 re-aggregates CG (vocab-bounded), not the per-doc frame;
     # the weight join is vocab-sized and AQE broadcasts it when small
@@ -703,18 +692,7 @@ def _bigram_lm_stats(df: DataFrame, id_col: str, text_col: str,
            .groupBy(id_col)
            .agg(F.sum("__c").alias("__n"),
                 F.sum(F.col("__q") * F.col("__c")).alias("__s")))
-    from tradingview_data_pipeline_spark.operators import pins
-    pins.track(per)           # bulk-releasable by long-lived harnesses
-    return agg, per
-
-
-def unpersist_pins(df: DataFrame, *, blocking: bool = False) -> None:
-    """Release DISK_ONLY pins an operator attached to its result frame
-    (``_pinned_deps`` — currently ``bigram_lm_profile``). Call AFTER
-    the result has materialized (collected / written); a no-op on
-    frames that carry no pins."""
-    for dep in getattr(df, "_pinned_deps", ()):
-        dep.unpersist(blocking=blocking)
+    return agg
 
 
 def shared_gram_owners(gp: DataFrame, id_col: str, *,

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tradingview_data_pipeline_spark.operators import pins
 from tradingview_data_pipeline_spark.operators.text import (
     md5_hash60, tokens, word_shingles,
 )
@@ -433,7 +434,6 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
     # Eager-checkpoint the tiny (id, band, 16-byte bh) frame once
     # (docs × bands rows, never the text): one signature pass feeds all
     # three consumers (guide §2.4; the q29/video substrate rule).
-    from tradingview_data_pipeline_spark.operators import pins
     banded = pins.checkpoint(banded)
     if max_bucket is not None:
         over = (banded.groupBy("band", "bh")
@@ -773,15 +773,15 @@ def connected_components(pairs: DataFrame, *, max_iter: int = 10,
     # recompute + a label-frame join + count to one checkpoint + one
     # scan-only count. (A co-partitioned merge-hinted variant measured
     # the same within host noise; the simpler form is kept.)
-    edges = (pairs.selectExpr("doc_a AS src", "doc_b AS dst")
-             .union(pairs.selectExpr("doc_b AS src", "doc_a AS dst"))
-             .distinct()
-             .localCheckpoint(eager=True))
-    labels = (edges.selectExpr("src AS doc_id")
-              .union(edges.selectExpr("dst AS doc_id"))
-              .distinct()
-              .withColumn("cluster_id", F.col("doc_id"))
-              .localCheckpoint(eager=True))
+    edges = pins.checkpoint(
+        pairs.selectExpr("doc_a AS src", "doc_b AS dst")
+        .union(pairs.selectExpr("doc_b AS src", "doc_a AS dst"))
+        .distinct(), storage_level=None)
+    labels = pins.checkpoint(
+        edges.selectExpr("src AS doc_id")
+        .union(edges.selectExpr("dst AS doc_id"))
+        .distinct()
+        .withColumn("cluster_id", F.col("doc_id")), storage_level=None)
     changed = 1
     for _ in range(max_iter):
         # (1) each node adopts the min label among itself and its neighbors
@@ -805,7 +805,7 @@ def connected_components(pairs: DataFrame, *, max_iter: int = 10,
             .select("doc_id", "__old",
                     F.coalesce(F.col("__jump2"), F.col("cluster_id"))
                     .alias("cluster_id")))
-        updated = updated.localCheckpoint(eager=True)
+        updated = pins.checkpoint(updated, storage_level=None)
         changed = updated.where(F.col("cluster_id") != F.col("__old")).count()
         labels = updated.select("doc_id", "cluster_id")
         if changed == 0:
@@ -1055,7 +1055,6 @@ def dedup_clusters(df: DataFrame, id_col: str, text_col: str,
         # re-runs per consumer (guide §2.4). Docs-sized (one array per
         # doc); pins.checkpoint is DISK_ONLY, so it never competes with
         # the verify joins' execution memory (addendum-16 rule).
-        from tradingview_data_pipeline_spark.operators import pins
         sets = pins.checkpoint(shingle_sets(df, id_col, text_col))
         pairs = lsh_candidate_pairs(df, id_col, text_col, k=k, bands=bands,
                                     shingles=sets, max_bucket=max_bucket)

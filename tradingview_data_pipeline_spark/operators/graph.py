@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tradingview_data_pipeline_spark.operators import pins
+
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst", *,
              damping: float = 0.85, tol: float = 1e-6,
@@ -44,15 +46,17 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst", *,
     edges = edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
     nodes = (edges.select(F.col(src).alias("node"))
              .unionByName(edges.select(F.col(dst).alias("node")))
-             .distinct()).localCheckpoint(eager=True)
+             .distinct())
+    nodes = pins.checkpoint(nodes, storage_level=None)
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
-    out_deg = edges.groupBy(F.col(src).alias("node")) \
-                   .agg(F.count(F.lit(1)).alias("out_deg")) \
-                   .localCheckpoint(eager=True)
-    e = edges.select(F.col(src).alias("node"), F.col(dst).alias("to")) \
-             .join(out_deg, "node").localCheckpoint(eager=True)
+    out_deg = pins.checkpoint(
+        edges.groupBy(F.col(src).alias("node"))
+        .agg(F.count(F.lit(1)).alias("out_deg")), storage_level=None)
+    e = pins.checkpoint(
+        edges.select(F.col(src).alias("node"), F.col(dst).alias("to"))
+        .join(out_deg, "node"), storage_level=None)
 
     pr = nodes.withColumn("rank", F.lit(1.0 / n))
     base = (1.0 - damping) / n
@@ -73,7 +77,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst", *,
         # an action runs every round anyway (the stats aggregate), so
         # checkpointing every round is strictly cheaper than letting k
         # rounds of lineage recompute under each collect
-        new_pr = new_pr.localCheckpoint(eager=True)
+        new_pr = pins.checkpoint(new_pr, storage_level=None)
         # ONE action per iteration: the L1 convergence delta and the
         # NEXT round's dangling mass come out of the same aggregate
         row = (new_pr.select("node", F.col("rank").alias("r2"))

@@ -1,26 +1,33 @@
-"""Session-level registry of operator-created persisted frames.
+"""The one owner of Spark-side state that outlives an operator call.
 
-Operators that pin multi-consumer frames (``corpus.bigram_lm_profile``,
-``similarity.semantic_dedup`` — the NOTES-31/34 DISK_ONLY pin rule)
-attach the handles to their result as ``_pinned_deps``, but callers
-that wrap the result in further projections lose that attribute, and a
-long-lived session running many such queries accumulates disk-cached
-blocks until the JVM context cleaner happens to reclaim them — measured
-as a 39 GB block-manager directory after one 50-query bench session.
+| lifetime | state | owned by | freed by |
+|---|---|---|---|
+| query / job | persisted multi-consumer frames, ``track(df.persist(DISK_ONLY))`` (the NOTES-31/34 DISK_ONLY pin rule) | operators and plans that pin while a query or job is built: ``corpus``, ``similarity.semantic_dedup``, ``multimodal``, ``corpus_queries``, ``training_queries``, ``run_corpus_prep`` | ``release_all()``: the harnesses between queries (``bench.py``, ``perfbench/registry.py``, ``tools/verify_oracle.py``, ``tools/scale_bench.py``, ``tools/qbench.py``); ``run_corpus_prep`` once its shards land |
+| query / job | local checkpoints, ``checkpoint(df, eager=..., storage_level=...)`` | every query- or job-owned checkpoint: the LSH, media and BM25 substrates, ``urls.domain_cap``, ``dedup.connected_components``, ``graph.pagerank``, ``bpe.bpe_train``, ``run_corpus_prep``, q80's URL frame, q83's media encode | ``release_checkpoints()``: the same harnesses, at the same boundary |
+| session | ``memo(spark, key, build)`` values and the checkpoint a value holds | ``analytics._t`` (base-table readers), ``training_queries._scored_pairs`` (the q28/q42/q70 LSH substrate) | ``forget()``: ``tools/scale_bench.py`` per scale point, ``tools/qbench.py`` per repeat |
+| micro-batch | direct ``localCheckpoint`` calls | the incremental indexes' ``add_*``, ``dedup._batch_vs_stored_pairs``, ``IncrementalCorpusBuilder.add_batch`` / ``_global_line_stage``, ``ParquetTable._pin_batch``, the news sink | untracked: a stream never reaches a release point, so tracking would grow on every batch; Spark's context cleaner frees each batch's blocks once its frames are unreachable |
 
-Every pin is therefore ALSO tracked here; harnesses that run many
-queries in one session (bench.py, tools/scale_bench.py,
-tools/verify_oracle.py) call ``release_all()`` between queries. Safe to
-call at any time: unpersist is idempotent, lazy re-computation keeps
-results correct even if a pin is released while its frame is still
-referenced (the pin is a performance artifact, never a correctness
-one).
+Releasing a persisted pin is always safe: lazy recomputation keeps
+results correct if a pin goes while its frame is still referenced.
+Releasing a checkpoint is not: the lineage it cut cannot recompute, so
+``release_checkpoints`` and ``forget`` run only after results are
+collected or written. Checkpoint blocks are freed by RDD id
+(``unpersistRDD``); ``Dataset.unpersist`` on a checkpointed frame
+leaves them in place.
 """
 
 from __future__ import annotations
 
-_LIVE: list = []
-_LIVE_CKPT: list = []          # (spark_context, rdd_id) of localCheckpoints
+import time
+import weakref
+
+from pyspark import StorageLevel
+
+_LIVE: list = []               # query: tracked persisted frames
+_LIVE_CKPT: list = []          # query: (spark_context, rdd_id) of checkpoints
+_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()  # session: {key: value}
+_MEMO_CKPT: list = []          # session: (spark_context, rdd_id) memo values hold
+BUILD_SEC: dict = {}           # memo key -> wall seconds its build took
 
 
 def track(df):
@@ -41,46 +48,79 @@ def release_all(*, blocking: bool = False) -> int:
     return n
 
 
-def checkpoint(df, *, storage_level=None):
-    """Eager DISK_ONLY ``localCheckpoint`` with RELEASABLE blocks.
+def _rdd_id(df) -> int:
+    """The id of the RDD a checkpointed frame reads (its LogicalRDD)."""
+    return df._jdf.queryExecution().analyzed().rdd().id()
 
-    The eager-checkpoint substrate pattern (video_near_dups,
-    audio_near_dups_ber — chosen over ``persist`` where a lazy pin
-    would race across parallel consumers and evaluate the substrate
-    multiple times) truncates lineage, so its blocks are NOT covered
-    by ``release_all``'s safety contract: an unpersisted checkpoint
-    cannot lazily recompute.  Untracked, repeated calls in a
-    long-lived session accumulate disk blocks until JVM context GC
-    (round-11 advisor catch).  This wrapper records the checkpointed
-    RDD id (read race-free from the frame's own LogicalRDD plan) so
-    ``release_checkpoints`` can free the blocks deterministically.
+
+def checkpoint(df, *, eager: bool = True,
+               storage_level: StorageLevel | None = StorageLevel.DISK_ONLY):
+    """``localCheckpoint`` whose blocks ``release_checkpoints`` frees.
+
+    Eager DISK_ONLY by default (the media/LSH substrate pattern: an
+    eager cut, chosen over a lazy ``persist`` that parallel consumers
+    would race to evaluate). ``storage_level=None`` is Spark's own
+    default, MEMORY_AND_DISK *deserialized* (PySpark's
+    ``StorageLevel.MEMORY_AND_DISK`` is the serialized variant).
     """
-    from pyspark import StorageLevel
-
-    level = storage_level or StorageLevel.DISK_ONLY
-    ck = df.localCheckpoint(eager=True, storageLevel=level)
+    ck = df.localCheckpoint(eager=eager, storageLevel=storage_level)
     try:
-        rdd_id = ck._jdf.queryExecution().analyzed().rdd().id()
-        _LIVE_CKPT.append((ck.sparkSession.sparkContext, rdd_id))
-    except Exception:   # plan shape drift — leak (old behavior), don't fail
+        _LIVE_CKPT.append((ck.sparkSession.sparkContext, _rdd_id(ck)))
+    except Exception:   # plan shape drift — leave it to the context cleaner
         pass
     return ck
 
 
-def release_checkpoints(*, blocking: bool = False) -> int:
-    """Free the blocks of every tracked local checkpoint.
-
-    DESTRUCTIVE, unlike ``release_all``: frames checkpointed earlier
-    become unusable (truncated lineage cannot recompute).  Call only at
-    query boundaries — after results are collected/written — which is
-    where the harnesses (bench.py, tools/verify_oracle.py,
-    tools/scale_bench.py) already release pins.
-    """
-    n = len(_LIVE_CKPT)
-    for sc, rdd_id in _LIVE_CKPT:
+def _unpersist_rdds(held: list, blocking: bool) -> int:
+    n = len(held)
+    for sc, rdd_id in held:
         try:
             sc._jsc.sc().unpersistRDD(rdd_id, blocking)
         except Exception:  # session gone / already released — harmless
             pass
-    _LIVE_CKPT.clear()
+    held.clear()
     return n
+
+
+def release_checkpoints(*, blocking: bool = False) -> int:
+    """Free the blocks of every query-owned checkpoint; returns how
+    many. Frames checkpointed earlier become unusable."""
+    return _unpersist_rdds(_LIVE_CKPT, blocking)
+
+
+def memo(spark, key, build):
+    """``build()`` once per (session, key); later calls return the same
+    value. A checkpoint the value itself reads (``checkpoint(...)`` as
+    the build's last step) moves from the query's lifetime to the
+    session's, so ``release_checkpoints`` leaves it and ``forget`` frees
+    it; whatever else the build pinned stays query-owned. The build's
+    wall seconds land in ``BUILD_SEC[key]``.
+
+    Keyed weakly on the session, but a frame value refers to its own
+    session, so a stopped session's entries last until ``forget``."""
+    entries = _MEMO.setdefault(spark, {})
+    if key not in entries:
+        n = len(_LIVE_CKPT)
+        t0 = time.perf_counter()
+        value = build()
+        BUILD_SEC[key] = round(time.perf_counter() - t0, 3)
+        if len(_LIVE_CKPT) > n:
+            try:
+                rdd_id = _rdd_id(value)
+            except Exception:  # not a checkpointed frame
+                rdd_id = None
+            for held in _LIVE_CKPT[n:]:
+                if held[1] == rdd_id:
+                    _LIVE_CKPT.remove(held)
+                    _MEMO_CKPT.append(held)
+        entries[key] = value
+    return entries[key]
+
+
+def forget() -> int:
+    """Drop every memo of every session, free the checkpoint blocks the
+    memos held (blocking, so a timed run that follows starts clean) and
+    reset ``BUILD_SEC``; returns how many checkpoints were freed."""
+    _MEMO.clear()
+    BUILD_SEC.clear()
+    return _unpersist_rdds(_MEMO_CKPT, True)

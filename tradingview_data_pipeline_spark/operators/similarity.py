@@ -565,8 +565,7 @@ def semantic_dedup(corpus: DataFrame, id_col: str, vec_col: str,
     # path-probe collect AND every fixpoint iteration — unpinned, the
     # assignment + pairwise pipeline re-executes per consumer (measured
     # ~130 of q77's 143 s at the 200k-vector decade). DISK_ONLY, not a
-    # memory pin: `ac` is corpus-sized. Handles ride on the result as
-    # `_pinned_deps` (corpus.unpersist_pins lifecycle contract).
+    # memory pin: `ac` is corpus-sized.
     from pyspark import StorageLevel
 
     from tradingview_data_pipeline_spark.operators import pins
@@ -584,12 +583,10 @@ def semantic_dedup(corpus: DataFrame, id_col: str, vec_col: str,
              "nearest": [F.col("dist").asc(), F.col(id_col).asc()],
              "min_id": [F.col(id_col).asc()]}[keep_policy]
     w = Window.partitionBy("sd_group").orderBy(*order)
-    res = (
+    return (
         out.withColumn("keep", F.row_number().over(w) == F.lit(1))
         .select(id_col, "assigned", "dist", "sd_group", "keep")
     )
-    res._pinned_deps = [ac, pairs]
-    return res
 
 
 # ---------------------------------------------------------------------------

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tradingview_data_pipeline_spark.operators import pins
+
 #: query parameters that never change content identity (tracking)
 TRACKING_PARAM_RE = "^(utm_[a-z]+|gclid|fbclid|ref)(=|$)"
 
@@ -216,8 +218,8 @@ def domain_cap(df: DataFrame, id_col: str, url_col: str, *, k: int,
     # replaces four full recomputations; at corpus scale this is the
     # same write-once-read-four-ways stage a production pipeline would
     # materialize explicitly.
-    with_n = base.join(counts, f"{p}_domain", "left") \
-        .localCheckpoint(eager=False)
+    with_n = pins.checkpoint(base.join(counts, f"{p}_domain", "left"),
+                             eager=False, storage_level=None)
     n = F.col(f"{p}_n_domain")
     under = (with_n.where(F.coalesce(n, F.lit(0)) <= k)
              .withColumn(f"{p}_keep", F.lit(True)))

@@ -19,6 +19,7 @@ Cross-engine determinism policy (so value hashes match exactly):
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
@@ -26,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tradingview_data_pipeline_spark.functions import cleaning as fx
+from tradingview_data_pipeline_spark.operators import pins
 from tradingview_data_pipeline_spark.operators import scoring as ops
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -41,29 +43,19 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-_TABLE_DF_MEMO: dict[tuple[int, str, float], tuple[SparkSession, DataFrame]] = {}
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Base-table reader, memoized per (session, path, newest-mtime).
+    """Base-table reader, memoized per (session, path, newest-mtime)
+    with ``pins.memo``.
 
     ``spark.read.parquet`` costs ~100 ms per call on this container
     (driver-side file listing + footer schema read), and a bench pass
     issues ~100 of them. The memo returns the SAME lazy DataFrame — an
     immutable logical plan, not a result: every action still scans the
     parquet files, so no result caching is introduced. The mtime key
-    invalidates on in-place regeneration (the table_rows memo rule);
-    the identity check drops entries from a stopped session."""
+    invalidates on in-place regeneration (the table_rows rule)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (id(spark), path, _table_mtime(path))
-    hit = _TABLE_DF_MEMO.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    for k in [k for k in _TABLE_DF_MEMO if k[1] == path]:
-        del _TABLE_DF_MEMO[k]          # superseded mtime / dead session
-    df = spark.read.parquet(path)
-    _TABLE_DF_MEMO[key] = (spark, df)
-    return df
+    return pins.memo(spark, ("table", path, _table_mtime(path)),
+                     lambda: spark.read.parquet(path))
 
 
 def spread_small_scan(spark: SparkSession, df: DataFrame,
@@ -140,9 +132,6 @@ def _t_wide(spark: SparkSession, sf_dir: str, name: str,
                              rows_per_task=rows_per_task)
 
 
-_TABLE_ROWS_MEMO: dict[tuple[str, str, float], int] = {}
-
-
 def _table_mtime(path: str) -> float:
     """Newest mtime under a parquet path (file or directory) — the memo
     freshness token. A regenerated/overwritten table gets a new mtime,
@@ -165,7 +154,7 @@ def _table_mtime(path: str) -> float:
 
 def table_rows(sf_dir: str, name: str) -> int:
     """EXACT base-table row count from parquet footers, memoized per
-    (sf_dir, table, newest-mtime) — replaces the per-query ``df.count()``
+    (path, newest-mtime) — replaces the per-query ``df.count()``
     Spark action several plans used purely to size partition hints
     (advisor catch, round 9: each such action re-scanned the corpus even
     at scales where the hint is then discarded). Footer reads are
@@ -173,17 +162,15 @@ def table_rows(sf_dir: str, name: str) -> int:
     unfiltered base tables. The mtime in the key invalidates the memo
     when the table is regenerated in-place (round-11 advisor catch)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (sf_dir, name, _table_mtime(path))
-    if key not in _TABLE_ROWS_MEMO:
-        from tradingview_data_pipeline_spark.operators.merge import (
-            parquet_footer_rows,
-        )
-        # drop superseded entries for the same table so the memo stays
-        # O(tables), not O(regenerations)
-        for k in [k for k in _TABLE_ROWS_MEMO if k[:2] == (sf_dir, name)]:
-            del _TABLE_ROWS_MEMO[k]
-        _TABLE_ROWS_MEMO[key] = parquet_footer_rows([path])
-    return _TABLE_ROWS_MEMO[key]
+    return _footer_rows(path, _table_mtime(path))
+
+
+@functools.lru_cache(maxsize=256)
+def _footer_rows(path: str, mtime: float) -> int:
+    from tradingview_data_pipeline_spark.operators.merge import (
+        parquet_footer_rows,
+    )
+    return parquet_footer_rows([path])
 
 
 def _dsum(c, scale="25,6"):

@@ -166,9 +166,9 @@ def run_corpus_prep(
 
     # one LSH/clustering pass, reused by keeper-selection AND the split;
     # checkpointed, so its row count (= post-exact-dedup corpus) is free
-    clusters = dd.dedup_clusters(
+    clusters = pins.checkpoint(dd.dedup_clusters(
         exact, "doc_id", "text", k=lsh_k, bands=lsh_bands,
-        jaccard_threshold=jaccard_threshold).localCheckpoint(eager=True)
+        jaccard_threshold=jaccard_threshold), storage_level=None)
     n_exact = clusters.count()
     kept = exact.join(
         clusters.where(F.col("is_keeper")).select("doc_id"),
@@ -230,7 +230,7 @@ def run_corpus_prep(
         weights, mix_total = train_mixture
         # lazy checkpoint: the mixture's per-source count action below
         # would otherwise re-run the whole dedup->gate chain
-        final = final.localCheckpoint(eager=False)
+        final = pins.checkpoint(final, eager=False, storage_level=None)
         one = F.lit(1).cast("bigint")
         mixed = sp.mixture_sample(
             final.where(F.col("split") == "train"), "doc_id",

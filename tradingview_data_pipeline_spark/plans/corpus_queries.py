@@ -342,9 +342,7 @@ def q48_decontamination(spark, sf_dir):
                  .select(F.lit("bloom").alias("kind"), "doc_id",
                          F.col("__c").alias("v1"),
                          F.col("__n").alias("v2")))
-    out = exact_leg.unionByName(bloom_leg)
-    out._pinned_deps = [corp]
-    return out
+    return exact_leg.unionByName(bloom_leg)
 
 
 # ---------------------------------------------------------------------------
@@ -812,7 +810,7 @@ def q74_token_rarity(spark, sf_dir):
     # emit exactly one row per document, so left⋈left over d ≡ the old
     # inner join of the two left-joined outputs.
     rar = cp._token_rarity_stats(d, "doc_id", "text")
-    big, _per = cp._bigram_lm_stats(d, "doc_id", "text")
+    big = cp._bigram_lm_stats(d, "doc_id", "text")
     n = F.coalesce(F.col("n_tokens"), F.lit(0)).cast("bigint")
     zero = F.lit(0).cast("bigint")
     return (d.select("doc_id")

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from tradingview_data_pipeline_spark.operators import codecs
 from tradingview_data_pipeline_spark.operators import multimodal as mm
+from tradingview_data_pipeline_spark.operators import pins
 from tradingview_data_pipeline_spark.plans.analytics import (
     _t, _t_wide, register)
 
@@ -167,9 +168,9 @@ FROM ph
 """)
 def q83_multimodal_codecs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").select("doc_id")
-    media = (d.mapInPandas(_encode_media,
-                           "doc_id long, img binary, wav binary")
-             .localCheckpoint(eager=False))   # one encode for both legs
+    media = pins.checkpoint(                  # one encode for both legs
+        d.mapInPandas(_encode_media, "doc_id long, img binary, wav binary"),
+        eager=False, storage_level=None)
 
     img_media = media.select(
         F.col("doc_id").cast("string").alias("media_id"),

@@ -226,38 +226,23 @@ walk(doc_id, reach) AS (
 comp AS (SELECT doc_id, MIN(reach) AS cluster_id FROM walk GROUP BY doc_id)"""
 
 
-# One Jaccard-scored LSH candidate frame per (session, sf_dir), shared
-# by q28 / q42 / q70 — the md5 shingle pass and the LSH band join run
-# ONCE per session instead of once per query.  What stays cached is
-# candidates-only (bounded by the LSH funnel, a vanishing fraction of
-# the corpus at any scale); the docs-sized shingle-set pin is released
-# with the query's other checkpoints.
-_DEDUP_CACHE: dict[tuple[int, str], tuple] = {}
-
-# Wall seconds spent materializing each session-shared substrate, keyed
-# by substrate name (r13, VERDICT r12 task 9): the LSH scored-pairs
-# frame is built once per (session, sf_dir) INSIDE whichever consumer
-# touches it first (registry order: q28), so q28's bench number carries
-# the build and q42/q70 ride it. bench.py emits this dict as an
-# additive "substrates" field so a reader comparing those queries
-# across rounds can see the attribution instead of guessing.
-SUBSTRATE_BUILD_SEC: dict[str, float] = {}
+# memo key name of the shared LSH substrate (bench.py reports its build)
+LSH_SUBSTRATE = "lsh_scored_pairs"
 
 
 def _scored_pairs(spark, sf_dir):
-    key = (id(spark), sf_dir)
-    hit = _DEDUP_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    if len(_DEDUP_CACHE) >= 4:
-        for _, (_, sc) in _DEDUP_CACHE.items():
-            try:
-                sc.unpersist()
-            except Exception:
-                pass
-        _DEDUP_CACHE.clear()
-    import time as _time
-    _t0 = _time.perf_counter()
+    """The Jaccard-scored LSH candidate frame q28 / q42 / q70 share: the
+    md5 shingle pass and the LSH band join run once per session (built
+    by whichever query touches it first — registry order: q28 — and
+    timed in ``pins.BUILD_SEC``), not once per query. What the session
+    keeps is candidates-only, a vanishing fraction of the corpus at any
+    scale; the docs-sized shingle-set pin goes with the query's other
+    checkpoints."""
+    return pins.memo(spark, (LSH_SUBSTRATE, sf_dir),
+                     lambda: _build_scored_pairs(spark, sf_dir))
+
+
+def _build_scored_pairs(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     # one (doc_id, ss) set frame feeds the minhash aggregate and both
     # verify joins; pins.checkpoint is DISK_ONLY (the addendum-16 pin
@@ -267,17 +252,13 @@ def _scored_pairs(spark, sf_dir):
                                    bands=_LSH_K // _LSH_ROWS,
                                    shingles=sets)
     pre = dd.jaccard_verify(pairs, sets, "doc_id")
-    # localCheckpoint (NOT cache): it truncates the lineage, so
-    # releasing the set and pair pins at the query boundary cannot
+    # a checkpoint (NOT cache): it truncates the lineage, so releasing
+    # the set and pair pins at the query boundary cannot
     # cascade-invalidate it — a plain .cache() is dropped by Spark's
     # CacheManager once an upstream pin goes, and every downstream
-    # query would rebuild the full LSH pipeline per reference. It is
-    # not release-tracked: _DEDUP_CACHE owns its lifecycle.
-    scored = pre.localCheckpoint(eager=True)
-    _DEDUP_CACHE[key] = (spark, scored)
-    SUBSTRATE_BUILD_SEC["lsh_scored_pairs"] = round(
-        _time.perf_counter() - _t0, 3)
-    return scored
+    # query would rebuild the full LSH pipeline per reference. As the
+    # memo's value it is session-owned (freed by pins.forget).
+    return pins.checkpoint(pre, storage_level=None)
 
 
 @register("q28_lsh_near_dup", oracle=f"""
@@ -980,10 +961,10 @@ def q80_url_dedup(spark, sf_dir):
     canon = ur.canonical_url(F.col("url"))
     dom = F.when(canon.isNotNull(), ur.registered_domain(
         F.regexp_extract(canon, r"^([^/?#]*)", 1)))
-    src = (d.select("doc_id", url.alias("url"))
-           .withColumn("__canon", canon)
-           .withColumn("__dom", dom)
-           .localCheckpoint(eager=False))
+    src = pins.checkpoint(d.select("doc_id", url.alias("url"))
+                          .withColumn("__canon", canon)
+                          .withColumn("__dom", dom),
+                          eager=False, storage_level=None)
     deduped = ur.url_dedup(src, "doc_id", "url", canonical_col="__canon")
     url_leg = deduped.select(
         F.lit("url").alias("kind"), F.col("doc_id").alias("id"),

@@ -283,6 +283,7 @@ def test_cli_reports_job_status_to_webhook(spark, tmp_path, monkeypatch):
     assert "✅ **Technical Pipeline Success**" in msg
     assert "stock_data_rows: 30" in msg
     assert "codegen_classes: " in msg
+    assert "jit_ms: " in msg
 
 
 def test_cli_reconcile_detects_divergence(spark, tmp_path, capsys,
@@ -416,6 +417,29 @@ def test_corpus_prep_all_filtered_reports_zero_metrics(spark, tmp_path):
     assert m["after_near_dedup_and_quality"] == 0
     assert m["train_rows"] == m["val_rows"] == m["test_rows"] == 0
     assert m["total_tokens"] == 0
+
+
+def test_corpus_prep_frees_its_checkpoints(spark, tmp_path):
+    """Once the shards land and the metrics are read back,
+    run_corpus_prep frees its pins and checkpoints (the clusters frame,
+    the shingle and band substrates, the CC rounds): no tracked
+    checkpoint stays live and no RDD it cached is still stored."""
+    from tradingview_data_pipeline_spark.operators import pins
+    from tradingview_data_pipeline_spark.plans import corpus_pipeline
+
+    def stored():
+        return {i.id() for i in
+                spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = stored()
+    docs = _corpus_batch(spark, [(i, _variant(i % 4)) for i in range(8)]
+                         + [(9, CLEAN_DOC)])
+    m = corpus_pipeline.run_corpus_prep(spark, docs, str(tmp_path / "out"),
+                                        quality_min=0.0)
+    assert m["after_exact_dedup"] == 5
+    assert m["after_near_dedup_and_quality"] >= 2
+    assert pins._LIVE_CKPT == []
+    assert stored() <= before
 
 
 def _corpus_batch(spark, rows):

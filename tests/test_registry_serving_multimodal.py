@@ -33,6 +33,71 @@ def test_run_named_source_response_shape(spark, tmp_path):
     assert {"id"} == set(resp["data"][0].keys())
 
 
+def _screener_frame(spark):
+    """The stock_rankings column types (string, double, int, timestamp)
+    plus a long and a date, with NULLs in every nullable column."""
+    import datetime as dt
+    ts = dt.datetime(2024, 3, 1, 15, 30, 12, 345000)
+    rows = [("AAA", 81.25, 3, ts, 1_234_567_890_123, dt.date(2024, 3, 1)),
+            ("BBB", None, None, None, None, None),
+            ("CCC", 1e-7, -1, ts, -5, dt.date(1999, 12, 31)),
+            ("DDD", 12345678901.5, 0, ts, 0, dt.date(2024, 2, 29)),
+            ("EEE", -0.1, 7, ts, 42, None)]
+    return spark.createDataFrame(
+        rows, "symbol string, composite_score double, fundamental_rank int, "
+              "update_date timestamp, volume long, day date")
+
+
+def test_run_named_source_records_match_tojson(spark):
+    """Response records equal, key order included, what ``toJSON`` gave
+    for the same frame, with and without an orderBy (top-N)."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from tradingview_data_pipeline_spark.sources.registry import SourceSpec
+
+    base = _screener_frame(spark)
+    top = base.orderBy(F.desc_nulls_last("composite_score"), "symbol")
+    reg = SourceRegistry()
+    reg.add(SourceSpec("all", builder=lambda sp: base))
+    reg.add(SourceSpec("top", builder=lambda sp: top))
+    for name, df, limit, n in (("all", base, 1000, 5), ("top", top, 3, 3)):
+        data = run_named_source(spark, reg, name, limit=limit)["data"]
+        old = [json.loads(r) for r in df.limit(limit).toJSON().collect()]
+        if name == "all":
+            data = sorted(data, key=lambda r: r["symbol"])
+            old = sorted(old, key=lambda r: r["symbol"])
+            assert {"symbol": "BBB"} in data      # NULL fields omitted
+        assert len(data) == n
+        assert [list(r.items()) for r in data] == \
+            [list(r.items()) for r in old]
+
+
+def test_run_named_source_lookup_is_one_job(spark, tmp_path):
+    """A read_key-style filtered lookup over a one-file table serves in
+    exactly one Spark job."""
+    from pyspark.sql import functions as F
+
+    from tradingview_data_pipeline_spark.sources.registry import SourceSpec
+
+    path = str(tmp_path / "rankings")
+    frame = _screener_frame(spark)
+    frame.coalesce(1).write.parquet(path)
+    table = spark.read.schema(frame.schema).parquet(path)
+    reg = SourceRegistry()
+    reg.add(SourceSpec("symbol/CCC", builder=lambda sp: table.where(
+        F.col("symbol") == F.lit("CCC"))))
+    sc = spark.sparkContext
+    sc.setJobGroup("screener-lookup", "one-job probe")
+    try:
+        resp = run_named_source(spark, reg, "symbol/CCC")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [r["symbol"] for r in resp["data"]] == ["CCC"]
+    assert len(sc.statusTracker().getJobIdsForGroup("screener-lookup")) == 1
+
+
 def test_jwt_roundtrip_and_expiry():
     tok = make_jwt({"sub": "u1"}, "secret", expires_in=60, now=1000.0)
     claims = verify_jwt(tok, "secret", now=1030.0)

@@ -1,7 +1,8 @@
 """Session profile and the small-plan posture (session.py): the conf is
-built when the session is, and the posture really runs plans
-interpreted — a canary for the internal ``codegen.factoryMode`` setting
-that a Spark upgrade could stop honouring."""
+built when the session is, the JVM flags reach the driver JVM, and the
+posture really runs plans interpreted — a canary for the internal
+``codegen.factoryMode`` setting that a Spark upgrade could stop
+honouring."""
 
 import re
 
@@ -19,6 +20,27 @@ def test_local_conf_reads_cpus_at_session_build(monkeypatch):
     assert session.local_conf()["spark.sql.shuffle.partitions"] == "5"
     over = session.local_conf({"spark.sql.shuffle.partitions": "7"})
     assert over["spark.sql.shuffle.partitions"] == "7"
+
+
+def test_jvm_flags_survive_a_callers_extra_java_options():
+    conf = session.local_conf({"spark.driver.extraJavaOptions": "-Dx=1"})
+    assert conf["spark.driver.extraJavaOptions"] == "-Dx=1"
+    flags = conf["spark.driver.defaultJavaOptions"].split()
+    assert "-Xss32m" in flags and "-XX:CICompilerCount=2" in flags
+    assert "-Xss32m" in conf["spark.executor.defaultJavaOptions"].split()
+
+
+def test_live_driver_jvm_runs_the_jit_posture(spark):
+    """The flags reached the running driver JVM (read over py4j from
+    HotSpot's diagnostic bean, no Spark job), and jit_ms reads its
+    compile clock."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+    assert bean.getVMOption("CICompilerCount").getValue() == "2"
+    assert bean.getVMOption("ThreadStackSize").getValue() == "32768"
+    first = session.jit_ms(spark)
+    assert 0 < first <= session.jit_ms(spark)
 
 
 def _small_plan(spark, k):

@@ -13,8 +13,9 @@ single query's steady-state cost from session warm-up and neighbors, and
 `setJobDescription` labels make the UI/event-log attribution readable.
 Each run also reports the classes Spark generated and compiled for it
 and their Janino compile milliseconds (``codegen_classes``,
-``compile_ms``, read from the JVM's codegen counters, no Spark job), so
-a "compile less" claim can name that layer.
+``compile_ms``, read from the JVM's codegen counters), and the HotSpot
+JIT milliseconds the run cost (``jit_ms``); none of the reads runs a
+Spark job, so a "compile less" claim can name its layer.
 
 Usage:
 
@@ -62,7 +63,7 @@ def main() -> None:
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
     names = args[1:]
 
-    from tradingview_data_pipeline_spark.session import codegen_counters, get_spark
+    from tradingview_data_pipeline_spark.session import codegen_counters, get_spark, jit_ms
     from tradingview_data_pipeline_spark.operators import pins
     import __spark_entry__ as entrymod
 
@@ -81,11 +82,12 @@ def main() -> None:
     for name, fn in queries.items():
         runs = []
         cpu_runs = []
-        classes, compile_ms = [], []
+        classes, compile_ms, jit = [], [], []
         for i in range(repeats):
             spark.sparkContext.setJobDescription(f"{name} run {i}")
             c0 = _cpu_sec()
             k0, ms0 = codegen_counters(spark)
+            j0 = jit_ms(spark)
             t0 = time.perf_counter()
             try:
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -96,6 +98,7 @@ def main() -> None:
                 k1, ms1 = codegen_counters(spark)
                 classes.append(k1 - k0)
                 compile_ms.append(round(ms1 - ms0, 1))
+                jit.append(jit_ms(spark) - j0)
             except Exception as exc:  # noqa: BLE001
                 out[name] = {"error": f"{type(exc).__name__}: {exc}"[:300]}
                 break
@@ -112,7 +115,8 @@ def main() -> None:
                          "cpu_runs": cpu_runs,
                          "cpu_min": min(cpu_runs) if cpu_runs else None,
                          "codegen_classes": classes,
-                         "compile_ms": compile_ms}
+                         "compile_ms": compile_ms,
+                         "jit_ms": jit}
         print(f"{name}: {out[name]}", flush=True)
     print(json.dumps(out))
     spark.stop()

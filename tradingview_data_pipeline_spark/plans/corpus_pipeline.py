@@ -262,10 +262,13 @@ def run_corpus_prep(
             F.sum("n_tokens").alias("tokens")).collect()}
 
     # shards are on disk and metrics were read back from them — the
-    # pipeline's DISK_ONLY pins (exact frame, clustering shingles) are
-    # dead weight now; free the blocks instead of leaking them until
-    # context GC (long-lived sessions run this repeatedly)
+    # pipeline's DISK_ONLY pins (exact frame, clustering shingles) and
+    # its checkpoints (the clusters frame, the shingle and band
+    # substrates, the CC rounds) are dead weight now; free the blocks
+    # instead of leaking them until context GC (long-lived sessions run
+    # this repeatedly). The tokenize stage below reads only the shards.
     pins.release_all()
+    pins.release_checkpoints()
 
     metrics = {
         "input_rows": n_input,
@@ -295,6 +298,7 @@ def _tokenize_and_pack(spark, out_dir: str, shard_id: str,
     ``<out_dir>_tokenizer``."""
     from tradingview_data_pipeline_spark.operators import bpe
     from tradingview_data_pipeline_spark.operators import packing as pk
+    from tradingview_data_pipeline_spark.operators import pins
 
     spec, seq_len = tokenize_pack
     if not has_train:
@@ -337,6 +341,8 @@ def _tokenize_and_pack(spark, out_dir: str, shard_id: str,
         row = (spark.read.parquet(seq_dir)
                .agg(F.count(F.lit(1)), F.sum("n_real")).collect()[0])
         n_seq, packed = row[0], int(row[1] or 0)
+    # the sequences are on disk and counted: free bpe_train's checkpoints
+    pins.release_checkpoints()
     return {"train_sequences": n_seq, "seq_len": seq_len,
             "packed_tokens": packed,
             "vocab_size": len(vocab), "tokenizer_merges": len(merges)}

@@ -167,7 +167,8 @@ def main(argv: list[str] | None = None) -> None:
     import argparse
 
     from tradingview_data_pipeline_spark.notify import notify, timed_job
-    from tradingview_data_pipeline_spark.session import codegen_counters, get_spark
+    from tradingview_data_pipeline_spark.session import (
+        codegen_counters, get_spark, jit_ms)
 
     ap = argparse.ArgumentParser(prog="tradingview-data-pipeline-spark jobs")
     ap.add_argument("job", choices=["technical", "fundamental", "composite",
@@ -240,15 +241,18 @@ def main(argv: list[str] | None = None) -> None:
     def reported(name, body):
         # per-job ✅/❌ report, the reference's run_*.sh wrapper behavior:
         # a failing job still notifies (❌ + error), then propagates.
-        # codegen_classes: classes the job compiled (no Spark job to read)
+        # codegen_classes: classes the job compiled; jit_ms: HotSpot JIT
+        # time it cost (neither read runs a Spark job)
         try:
             with timed_job(name) as t:
                 classes0, _ = codegen_counters(spark)
+                jit0 = jit_ms(spark)
                 try:
                     body(t)
                 finally:
                     t.metrics["codegen_classes"] = \
                         codegen_counters(spark)[0] - classes0
+                    t.metrics["jit_ms"] = jit_ms(spark) - jit0
         finally:
             notify(t.report, args.webhook_url)
 

@@ -7,7 +7,8 @@ CORS + TrustedHost middleware, `GET /screeners`, `GET /screeners/{name}`,
 `POST /screeners/add`, `GET /health` — over the engine's SourceRegistry
 instead of Selenium downloads. Queries execute on the shared SparkSession
 (production: Spark Connect, so the API process holds no executors) and
-return ``toJSON``-shaped records exactly like the reference's
+return one JSON object per row (``to_json`` of the whole row, the
+records ``DataFrame.toJSON`` would give) exactly like the reference's
 ScreenerResponse.
 
 FastAPI is not part of the engine's hard dependencies: ``create_app`` is
@@ -164,9 +165,19 @@ class RateLimiter:
 # ---------------------------------------------------------------------------
 
 def run_named_source(spark, registry, name: str, *, limit: int = 1000) -> dict:
-    """ScreenerResponse shape: {success, data, count, timestamp}."""
+    """ScreenerResponse shape: {success, data, count, timestamp}.
+
+    Rows are serialized by ``to_json`` inside the query, so the limit
+    plans as ``CollectLimit`` (``TakeOrderedAndProject`` under an
+    ``orderBy``) and a request over a one-file table runs one Spark
+    job; ``CollectLimit`` reads further partitions in further jobs only
+    while it holds fewer than ``limit`` rows. ``toJSON`` gives the same
+    records through an RDD, which plans the limit as an exchange plus
+    ``GlobalLimit``: two jobs."""
+    from pyspark.sql import functions as F
     df = registry.load(spark, name).limit(limit)
-    data = [json.loads(r) for r in df.toJSON().collect()]
+    data = [json.loads(r[0]) for r in
+            df.select(F.to_json(F.struct("*"))).collect()]
     return {"success": True, "data": data, "count": len(data),
             "timestamp": time.strftime("%Y-%m-%dT%H:%M:%S")}
 

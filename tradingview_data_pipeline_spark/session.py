@@ -33,6 +33,35 @@ evaluation costs more per row, compiling costs a fixed price per plan,
 and ``SMALL_PLAN_MAX_ROWS`` records where the scoring jobs break even.
 The setting is session-wide while the body runs, so a concurrent job
 on the same session runs interpreted too.
+
+JIT posture. Every market job runs on a cold JVM, and HotSpot's own
+compiler threads used 38-39 s of a 90-92 s day's CPU (seed 1, 4 cores),
+more than the driver (13 s) and task (11 s) threads together. The local
+profile starts the driver JVM with ``-XX:CICompilerCount=2``, HotSpot's
+tiered minimum: one C1 and one C2 thread instead of the 3 a 4-core host
+gets by default. The second C2 thread mostly compiles code a cold unit
+never reaches again. Executor JVMs keep HotSpot's defaults, so cluster
+compute keeps its C2 throughput; in local mode, though, the driver JVM
+runs the tasks too. The flag sits in ``spark.driver.defaultJavaOptions``,
+next to ``-Xss32m``: Spark puts the default options ahead of
+``extraJavaOptions``, so a caller that sets its own
+``extraJavaOptions`` (``spark-submit --conf``, the benchmark harness)
+adds to them instead of dropping them, and the flags reach the
+benchmark's JVM with no harness change.
+
+Measured on a 4-core host only (``perfbench``, interleaved pairs with
+and without the change, steal < 1 %; runs in
+``evidence/JIT_POSTURE_PAIRS.jsonl``). Market_daily seeds 11-22, 12
+pairs: ``cpu_s`` median 97.5 -> 75.7 s (-22 %, all 12 pairs lower),
+``unit_s`` +4.5 % (4 of 12 pairs lower, inside the quartile spread of
+the runs without it); screener CPU per request 377 -> 186 ms with the
+one-job screener read. Corpus_x10 seeds 11-16, 6 pairs: ``cpu_s``
+-4 %, ``unit_s`` +4 % (1 of 6 pairs lower). Rejected in sizing runs:
+``-XX:TieredStopAtLevel=1`` (``cpu_s`` -41 % but ``unit_s`` +13 %),
+``-XX:+UseParallelGC`` and halved Tier3 thresholds (no gain over the
+flag alone). A host with more cores gets more compiler threads by
+default, so its saving may differ; it was not measured. ``jit_ms``
+reads HotSpot's cumulative compile time to attribute a span.
 """
 
 from __future__ import annotations
@@ -149,9 +178,11 @@ _LOCAL_DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     # wide scoring plans chain one WindowExec per (partition, order) spec;
-    # the default 1m thread stack overflows around ~40 chained operators
-    "spark.driver.extraJavaOptions": "-Xss32m",
-    "spark.executor.extraJavaOptions": "-Xss32m",
+    # the default 1m thread stack overflows around ~40 chained operators.
+    # In defaultJavaOptions so a caller's extraJavaOptions cannot drop
+    # them; the compiler count is the JIT posture (module docstring).
+    "spark.driver.defaultJavaOptions": "-Xss32m -XX:CICompilerCount=2",
+    "spark.executor.defaultJavaOptions": "-Xss32m",
     "spark.ui.enabled": "false",
 }
 
@@ -228,3 +259,10 @@ def codegen_counters(spark: SparkSession) -> tuple[int, float]:
     return (int(metrics.METRIC_COMPILATION_TIME().getCount()),
             gen.compileTime() / 1e6)
 
+
+def jit_ms(spark: SparkSession) -> int:
+    """Milliseconds HotSpot's JIT compilers have spent since the driver
+    JVM started (``CompilationMXBean.getTotalCompilationTime``), read
+    over py4j — no Spark job. Diff two reads to attribute a span."""
+    mgmt = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    return int(mgmt.getCompilationMXBean().getTotalCompilationTime())

@@ -125,6 +125,14 @@ def test_no_function_mutates_module_state_outside_pins():
                      f"pins.checkpoint): {sorted(bad)}")
 
 
+def test_micro_batch_entries_name_existing_functions():
+    """A dead entry would let a future localCheckpoint into any function
+    of the same name in that module."""
+    defined = {(rel, n.name) for rel, tree in _modules()
+               for n in ast.walk(tree) if isinstance(n, FUNCS)}
+    assert not MICRO_BATCH - defined, sorted(MICRO_BATCH - defined)
+
+
 def test_direct_local_checkpoints_are_micro_batch_pins():
     bad = []
     for rel, tree in _modules():

@@ -1,79 +1,9 @@
-"""Incremental rollup maintenance: batch-folded state must equal a full
-recompute, and bucket-pruned maintenance must leave untouched buckets'
-files byte-identical."""
+"""Export layouts: stable sharded training exports, range clustering and
+z-order writes whose zone maps let scans prune row groups."""
 
 import os
 
 from pyspark.sql import functions as F
-
-from tradingview_data_pipeline_spark.operators.incremental import IncrementalRollup
-
-
-def batches(spark):
-    rows1 = [(("g%d" % (i % 5)), "s%d" % (i % 2), float(i)) for i in range(100)]
-    rows2 = [(("g%d" % (i % 7)), "s%d" % (i % 2), float(i) / 3) for i in range(80)]
-    rows3 = [("g0", "s0", -5.0), ("gNEW", "s1", 42.0)]
-    schema = "g string, s string, v double"
-    return [spark.createDataFrame(r, schema) for r in (rows1, rows2, rows3)]
-
-
-def test_incremental_equals_full_recompute(spark, tmp_path):
-    bs = batches(spark)
-    roll = IncrementalRollup(spark, str(tmp_path / "roll"), ["g", "s"], "v",
-                             buckets=4)
-    for b in bs:
-        roll.update(b)
-    got = {(r["g"], r["s"]): (r["cnt"], float(r["vsum"]), r["vmin"],
-                              r["vmax"], r["vavg"])
-           for r in roll.read().collect()}
-
-    full = bs[0].unionByName(bs[1]).unionByName(bs[2])
-    exp = {(r["g"], r["s"]): (r["cnt"], float(r["vsum"]), r["vmin"],
-                              r["vmax"], r["vavg"])
-           for r in (full.groupBy("g", "s")
-                     .agg(F.count("v").alias("cnt"),
-                          F.sum(F.col("v").cast("decimal(25,6)")).alias("vsum"),
-                          F.min("v").alias("vmin"), F.max("v").alias("vmax"))
-                     .withColumn("vavg", F.col("vsum").cast("double") / F.col("cnt"))
-                     .collect())}
-    assert got == exp
-    assert ("gNEW", "s1") in got and got[("gNEW", "s1")][0] == 1
-
-
-def test_incremental_untouched_buckets_not_rewritten(spark, tmp_path):
-    path = str(tmp_path / "roll2")
-    roll = IncrementalRollup(spark, path, ["g"], "v", buckets=8)
-    seed = spark.createDataFrame(
-        [("g%d" % i, float(i)) for i in range(40)], "g string, v double")
-    roll.update(seed)
-
-    def snapshot():
-        out = {}
-        for bdir in os.listdir(path):
-            if not bdir.startswith("__bucket="):
-                continue
-            for f in os.listdir(os.path.join(path, bdir)):
-                if f.endswith(".parquet"):
-                    p = os.path.join(path, bdir, f)
-                    out[p] = os.path.getmtime(p)
-        return out
-
-    before = snapshot()
-    roll.update(spark.createDataFrame([("g1", 100.0)], "g string, v double"))
-    after = snapshot()
-    touched_dirs = {os.path.dirname(p) for p in set(before) - set(after)} | \
-                   {os.path.dirname(p) for p in set(after) - set(before)}
-    # exactly one bucket dir replaced; every other file identical path+mtime
-    assert len(touched_dirs) == 1
-    untouched_before = {p: t for p, t in before.items()
-                        if os.path.dirname(p) not in touched_dirs}
-    untouched_after = {p: t for p, t in after.items()
-                       if os.path.dirname(p) not in touched_dirs}
-    assert untouched_before == untouched_after
-    # and the state is correct after the partial rewrite
-    got = {r["g"]: (r["cnt"], r["vmax"]) for r in roll.read().collect()}
-    assert got["g1"] == (2, 100.0)
-    assert got["g0"] == (1, 0.0)
 
 
 def test_sharded_export_stable_and_one_file_per_shard(spark, tmp_path):

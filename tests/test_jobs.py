@@ -459,190 +459,6 @@ def _variant(swap_at, token="dup"):
     return " ".join(ws)
 
 
-def test_incremental_builder_url_stage(spark, tmp_path):
-    """url_col wires address-level dedup as the FIRST stage: re-crawled
-    URLs drop before any text work, within and across batches; docs
-    without a parseable URL always pass; replay converges."""
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    b = IncrementalCorpusBuilder(spark, str(tmp_path / "state"),
-                                 quality_min=0.0, url_col="url")
-    sch = "doc_id long, text string, url string"
-    m1 = b.add_batch(spark.createDataFrame([
-        (1, BASE_WORDS, "https://www.a.com/x?utm_source=s"),
-        (2, "completely different words entirely here about other topics "
-            "with many extra tokens to make shingles " * 2,
-         "http://a.com/x"),          # same canonical URL as doc 1
-        (3, _variant_text(), "no url at all"),   # passthrough
-    ], sch))
-    assert m1["url_dropped_docs"] == 1
-    assert m1["appended"] == 2 and m1["corpus_rows"] == 2
-
-    # second batch: re-crawl of doc 1's URL drops BEFORE text stages —
-    # its text is brand-new (would survive content dedup) yet never lands
-    m2 = b.add_batch(spark.createDataFrame([
-        (10, "entirely novel text that no content stage would drop "
-             "with plenty of distinct vocabulary " * 2,
-         "https://A.com/x/"),
-    ], sch))
-    assert m2 == {"batch_rows": 1, "url_dropped_docs": 1,
-                  "after_quality_and_exact": 0, "neardup_dropped": 0,
-                  "appended": 0, "corpus_rows": 2}
-    # replay converges (the echo rule)
-    m2r = b.add_batch(spark.createDataFrame([
-        (10, "entirely novel text that no content stage would drop "
-             "with plenty of distinct vocabulary " * 2,
-         "https://A.com/x/"),
-    ], sch))
-    assert m2r["appended"] == 0 and m2r["corpus_rows"] == 2
-
-
-def _variant_text():
-    return ("a fresh unrelated document with plenty of novel words "
-            "covering totally new material and nothing shared " * 2)
-
-
-def test_incremental_corpus_builder_dedups_across_batches(spark, tmp_path):
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    b = IncrementalCorpusBuilder(spark, str(tmp_path / "state"),
-                                 quality_min=0.0)
-    m1 = b.add_batch(_corpus_batch(spark, [
-        (1, BASE_WORDS),
-        (2, "completely different words entirely here about other topics "
-            "with many extra tokens to make shingles " * 2),
-    ]))
-    assert m1 == {"batch_rows": 2, "after_quality_and_exact": 2,
-                  "neardup_dropped": 0, "appended": 2, "corpus_rows": 2}
-
-    m2 = b.add_batch(_corpus_batch(spark, [
-        (3, BASE_WORDS),            # exact dup of doc 1 -> dropped
-        (4, _variant(10)),          # near-dup of doc 1 -> dropped
-        (5, "a fresh unrelated document with plenty of novel words "
-            "covering totally new material and nothing shared " * 2),
-        (6, _variant(20, "aaa")),   # near-dup of doc 1 -> dropped
-    ]))
-    assert m2["batch_rows"] == 4
-    assert m2["after_quality_and_exact"] == 3      # exact dup gone
-    assert m2["neardup_dropped"] == 2              # docs 4 and 6
-    assert m2["appended"] == 1 and m2["corpus_rows"] == 3
-    ids = sorted(r["doc_id"] for r in b.corpus.read().collect())
-    assert ids == [1, 2, 5]
-    # every corpus row carries a split and token count
-    rows = b.corpus.read().collect()
-    assert all(r["split"] in ("train", "val", "test") and r["n_tokens"] > 0
-               for r in rows)
-
-
-def test_incremental_corpus_builder_transitive_and_replay(spark, tmp_path):
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    state = str(tmp_path / "state")
-    b = IncrementalCorpusBuilder(spark, state, quality_min=0.0)
-    b.add_batch(_corpus_batch(spark, [(1, BASE_WORDS)]))
-    batch2 = _corpus_batch(spark, [(2, _variant(10))])   # dropped near-dup
-    m2 = b.add_batch(batch2)
-    assert m2["appended"] == 0 and m2["neardup_dropped"] == 1
-
-    # transitive: doc 3 matches the DROPPED doc 2's text exactly except
-    # one more swap — still a near-dup of SEEN content, must be dropped
-    ws = _variant(10).split()
-    ws[25] = "bbb"
-    m3 = b.add_batch(_corpus_batch(spark, [(3, " ".join(ws))]))
-    assert m3["appended"] == 0 and m3["neardup_dropped"] == 1
-
-    # replay idempotence: re-adding batch2 appends nothing (exact hash
-    # already in the seen store)
-    m2r = b.add_batch(batch2)
-    assert m2r["after_quality_and_exact"] == 0 and m2r["appended"] == 0
-
-    # state persists across builder instances
-    b2 = IncrementalCorpusBuilder(spark, state, quality_min=0.0)
-    m4 = b2.add_batch(_corpus_batch(spark, [(4, _variant(30, "ccc"))]))
-    assert m4["appended"] == 0 and m4["neardup_dropped"] == 1
-    assert b2.corpus.row_count() == 1
-
-
-def test_incremental_corpus_builder_within_batch_component(spark, tmp_path):
-    """A within-batch near-dup component keeps exactly its min doc_id."""
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    b = IncrementalCorpusBuilder(spark, str(tmp_path / "state"),
-                                 quality_min=0.0)
-    m = b.add_batch(_corpus_batch(spark, [
-        (10, BASE_WORDS),
-        (11, _variant(5)),
-        (12, _variant(15, "zzz")),
-    ]))
-    assert m["appended"] == 1
-    assert [r["doc_id"] for r in b.corpus.read().collect()] == [10]
-
-
-def test_incremental_builder_crash_between_commits_converges(
-        spark, tmp_path, monkeypatch):
-    """add_batch writes FOUR manifest commits (index sigs -> corpus ->
-    seen -> hash gate). A crash in ANY window between them must leave a
-    state that a plain replay of the same batch converges to the
-    no-crash result: every pre-gate write is an idempotent upsert, and
-    the gate (hashes) commits last, so an un-gated batch is always
-    fully re-processed."""
-    import pytest
-
-    from tradingview_data_pipeline_spark.operators.merge import ParquetTable
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    batch1 = [(1, BASE_WORDS),
-              (2, "completely different words entirely here about other "
-                  "topics with many extra tokens to make shingles " * 2)]
-    batch2 = [(3, BASE_WORDS),          # exact dup -> dropped
-              (4, _variant(10)),        # near-dup  -> dropped
-              (5, "a fresh unrelated document with plenty of novel words "
-                  "covering totally new material and nothing shared " * 2)]
-
-    def state_of(b):
-        return (sorted(tuple(r) for r in b.corpus.read().collect()),
-                sorted(tuple(r) for r in b.seen.read().collect()),
-                sorted(tuple(r) for r in b.hashes.read().collect()),
-                sorted(tuple(r) for r in b.index.table.read().collect()))
-
-    ref = IncrementalCorpusBuilder(spark, str(tmp_path / "ref"),
-                                   quality_min=0.0)
-    ref.add_batch(_corpus_batch(spark, batch1))
-    ref.add_batch(_corpus_batch(spark, batch2))
-    want = state_of(ref)
-
-    real = ParquetTable.merge_upsert
-    # windows: after index commit / after corpus / after seen (the
-    # crash kills commit crash_after+1 of batch 2's four)
-    for crash_after in (1, 2, 3):
-        state = str(tmp_path / f"s{crash_after}")
-        b = IncrementalCorpusBuilder(spark, state, quality_min=0.0)
-        b.add_batch(_corpus_batch(spark, batch1))
-
-        calls = {"n": 0}
-
-        def crashing(self, df, **kw):
-            calls["n"] += 1
-            if calls["n"] > crash_after:
-                raise OSError("simulated crash between batch commits")
-            return real(self, df, **kw)
-
-        monkeypatch.setattr(ParquetTable, "merge_upsert", crashing)
-        with pytest.raises(OSError, match="simulated crash"):
-            b.add_batch(_corpus_batch(spark, batch2))
-        monkeypatch.undo()
-
-        b2 = IncrementalCorpusBuilder(spark, state, quality_min=0.0)
-        m = b2.add_batch(_corpus_batch(spark, batch2))    # plain replay
-        assert state_of(b2) == want, f"window after commit {crash_after}"
-        assert m["appended"] <= 1                         # no double-adds
-
-
 def test_corpus_prep_remove_spans_stage(spark, tmp_path):
     """remove_spans=True adds the substring-level pass after document
     dedup: a shared 8-gram run between otherwise-different docs (below
@@ -669,165 +485,6 @@ def test_corpus_prep_remove_spans_stage(spark, tmp_path):
     assert texts[1].startswith(shared)                # owner keeps span
     assert shared not in texts[2]                     # copy excised
     assert "unrelated second story" in texts[2]       # tail intact
-
-
-SPAN = "one two three four five six seven eight"
-TAIL_A = ("completely separate material about alpha beta gamma delta "
-          "epsilon zeta eta theta iota kappa " * 2)
-TAIL_B = ("unrelated second story covering painting sculpture cinema "
-          "architecture poetry dance opera theatre " * 2)
-TAIL_C = ("third body of text mentioning rivers mountains valleys "
-          "deserts forests glaciers canyons islands " * 2)
-
-
-def test_incremental_builder_remove_spans_across_batches(spark, tmp_path):
-    """remove_spans=True cuts spans shared with the ALREADY-SHIPPED
-    corpus (keep-one-copy across batches: the first shipper retains),
-    and within a batch the min-doc owner retains; replayed batches cut
-    identically even with their own grams committed (owner-in-batch
-    hits are ignored)."""
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    b = IncrementalCorpusBuilder(spark, str(tmp_path / "state"),
-                                 quality_min=0.0, remove_spans=True)
-    m1 = b.add_batch(_corpus_batch(spark, [(1, SPAN + " " + TAIL_A)]))
-    assert m1["appended"] == 1 and m1["span_cut_tokens"] == 0
-
-    # doc 2 shares only the 8-word span (Jaccard far below 0.5, so it
-    # survives document-level dedup) -> the span is excised, tail kept
-    batch2 = _corpus_batch(spark, [(2, SPAN + " " + TAIL_B)])
-    m2 = b.add_batch(batch2)
-    assert m2["appended"] == 1 and m2["span_cut_tokens"] == 8
-    texts = {r["doc_id"]: r["text"] for r in b.corpus.read().collect()}
-    assert texts[1].startswith("one two three")          # shipper keeps
-    assert SPAN not in texts[2]
-    assert "unrelated second story" in texts[2]
-
-    # within-batch sharing: the min doc_id retains its copy
-    span2 = "nine ten eleven twelve thirteen fourteen fifteen sixteen"
-    m3 = b.add_batch(_corpus_batch(spark, [
-        (10, span2 + " " + TAIL_C),
-        (11, span2 + " different closing words about astronomy physics "
-             "chemistry biology geology meteorology oceanography " * 2)]))
-    assert m3["appended"] == 2 and m3["span_cut_tokens"] == 8
-    texts = {r["doc_id"]: r["text"] for r in b.corpus.read().collect()}
-    assert texts[10].startswith(span2)
-    assert span2 not in texts[11]
-
-    # replay: the hash gate blocks re-processing entirely
-    m2r = b.add_batch(batch2)
-    assert m2r["appended"] == 0 and m2r["span_cut_tokens"] == 0
-
-
-def test_incremental_builder_remove_spans_crash_converges(
-        spark, tmp_path, monkeypatch):
-    """With remove_spans the per-batch chain is FIVE commits (index ->
-    corpus -> seen -> grams -> hash gate). A crash in any window must
-    replay to the no-crash state — the gram window (4) is the
-    interesting one: the replayed batch sees its OWN committed grams
-    and must ignore them (owner-in-batch exclusion) instead of cutting
-    its first-copy spans."""
-    import pytest
-
-    from tradingview_data_pipeline_spark.operators.merge import ParquetTable
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    batch1 = [(1, SPAN + " " + TAIL_A)]
-    batch2 = [(2, SPAN + " " + TAIL_B),
-              (3, "wholly new content with no shared spans at all "
-                  "covering gardening cooking carpentry plumbing " * 2)]
-
-    def state_of(b):
-        return (sorted(tuple(r) for r in b.corpus.read().collect()),
-                sorted(tuple(r) for r in b.seen.read().collect()),
-                sorted(tuple(r) for r in b.hashes.read().collect()),
-                sorted(tuple(r) for r in b.grams.read().collect()))
-
-    ref = IncrementalCorpusBuilder(spark, str(tmp_path / "ref"),
-                                   quality_min=0.0, remove_spans=True)
-    ref.add_batch(_corpus_batch(spark, batch1))
-    ref.add_batch(_corpus_batch(spark, batch2))
-    want = state_of(ref)
-
-    real = ParquetTable.merge_upsert
-    for crash_after in (1, 2, 3, 4):
-        state = str(tmp_path / f"s{crash_after}")
-        b = IncrementalCorpusBuilder(spark, state, quality_min=0.0,
-                                     remove_spans=True)
-        b.add_batch(_corpus_batch(spark, batch1))
-
-        calls = {"n": 0}
-
-        def crashing(self, df, **kw):
-            calls["n"] += 1
-            if calls["n"] > crash_after:
-                raise OSError("simulated crash between batch commits")
-            return real(self, df, **kw)
-
-        monkeypatch.setattr(ParquetTable, "merge_upsert", crashing)
-        with pytest.raises(OSError, match="simulated crash"):
-            b.add_batch(_corpus_batch(spark, batch2))
-        monkeypatch.undo()
-
-        b2 = IncrementalCorpusBuilder(spark, state, quality_min=0.0,
-                                      remove_spans=True)
-        b2.add_batch(_corpus_batch(spark, batch2))
-        assert state_of(b2) == want, f"window after commit {crash_after}"
-
-
-def test_incremental_builder_first_batch_crash_no_false_backfill(
-        spark, tmp_path, monkeypatch):
-    """Regression (r8 review): a crash inside the FIRST batch of a
-    fresh remove_spans state dir (seen committed, gram store and hash
-    gate not) must NOT be mistaken for a legacy dir on restart — the
-    legacy backfill would derive the gate from seen and permanently
-    skip the batch's gram commits. The gate table is now created empty
-    at first init, so replay re-processes the batch fully."""
-    import pytest
-
-    from tradingview_data_pipeline_spark.operators.merge import ParquetTable
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    batch1 = [(1, SPAN + " " + TAIL_A)]
-    batch2 = [(2, SPAN + " " + TAIL_B)]
-
-    ref = IncrementalCorpusBuilder(spark, str(tmp_path / "ref"),
-                                   quality_min=0.0, remove_spans=True)
-    ref.add_batch(_corpus_batch(spark, batch1))
-    m_ref = ref.add_batch(_corpus_batch(spark, batch2))
-    assert m_ref["span_cut_tokens"] == 8
-
-    state = str(tmp_path / "state")
-    b = IncrementalCorpusBuilder(spark, state, quality_min=0.0,
-                                 remove_spans=True)
-    real = ParquetTable.merge_upsert
-    calls = {"n": 0}
-
-    def crashing(self, df, **kw):
-        calls["n"] += 1
-        if calls["n"] > 3:          # index, corpus, seen ok; grams dies
-            raise OSError("simulated crash in first batch")
-        return real(self, df, **kw)
-
-    monkeypatch.setattr(ParquetTable, "merge_upsert", crashing)
-    with pytest.raises(OSError, match="simulated crash"):
-        b.add_batch(_corpus_batch(spark, batch1))
-    monkeypatch.undo()
-
-    # restart: must NOT backfill the gate from seen (batch 1 is not
-    # gated yet); full replay re-runs it, then batch 2 cuts the span
-    b2 = IncrementalCorpusBuilder(spark, state, quality_min=0.0,
-                                  remove_spans=True)
-    m1 = b2.add_batch(_corpus_batch(spark, batch1))
-    assert m1["appended"] == 1          # replay actually re-processed
-    m2 = b2.add_batch(_corpus_batch(spark, batch2))
-    assert m2["span_cut_tokens"] == 8   # gram store converged
-    assert m2["span_dropped_docs"] == 0
-    texts = {r["doc_id"]: r["text"] for r in b2.corpus.read().collect()}
-    assert SPAN not in texts[2] and texts[1].startswith("one two")
 
 
 # --- repetition gate (Gopher/C4 within-document filters) -------------------
@@ -918,91 +575,6 @@ def test_corpus_prep_repetition_gate_unknown_signal_raises(spark, tmp_path):
         corpus_pipeline.run_corpus_prep(
             spark, docs, str(tmp_path / "out"),
             repetition_limits={"dup_7gram_frac": 0.1})
-
-
-def test_incremental_builder_repetition_gate(spark, tmp_path):
-    """The builder applies the same map-side gate per batch: repetitive
-    docs never enter the corpus OR the hash-gate table (a later clean
-    near-dup of a gated doc is judged on its own merits)."""
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    b = IncrementalCorpusBuilder(spark, str(tmp_path / "state"),
-                                 quality_min=0.0,
-                                 repetition_limits={"top_2gram_frac": 0.5})
-    m1 = b.add_batch(_corpus_batch(spark, [(1, CLEAN_DOC), (2, REPETITIVE)]))
-    assert m1["after_quality_and_exact"] == 1 and m1["appended"] == 1
-    # replay idempotence with the gate active: nothing double-enters
-    m2 = b.add_batch(_corpus_batch(spark, [(1, CLEAN_DOC), (2, REPETITIVE)]))
-    assert m2["appended"] == 0
-    assert sorted(r["doc_id"] for r in b.corpus.read().collect()) == [1]
-
-
-def test_incremental_builder_learned_quality_gate(spark, tmp_path):
-    """quality_model gates per batch with the same semantics as the
-    batch pipeline; replaying a gated doc stays gated (same model, same
-    text, same score), so replay idempotence holds with the gate on."""
-    from tradingview_data_pipeline_spark.operators import classify as cl
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    train = spark.createDataFrame(
-        [(100, CLEAN_DOC, True),
-         (101, "buy cheap pills click here winner prize spam offer", False)],
-        "doc_id long, text string, y boolean")
-    weights = cl.token_class_weights(train, "text", "y")
-    spammy = ("cheap pills spam winner prize click buy offer here today "
-              "winner cheap prize spam pills click buy offer now indeed")
-    b = IncrementalCorpusBuilder(spark, str(tmp_path / "state"),
-                                 quality_min=0.0,
-                                 quality_model=(weights, 0.0))
-    m1 = b.add_batch(_corpus_batch(spark, [(1, CLEAN_DOC), (2, spammy)]))
-    assert m1["after_quality_and_exact"] == 1 and m1["appended"] == 1
-    m2 = b.add_batch(_corpus_batch(spark, [(1, CLEAN_DOC), (2, spammy)]))
-    assert m2["appended"] == 0
-    assert sorted(r["doc_id"] for r in b.corpus.read().collect()) == [1]
-
-
-def test_incremental_builder_logreg_gate(spark, tmp_path):
-    """The LogRegModel flavor of the per-batch learned gate — loaded
-    from the save_logreg artifact, as a restart would — with the same
-    replay-idempotence contract as the NB flavor."""
-    from tradingview_data_pipeline_spark.operators import classify as cl
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    train = spark.createDataFrame(
-        [(100, CLEAN_DOC, True),
-         (101, "buy cheap pills click here winner prize spam offer", False)],
-        "doc_id long, text string, y boolean")
-    model = cl.logreg_train(train, "text", "y", n_buckets=2048,
-                            iters=25, lr=1.0)
-    cl.save_logreg(model, str(tmp_path / "lr"))
-    loaded = cl.load_logreg(spark, str(tmp_path / "lr"))
-    spammy = ("cheap pills spam winner prize click buy offer here today "
-              "winner cheap prize spam pills click buy offer now indeed")
-    b = IncrementalCorpusBuilder(spark, str(tmp_path / "state"),
-                                 quality_min=0.0,
-                                 quality_model=(loaded, 0.0))
-    m1 = b.add_batch(_corpus_batch(spark, [(1, CLEAN_DOC), (2, spammy)]))
-    assert m1["after_quality_and_exact"] == 1 and m1["appended"] == 1
-    m2 = b.add_batch(_corpus_batch(spark, [(1, CLEAN_DOC), (2, spammy)]))
-    assert m2["appended"] == 0
-    assert sorted(r["doc_id"] for r in b.corpus.read().collect()) == [1]
-
-
-def test_incremental_builder_repetition_gate_validates_at_init(tmp_path):
-    """Unknown signal names fail at construction, before any state
-    directory is created."""
-    import pytest
-
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    with pytest.raises(ValueError, match="unknown repetition signals"):
-        IncrementalCorpusBuilder(None, str(tmp_path / "state"),
-                                 repetition_limits={"nope": 0.1})
-    assert not (tmp_path / "state").exists()
 
 
 def test_parse_repetition_limits():
@@ -1142,25 +714,6 @@ def test_corpus_prep_dedupe_global_lines(spark, tmp_path):
     assert texts[1] == a_body
     assert texts[2] == b_body                       # every copy gone
     assert texts[3] == CLEAN_DOC
-
-
-def test_incremental_builder_dedupe_lines_replay(spark, tmp_path):
-    """Builder line dedup: cleaned text is what lands in the corpus AND
-    what the hash gate keys, so a replay of the same raw batch appends
-    nothing."""
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    b = IncrementalCorpusBuilder(spark, str(tmp_path / "state"),
-                                 quality_min=0.0,
-                                 dedupe_repeated_lines=True)
-    raw = CLEAN_DOC + "\n" + CLEAN_DOC.split("\n")[0]  # whole doc is 1 line; dup it
-    m1 = b.add_batch(_corpus_batch(spark, [(1, raw)]))
-    assert m1["appended"] == 1
-    stored = b.corpus.read().collect()[0]["text"]
-    assert stored == CLEAN_DOC                       # dup line removed
-    m2 = b.add_batch(_corpus_batch(spark, [(1, raw)]))
-    assert m2["appended"] == 0                       # replay no-op
 
 
 def test_corpus_prep_tokenize_pack_stage(spark, tmp_path):
@@ -1326,247 +879,3 @@ def test_corpus_prep_tokenize_pack_empty_train(spark, tmp_path):
         spark, docs, str(tmp_path / "out"), quality_min=99.0,
         tokenize_pack=(5, 16))
     assert m["train_sequences"] == 0 and m["vocab_size"] == 0
-
-
-def _mini_tokenizer(spark, texts):
-    from tradingview_data_pipeline_spark.operators import bpe
-
-    df = spark.createDataFrame(list(enumerate(texts)),
-                               "doc_id long, text string")
-    merges = bpe.bpe_train(df, "text", n_merges=10, min_pair_count=2)
-    vocab = bpe.build_vocab(merges, bpe.corpus_base_tokens(df, "text"))
-    return merges, vocab
-
-
-def test_incremental_builder_sequences_feed(spark, tmp_path):
-    """tokenizer+seq_len makes the builder a streaming training feed:
-    each batch's kept train docs become padded fixed-length sequences;
-    replaying a batch appends nothing new; a fresh batch extends the
-    table under distinct content-derived keys."""
-    from tradingview_data_pipeline_spark.operators import bpe
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    texts = [BASE_WORDS,
-             "completely different words entirely here about other "
-             "topics with many extra tokens to make shingles " * 2,
-             "a fresh unrelated document with plenty of novel words "
-             "covering totally new material and nothing shared " * 2]
-    merges, vocab = _mini_tokenizer(spark, texts)
-    mk = lambda state: IncrementalCorpusBuilder(
-        spark, str(tmp_path / state), quality_min=0.0,
-        tokenizer=(merges, vocab), seq_len=16, seq_pad_id=0)
-
-    b = mk("s")
-    m1 = b.add_batch(_corpus_batch(spark, [(1, texts[0]), (2, texts[1])]))
-    rows1 = b.sequences.read().collect()
-    assert m1["train_sequences"] == len(rows1)
-    assert all(len(r["input_ids"]) == 16 for r in rows1)
-    # sequences decode to exactly the batch's kept train docs' ids,
-    # concatenated in doc order (tail padded with 0)
-    kept_train = sorted(
-        (r["doc_id"], r["text"]) for r in b.corpus.read()
-        .where("split = 'train'").collect() if r["doc_id"] in (1, 2))
-    flat = [i for _, t in kept_train
-            for i in _encode_ids(t, merges, vocab)]
-    got = [i for r in sorted(rows1, key=lambda r: r["seq_id"])
-           for i in r["input_ids"]]
-    assert got[:len(flat)] == flat
-    assert set(got[len(flat):]) <= {0}                 # only padding
-
-    # replay: nothing new
-    m2 = b.add_batch(_corpus_batch(spark, [(1, texts[0]), (2, texts[1])]))
-    assert m2["train_sequences"] == 0
-    assert sorted(map(tuple, b.sequences.read().collect())) == \
-        sorted(map(tuple, rows1))
-
-    # a new batch extends under new keys
-    b.add_batch(_corpus_batch(spark, [(7, texts[2])]))
-    keys = {r["seq_key"] for r in b.sequences.read().collect()}
-    assert {r["seq_key"] for r in rows1} < keys
-
-
-def _encode_ids(text, merges, vocab):
-    from tradingview_data_pipeline_spark.operators import bpe
-
-    return [vocab.get(s, 0) for w in text.split()
-            for s in bpe._encode_word(w, merges)]
-
-
-def test_incremental_builder_sequences_crash_converges(
-        spark, tmp_path, monkeypatch):
-    """The sequences commit sits before the hash gate: a crash right
-    after it (gate un-advanced) must replay to the same state."""
-    import pytest
-
-    from tradingview_data_pipeline_spark.operators.merge import ParquetTable
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    texts = [BASE_WORDS,
-             "a fresh unrelated document with plenty of novel words "
-             "covering totally new material and nothing shared " * 2]
-    merges, vocab = _mini_tokenizer(spark, texts)
-    mk = lambda state: IncrementalCorpusBuilder(
-        spark, str(tmp_path / state), quality_min=0.0,
-        tokenizer=(merges, vocab), seq_len=16, seq_pad_id=0)
-
-    ref = mk("ref")
-    ref.add_batch(_corpus_batch(spark, [(1, texts[0])]))
-    ref.add_batch(_corpus_batch(spark, [(5, texts[1])]))
-    want = sorted(map(tuple, ref.sequences.read().collect()))
-
-    real = ParquetTable.merge_upsert
-    # batch 2 commits: index sigs(1), corpus(2), seen(3), sequences(4),
-    # hash gate(5) — crash both right BEFORE the sequences commit and
-    # right AFTER it (gate still un-advanced in both windows)
-    for crash_after in (3, 4):
-        state = f"s{crash_after}"
-        b = mk(state)
-        b.add_batch(_corpus_batch(spark, [(1, texts[0])]))
-        calls = {"n": 0}
-
-        def crashing(self, df, **kw):
-            calls["n"] += 1
-            if calls["n"] > crash_after:
-                raise OSError("simulated crash before gate commit")
-            return real(self, df, **kw)
-
-        monkeypatch.setattr(ParquetTable, "merge_upsert", crashing)
-        with pytest.raises(OSError, match="simulated crash"):
-            b.add_batch(_corpus_batch(spark, [(5, texts[1])]))
-        monkeypatch.undo()
-
-        b2 = mk(state)
-        b2.add_batch(_corpus_batch(spark, [(5, texts[1])]))  # plain replay
-        assert sorted(map(tuple, b2.sequences.read().collect())) == want, \
-            f"window after commit {crash_after}"
-
-
-def test_incremental_builder_tokenizer_validation(spark, tmp_path):
-    import pytest
-
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    with pytest.raises(ValueError, match="together"):
-        IncrementalCorpusBuilder(spark, str(tmp_path / "a"),
-                                 tokenizer=([], {"<unk>": 0}))
-    with pytest.raises(ValueError, match="positive"):
-        IncrementalCorpusBuilder(spark, str(tmp_path / "b"),
-                                 tokenizer=([], {"<unk>": 0}), seq_len=0)
-
-
-FOOTER = "copyright footer all rights reserved worldwide"
-
-
-def test_incremental_builder_global_lines_across_batches(spark, tmp_path):
-    """dedupe_global_lines: a line is stripped once >= min_docs distinct
-    shipped docs have carried it — forward-only (the first shipper keeps
-    its copy), within-batch prevalence counts too, and a doc emptied by
-    the strip drops with its own attribution metric."""
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    b = IncrementalCorpusBuilder(spark, str(tmp_path / "state"),
-                                 quality_min=0.0, dedupe_global_lines=2)
-    m1 = b.add_batch(_corpus_batch(spark, [(1, FOOTER + "\n" + TAIL_A)]))
-    assert m1["appended"] == 1 and m1["global_hot_lines"] == 0
-
-    # prior prevalence 1 (doc 1) + this batch = 2 -> hot; doc 2 ships
-    # stripped, doc 1's shipped copy is NOT rewritten (forward-only)
-    batch2 = _corpus_batch(spark, [(2, FOOTER + "\n" + TAIL_B)])
-    m2 = b.add_batch(batch2)
-    assert m2["appended"] == 1 and m2["global_hot_lines"] == 1
-    texts = {r["doc_id"]: r["text"] for r in b.corpus.read().collect()}
-    assert texts[1] == FOOTER + "\n" + TAIL_A
-    assert texts[2] == TAIL_B
-
-    # within-batch: a NEW line shared by two batch docs is hot already
-    banner = "subscribe to our newsletter today please"
-    m3 = b.add_batch(_corpus_batch(spark, [
-        (10, banner + "\n" + TAIL_C),
-        (11, banner + "\nentirely different closing material "
-             "about astronomy physics chemistry biology geology")]))
-    assert m3["appended"] == 2 and m3["global_hot_lines"] == 1
-    texts = {r["doc_id"]: r["text"] for r in b.corpus.read().collect()}
-    assert banner not in texts[10] and banner not in texts[11]
-
-    # a doc that is ONLY boilerplate empties and drops at the line
-    # stage (not counted as a near-dup drop)
-    m4 = b.add_batch(_corpus_batch(spark, [(20, FOOTER)]))
-    assert m4["appended"] == 0
-    assert m4["line_dropped_docs"] == 1 and m4["neardup_dropped"] == 0
-
-    # replay: the hash gate blocks re-processing entirely
-    m2r = b.add_batch(batch2)
-    assert m2r["appended"] == 0 and m2r["global_hot_lines"] == 0
-
-
-def test_incremental_builder_global_lines_crash_converges(
-        spark, tmp_path, monkeypatch):
-    """With dedupe_global_lines the per-batch chain is index -> corpus
-    -> seen -> LINES (merge_with) -> hash gate. A crash in any window
-    must replay to the no-crash state — the lines window is the
-    interesting one: the replayed batch sees its OWN committed pairs
-    and must ignore them (doc-in-batch exclusion) instead of counting
-    itself toward prevalence twice."""
-    import pytest
-
-    from tradingview_data_pipeline_spark.operators.merge import ParquetTable
-    from tradingview_data_pipeline_spark.plans.corpus_pipeline import (
-        IncrementalCorpusBuilder)
-
-    batch1 = [(1, FOOTER + "\n" + TAIL_A)]
-    batch2 = [(2, FOOTER + "\n" + TAIL_B),
-              (3, "wholly new content with no shared lines at all "
-                  "covering gardening cooking carpentry plumbing")]
-
-    def state_of(b):
-        return (sorted(tuple(r) for r in b.corpus.read().collect()),
-                sorted(tuple(r) for r in b.seen.read().collect()),
-                sorted(tuple(r) for r in b.hashes.read().collect()),
-                sorted(tuple(r) for r in b.lines.read().collect()))
-
-    ref = IncrementalCorpusBuilder(spark, str(tmp_path / "ref"),
-                                   quality_min=0.0, dedupe_global_lines=2)
-    ref.add_batch(_corpus_batch(spark, batch1))
-    ref.add_batch(_corpus_batch(spark, batch2))
-    want = state_of(ref)
-    # sanity: the reference run stripped the footer from doc 2 only
-    t = {r["doc_id"]: r["text"] for r in ref.corpus.read().collect()}
-    assert t[2] == TAIL_B and t[1].startswith(FOOTER)
-
-    real_upsert = ParquetTable.merge_upsert
-    real_with = ParquetTable.merge_with
-    for crash_after in (1, 2, 3, 4):
-        state = str(tmp_path / f"s{crash_after}")
-        b = IncrementalCorpusBuilder(spark, state, quality_min=0.0,
-                                     dedupe_global_lines=2)
-        b.add_batch(_corpus_batch(spark, batch1))
-
-        calls = {"n": 0}
-
-        def bump():
-            calls["n"] += 1
-            if calls["n"] > crash_after:
-                raise OSError("simulated crash between batch commits")
-
-        def crashing_upsert(self, df, **kw):
-            bump()
-            return real_upsert(self, df, **kw)
-
-        def crashing_with(self, df, combine, **kw):
-            bump()
-            return real_with(self, df, combine, **kw)
-
-        monkeypatch.setattr(ParquetTable, "merge_upsert", crashing_upsert)
-        monkeypatch.setattr(ParquetTable, "merge_with", crashing_with)
-        with pytest.raises(OSError, match="simulated crash"):
-            b.add_batch(_corpus_batch(spark, batch2))
-        monkeypatch.undo()
-
-        b2 = IncrementalCorpusBuilder(spark, state, quality_min=0.0,
-                                      dedupe_global_lines=2)
-        b2.add_batch(_corpus_batch(spark, batch2))
-        assert state_of(b2) == want, f"window after commit {crash_after}"

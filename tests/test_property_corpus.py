@@ -318,47 +318,8 @@ def test_pack_token_sequences_matches_model(spark, rows, seq_len, pad):
 
 
 # ---------------------------------------------------------------------------
-# round-9 additions: containment_pairs and rrf_fuse vs direct Python
-# transcriptions of their documented semantics
+# rrf_fuse vs a direct Python transcription of its documented semantics
 # ---------------------------------------------------------------------------
-
-doc_words = st.lists(st.sampled_from(WORDS), min_size=0, max_size=14)
-
-
-@settings(max_examples=12, deadline=None)
-@given(st.lists(doc_words, min_size=2, max_size=6),
-       st.integers(min_value=2, max_value=4))
-def test_containment_matches_python_reference(spark, docs, cap):
-    from tradingview_data_pipeline_spark.operators import dedup as dd
-    texts = [" ".join(ws) for ws in docs]
-    n = 3
-    gram_sets = []
-    for ws in docs:
-        gs = {" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)}
-        gram_sets.append(gs)
-    df_count = Counter(g for gs in gram_sets for g in gs)
-    universe = {g for g, c in df_count.items() if 2 <= c <= cap}
-    expect = {}
-    for a, ga in enumerate(gram_sets):
-        ua = ga & universe
-        if not ua:
-            continue
-        for b, gb in enumerate(gram_sets):
-            if a == b:
-                continue
-            shared = len(ua & gb & universe)
-            c = shared / len(ua)
-            if c >= 0.3:
-                expect[(a, b)] = (shared, len(ua), c)
-    df = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string")
-    got = {(r["doc_id"], r["partner_doc_id"]):
-           (r["shared"], r["n_grams"], r["containment"])
-           for r in dd.containment_pairs(
-               df, "doc_id", "text", n=n, threshold=0.3,
-               max_gram_docs=cap).collect()}
-    assert got == expect
-
 
 rank_list = st.lists(st.integers(min_value=0, max_value=9),
                      min_size=1, max_size=8, unique=True)

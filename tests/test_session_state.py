@@ -23,14 +23,7 @@ SF = "/root/testdata/sf0.001"
 REGISTRIES = {("plans/analytics.py", "QUERIES"), ("plans/analytics.py", "ORACLE"),
               ("operators/multimodal.py", "_DECODER")}
 # functions that pin one micro-batch's frames with a direct localCheckpoint
-MICRO_BATCH = {("operators/dedup.py", "_batch_vs_stored_pairs"),
-               ("operators/dedup.py", "add_and_pairs"),
-               ("operators/dedup.py", "add_and_find"),
-               ("operators/similarity.py", "add_and_find"),
-               ("operators/urls.py", "add_and_filter"),
-               ("plans/corpus_pipeline.py", "add_batch"),
-               ("plans/corpus_pipeline.py", "_global_line_stage"),
-               ("operators/merge.py", "_pin_batch"),
+MICRO_BATCH = {("operators/merge.py", "_pin_batch"),
                ("streaming/news_dedup.py", "sink")}
 CONTAINER_CALLS = {"dict", "list", "set", "defaultdict", "OrderedDict", "deque",
                    "Counter", "WeakKeyDictionary", "WeakValueDictionary"}

@@ -176,352 +176,6 @@ def test_luhn_validation(spark):
     assert got == {1: True, 2: False, 3: True, 4: False, 5: False}
 
 
-def test_incremental_neardup_index(spark, tmp_path):
-    base = "the quick brown fox jumps over the lazy dog and runs far away today"
-    other = "completely different content about spark window aggregation internals"
-    path = str(tmp_path / "ix")
-    idx = dd.IncrementalNearDupIndex(spark, path, buckets=4)
-
-    p1 = {(r["doc_a"], r["doc_b"]) for r in idx.add_and_find(
-        spark.createDataFrame([(1, base), (2, other)],
-                              "doc_id long, text string")).collect()}
-    assert p1 == set()                        # unrelated docs: no pairs
-
-    # batch 2: exact copies of both -> cross pairs against the INDEX,
-    # and the old×old pair (1,2) must never be (re)reported
-    p2 = {(r["doc_a"], r["doc_b"]) for r in idx.add_and_find(
-        spark.createDataFrame([(3, base), (4, other)],
-                              "doc_id long, text string")).collect()}
-    assert {(1, 3), (2, 4)} <= p2
-    assert (1, 2) not in p2
-
-    # persistence: a fresh handle on the same path knows docs 1-4;
-    # incremental cost excludes the (1,3) pair already reported
-    idx2 = dd.IncrementalNearDupIndex(spark, path, buckets=4)
-    p3 = {(r["doc_a"], r["doc_b"]) for r in idx2.add_and_find(
-        spark.createDataFrame([(5, base)],
-                              "doc_id long, text string")).collect()}
-    assert {(1, 5), (3, 5)} <= p3
-    assert (1, 3) not in p3 and (2, 4) not in p3
-
-    # re-adding a doc refreshes its signature instead of duplicating it
-    assert idx2.table.read().count() == 5
-    idx2.add_and_find(spark.createDataFrame(
-        [(5, other)], "doc_id long, text string"))
-    assert idx2.table.read().count() == 5
-
-
-def test_incremental_simhash_index(spark, tmp_path):
-    base = "the quick brown fox jumps over the lazy dog and runs far away today"
-    other = "completely different content about spark window aggregation internals"
-    path = str(tmp_path / "shx")
-    idx = dd.IncrementalSimHashIndex(spark, path, buckets=4)
-
-    p1 = {(r["doc_a"], r["doc_b"]) for r in idx.add_and_find(
-        spark.createDataFrame([(1, base), (2, other)],
-                              "doc_id long, text string")).collect()}
-    assert p1 == set()
-
-    # exact copies arrive later: hamming-0 pairs against the INDEX;
-    # the old x old pair is never re-reported
-    p2 = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in idx.add_and_find(
-        spark.createDataFrame([(3, base), (4, other)],
-                              "doc_id long, text string")).collect()}
-    assert p2.get((1, 3)) == 0 and p2.get((2, 4)) == 0
-    assert (1, 2) not in p2
-
-    # persistence across handles; previously-reported pairs excluded
-    idx2 = dd.IncrementalSimHashIndex(spark, path, buckets=4)
-    p3 = {(r["doc_a"], r["doc_b"]) for r in idx2.add_and_find(
-        spark.createDataFrame([(5, base)],
-                              "doc_id long, text string")).collect()}
-    assert {(1, 5), (3, 5)} <= p3 and (1, 3) not in p3
-    assert idx2.table.read().count() == 5
-
-
-def test_incremental_index_stored_side_unshuffled(spark, tmp_path,
-                                                  monkeypatch):
-    """The O(batch) plan contract (round-8 fix): ``add_and_find`` must
-    never shuffle the stored signature table — its parquet scan streams
-    under broadcast joins (anti-join on batch ids, semi-prune to
-    touched buckets). Audited from the ACTUAL code path by intercepting
-    the eager checkpoints ``_batch_vs_stored_pairs`` pins: the only
-    captured plan that reads parquet is the stored-side survivor frame,
-    and it must be all-broadcast, shuffle-free."""
-    # patch the CONCRETE class (pyspark.sql.DataFrame is an ABC in 4.x)
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    base = "the quick brown fox jumps over the lazy dog and runs far away today"
-    idx = dd.IncrementalNearDupIndex(spark, str(tmp_path / "pix"), buckets=4)
-    idx.add_and_find(spark.createDataFrame(
-        [(i, f"{base} tail {i}") for i in range(8)],
-        "doc_id long, text string"))
-
-    plans = []
-    real = DataFrame.localCheckpoint
-
-    def capturing(self, eager=True, **kwargs):
-        plans.append(self._jdf.queryExecution().executedPlan().toString())
-        return real(self, eager=eager, **kwargs)
-
-    monkeypatch.setattr(DataFrame, "localCheckpoint", capturing)
-    got = {(r["doc_a"], r["doc_b"]) for r in idx.add_and_find(
-        spark.createDataFrame([(100, base + " tail 0")],
-                              "doc_id long, text string")).collect()}
-    monkeypatch.undo()
-    assert (0, 100) in got                    # behavior unchanged
-
-    def scan_ancestors(plan: str) -> list[str]:
-        """Operators ABOVE each parquet scan in the printed tree (the
-        path the scanned rows flow through), by indentation walk."""
-        lines = plan.splitlines()
-
-        def indent(ln):
-            body = ln.lstrip(" :+-*(0123456789)")
-            return len(ln) - len(body)
-
-        out = []
-        for i, ln in enumerate(lines):
-            if "parquet" not in ln:
-                continue
-            cur = indent(ln)
-            for j in range(i - 1, -1, -1):
-                ij = indent(lines[j])
-                if ij < cur:
-                    out.append(lines[j].strip(" :+-"))
-                    cur = ij
-        return out
-
-    stored_plans = [p for p in plans if "parquet" in p]
-    assert stored_plans                       # the stored side WAS read
-    for p in stored_plans:
-        anc = scan_ancestors(p)
-        assert anc and any("BroadcastHashJoin" in a for a in anc)
-        # no shuffle/sort between the stored scan and its joins: the
-        # only Exchange allowed anywhere on the scan's path is the
-        # broadcast of the (tiny) batch side, which sits on the BUILD
-        # side, never above the scan
-        for a in anc:
-            assert "Exchange" not in a, a
-            assert "SortMergeJoin" not in a and "Sort " not in a, a
-
-
-def test_incremental_neardup_banded_store_mode(spark, tmp_path):
-    """banded_store=True must behave exactly like the scan mode across
-    batches (same pair sets), honor the re-add refresh contract, and
-    persist across handles — while reading only touched bucket
-    directories per trigger (BandedBucketStore)."""
-    import random
-    rng = random.Random(11)
-    vocab = [f"w{i}" for i in range(40)]
-
-    def text(i):
-        rng2 = random.Random(i % 17)           # collision-rich corpus
-        return " ".join(rng2.choices(vocab, k=20))
-
-    batches = [[(j, text(j)) for j in range(b * 7, b * 7 + 7)]
-               for b in range(4)]
-
-    scan = dd.IncrementalNearDupIndex(spark, str(tmp_path / "scan"),
-                                      buckets=4)
-    band = dd.IncrementalNearDupIndex(spark, str(tmp_path / "band"),
-                                      buckets=4, banded_store=True)
-    for rows in batches:
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        got_s = {(r["doc_a"], r["doc_b"])
-                 for r in scan.add_and_find(df).collect()}
-        df2 = spark.createDataFrame(rows, "doc_id long, text string")
-        got_b = {(r["doc_a"], r["doc_b"])
-                 for r in band.add_and_find(df2).collect()}
-        assert got_b == got_s
-
-    # re-add doc 0 with DIFFERENT text: both modes refresh the
-    # signature (row count stable) and report the same new pairs
-    redo = [(0, text(3))]
-    got_s = {(r["doc_a"], r["doc_b"]) for r in scan.add_and_find(
-        spark.createDataFrame(redo, "doc_id long, text string")).collect()}
-    got_b = {(r["doc_a"], r["doc_b"]) for r in band.add_and_find(
-        spark.createDataFrame(redo, "doc_id long, text string")).collect()}
-    assert got_b == got_s
-    assert band.table.read().count() == scan.table.read().count() == 28
-
-    # persistence: a fresh banded handle continues identically
-    scan2 = dd.IncrementalNearDupIndex(spark, str(tmp_path / "scan"),
-                                       buckets=4)
-    band2 = dd.IncrementalNearDupIndex(spark, str(tmp_path / "band"),
-                                       buckets=4, banded_store=True)
-    more = [(100, text(5))]
-    got_s = {(r["doc_a"], r["doc_b"]) for r in scan2.add_and_find(
-        spark.createDataFrame(more, "doc_id long, text string")).collect()}
-    got_b = {(r["doc_a"], r["doc_b"]) for r in band2.add_and_find(
-        spark.createDataFrame(more, "doc_id long, text string")).collect()}
-    assert got_b == got_s and got_b
-
-
-def test_incremental_banded_store_migration(spark, tmp_path):
-    """Enabling banded_store on an index that already has signatures:
-    rebuild_store derives the membership store from the signature
-    table, after which pairs match a store maintained incrementally
-    from the start."""
-    base = "the quick brown fox jumps over the lazy dog and runs far away today"
-    path = str(tmp_path / "mig")
-    plain = dd.IncrementalNearDupIndex(spark, path, buckets=4)
-    plain.add_and_find(spark.createDataFrame(
-        [(i, f"{base} tail {i}") for i in range(6)],
-        "doc_id long, text string"))
-
-    up = dd.IncrementalNearDupIndex(spark, path, buckets=4,
-                                    banded_store=True)
-    up.rebuild_store()
-    got = {(r["doc_a"], r["doc_b"]) for r in up.add_and_find(
-        spark.createDataFrame([(100, base + " tail 0")],
-                              "doc_id long, text string")).collect()}
-    assert (0, 100) in got                       # stored side consulted
-
-
-def test_incremental_simhash_banded_store_mode(spark, tmp_path):
-    """SimHash banded_store: same (pair, hamming) sets as the scan
-    mode across batches — the signature rides the store's payload
-    slot so the radius filter runs on the pair set only."""
-    base = "the quick brown fox jumps over the lazy dog and runs far away today"
-    texts = [base, "completely different content about spark window "
-                   "aggregation internals", base + " small twist",
-             "yet another unrelated piece of writing entirely"]
-    batches = [[(1, texts[0]), (2, texts[1])],
-               [(3, texts[0]), (4, texts[2])],
-               [(5, texts[3]), (6, texts[2])]]
-    scan = dd.IncrementalSimHashIndex(spark, str(tmp_path / "s"), buckets=4)
-    band = dd.IncrementalSimHashIndex(spark, str(tmp_path / "b"),
-                                      buckets=4, banded_store=True)
-    for rows in batches:
-        got_s = {(r["doc_a"], r["doc_b"], r["hamming"])
-                 for r in scan.add_and_find(spark.createDataFrame(
-                     rows, "doc_id long, text string")).collect()}
-        got_b = {(r["doc_a"], r["doc_b"], r["hamming"])
-                 for r in band.add_and_find(spark.createDataFrame(
-                     rows, "doc_id long, text string")).collect()}
-        assert got_b == got_s
-    assert band.table.read().count() == 6
-
-
-def test_incremental_embedding_banded_store_mode(spark, tmp_path):
-    """Embedding banded_store: same candidate pair sets as the scan
-    mode across batches, including the planted near-identical
-    vectors."""
-    import random
-
-    import tradingview_data_pipeline_spark.operators.similarity as sim
-
-    def vec(seed):
-        r = random.Random(seed)
-        return [r.uniform(-1, 1) for _ in range(8)]
-
-    rows_of = lambda ids_seeds: [(i, vec(s)) for i, s in ids_seeds]
-    batches = [rows_of([(1, 10), (2, 20)]),
-               rows_of([(3, 10), (4, 30)]),       # 3 ~ 1
-               rows_of([(5, 20), (6, 40)])]       # 5 ~ 2
-    mk = lambda p, **kw: sim.IncrementalEmbeddingIndex(
-        spark, p, bits=24, bands=4, dim=8, **kw)
-    scan, band = mk(str(tmp_path / "es")), mk(str(tmp_path / "eb"),
-                                              banded_store=True)
-    for rows in batches:
-        df1 = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        df2 = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        got_s = {(r["id_a"], r["id_b"])
-                 for r in scan.add_and_find(df1).collect()}
-        got_b = {(r["id_a"], r["id_b"])
-                 for r in band.add_and_find(df2).collect()}
-        assert got_b == got_s
-    # identical vectors share every band key: the cross-batch pair is
-    # guaranteed, proving the stored side was actually consulted
-    assert (2, 5) in got_b
-
-
-def test_banded_store_cap_nulls_existing_membership(spark, tmp_path):
-    """Regression (r8 review): when a bucket CROSSES max_bucket its
-    membership array must actually be nulled in the persisted row —
-    merge_upsert's NULL-coalesce silently kept the stale array (so the
-    bucket could later re-admit with members missing); the store now
-    replaces matched rows verbatim, and the cap is sticky."""
-    base = "the quick brown fox jumps over the lazy dog runs far away today"
-    idx = dd.IncrementalNearDupIndex(spark, str(tmp_path / "cap"),
-                                     buckets=4, banded_store=True,
-                                     max_bucket=2)
-    idx.add_and_find(spark.createDataFrame(
-        [(1, base), (2, base)], "doc_id long, text string"))
-    rows = {r["bk"]: r for r in idx.store.table.read().collect()}
-    assert all(r["docs"] is not None and r["n"] == 2
-               for r in rows.values())
-
-    # third identical doc: pop 3 > 2 -> every bucket caps; the
-    # persisted rows must carry docs=NULL, not the stale 2-arrays
-    idx.add_and_find(spark.createDataFrame(
-        [(3, base)], "doc_id long, text string"))
-    rows = {r["bk"]: r for r in idx.store.table.read().collect()}
-    assert all(r["docs"] is None and r["n"] == 3 for r in rows.values())
-
-    # sticky: a fourth doc pairs with nothing through capped buckets
-    got = {(r["doc_a"], r["doc_b"]) for r in idx.add_and_find(
-        spark.createDataFrame([(4, base)],
-                              "doc_id long, text string")).collect()}
-    assert got == set()
-    rows = {r["bk"]: r for r in idx.store.table.read().collect()}
-    assert all(r["docs"] is None and r["n"] == 4 for r in rows.values())
-
-
-def test_incremental_neardup_banded_store_crash_replay(spark, tmp_path,
-                                                       monkeypatch):
-    """The store commits BEFORE the signature table; a crash in that
-    window leaves the store one batch ahead. A replay of the same
-    batch must produce the same pairs as a no-crash run and converge
-    both tables (set-merge update is idempotent; the store's batch
-    entries cannot self-pair)."""
-    import pytest
-
-    from tradingview_data_pipeline_spark.operators.merge import ParquetTable
-
-    base = "the quick brown fox jumps over the lazy dog runs far away today"
-    batch1 = [(1, base), (2, "entirely different content about spark "
-                             "window aggregation internals right here")]
-    batch2 = [(3, base), (4, base + " with a small twist at the end")]
-
-    ref = dd.IncrementalNearDupIndex(spark, str(tmp_path / "ref"),
-                                     buckets=4, banded_store=True)
-    ref.add_and_find(spark.createDataFrame(batch1,
-                                           "doc_id long, text string"))
-    want_pairs = {(r["doc_a"], r["doc_b"]) for r in ref.add_and_find(
-        spark.createDataFrame(batch2, "doc_id long, text string")).collect()}
-    want_sigs = {tuple(r) for r in ref.table.read().collect()}
-
-    idx = dd.IncrementalNearDupIndex(spark, str(tmp_path / "crash"),
-                                     buckets=4, banded_store=True)
-    idx.add_and_find(spark.createDataFrame(batch1,
-                                           "doc_id long, text string"))
-
-    real = ParquetTable.merge_upsert
-    calls = {"n": 0}
-
-    def crashing(self, df, **kw):
-        calls["n"] += 1
-        # the store commits first via merge_with; the FIRST
-        # merge_upsert of the batch is the signature commit — dying
-        # here leaves the store one batch ahead
-        if calls["n"] == 1:
-            raise OSError("simulated crash between store and signatures")
-        return real(self, df, **kw)
-
-    monkeypatch.setattr(ParquetTable, "merge_upsert", crashing)
-    with pytest.raises(OSError, match="simulated crash"):
-        idx.add_and_find(spark.createDataFrame(
-            batch2, "doc_id long, text string"))
-    monkeypatch.undo()
-
-    got = {(r["doc_a"], r["doc_b"]) for r in idx.add_and_find(
-        spark.createDataFrame(batch2, "doc_id long, text string")).collect()}
-    assert got == want_pairs
-    assert {tuple(r) for r in idx.table.read().collect()} == want_sigs
-
-
 def test_simhash_table_identical_to_column_form(spark):
     """The numpy mapInPandas signature path must be integer-identical to
     the column form ``dd.simhash`` — including groups that STRADDLE
@@ -551,90 +205,6 @@ def test_simhash_table_identical_to_column_form(spark):
         "doc_id", dd.simhash(F.col("text"), 60).alias("s")).collect()}
     assert got_a == got_c
     assert got_a[900] is None and got_a[901] is None
-
-
-def _parquet_files(path):
-    import os
-    return [os.path.join(root, n) for root, _, names in os.walk(path)
-            for n in names if n.endswith(".parquet")]
-
-
-def test_incremental_index_compaction(spark, tmp_path):
-    """compact() bounds the signature table's file count without
-    changing any result: post-compact reads and add_and_find pairs are
-    identical, and the rewrite is crash-safe (manifest commit)."""
-    import os
-
-    base = "the quick brown fox jumps over the lazy dog and runs far away today"
-    path = str(tmp_path / "cix")
-    idx = dd.IncrementalNearDupIndex(spark, path, buckets=4)
-    for i in range(6):
-        idx.add_and_find(spark.createDataFrame(
-            [(i, f"{base} variant {i} unique tail {i}")],
-            "doc_id long, text string"))
-    # force the many-small-files state a batch-cadence table accumulates
-    # (at test scale AQE coalesces every write to one file per bucket,
-    # so build the fragmentation explicitly through the public API)
-    idx.table.overwrite(idx.table.read().repartition(6))
-    before_rows = {tuple(r) for r in idx.table.read().collect()}
-    n_before = len(_parquet_files(path))
-    assert n_before > 4                       # genuinely fragmented
-
-    idx.compact()
-    assert {tuple(r) for r in idx.table.read().collect()} == before_rows
-    n_after = len(_parquet_files(path))
-    assert n_after < n_before
-    assert n_after <= 4                       # <= one file per live bucket
-
-    # the index keeps working identically after compaction
-    pairs = {(r["doc_a"], r["doc_b"]) for r in idx.add_and_find(
-        spark.createDataFrame([(100, base + " variant 0 unique tail 0")],
-                              "doc_id long, text string")).collect()}
-    assert (0, 100) in pairs
-
-
-def test_compaction_crash_leaves_consistent_snapshot(spark, tmp_path,
-                                                     monkeypatch):
-    import json
-    import os
-
-    base = "the quick brown fox jumps over the lazy dog and runs far away today"
-    path = str(tmp_path / "crx")
-    idx = dd.IncrementalSimHashIndex(spark, path, buckets=4)
-    for i in range(4):
-        idx.add_and_find(spark.createDataFrame(
-            [(i, f"{base} tail {i}")], "doc_id long, text string"))
-    before_rows = {tuple(r) for r in idx.table.read().collect()}
-    manifest_before = json.load(open(os.path.join(path, "_manifest.json")))
-
-    real = os.rename
-    calls = {"n": 0}
-
-    def crashing(src, dst):
-        if "__bucket=" in str(src):
-            calls["n"] += 1
-            if calls["n"] == 2:
-                raise OSError("simulated crash in compaction publish")
-        return real(src, dst)
-
-    monkeypatch.setattr(os, "rename", crashing)
-    import pytest as _pt
-    with _pt.raises(OSError, match="simulated crash"):
-        idx.compact()
-    monkeypatch.undo()
-
-    # crash before the commit: exact old snapshot, manifest untouched
-    assert json.load(open(os.path.join(path, "_manifest.json"))) \
-        == manifest_before
-    assert {tuple(r) for r in idx.table.read().collect()} == before_rows
-
-    idx.compact()                              # re-run converges + GCs
-    assert {tuple(r) for r in idx.table.read().collect()} == before_rows
-    live = set(json.load(open(os.path.join(path, "_manifest.json")))
-               ["buckets"].values())
-    orphans = [n for n in os.listdir(path)
-               if os.path.isdir(os.path.join(path, n)) and n not in live]
-    assert orphans == []
 
 
 def test_simhash_banded_retrieval_pigeonhole_and_filter(spark):
@@ -1027,58 +597,6 @@ def test_embedding_near_dups_lsh_size_hint_resizes_keys(spark):
     assert rows[2].neardup_n >= 1 and rows[17].neardup_n >= 1
 
 
-def test_incremental_embedding_index(spark, tmp_path):
-    import numpy as np
-    path = str(tmp_path / "eix")
-    idx = sim.IncrementalEmbeddingIndex(spark, path, bits=24, bands=4, dim=8,
-                                        buckets=4)
-    m = _unit_vectors(8, dim=8)
-
-    def batch(ids_rows):
-        return spark.createDataFrame(
-            [(i, [float(x) for x in row]) for i, row in ids_rows],
-            "vec_id bigint, embedding array<float>")
-
-    # batch 1: unrelated vectors -> no candidate pairs expected at this
-    # bit width for 8-dim randoms
-    p1 = {(r.id_a, r.id_b) for r in
-          idx.add_and_find(batch([(i, m[i]) for i in range(4)])).collect()}
-
-    # batch 2: vector 10 is an exact copy of stored vector 2 -> the
-    # cross-batch pair must appear; old×old pairs never (re)appear
-    p2 = {(r.id_a, r.id_b) for r in
-          idx.add_and_find(batch([(10, m[2]), (11, m[5])])).collect()}
-    assert (2, 10) in p2
-    assert not (p1 & p2)
-
-    # verification stays with the caller: exact cosine on the union frame
-    allv = batch([(i, m[i]) for i in range(4)] + [(10, m[2]), (11, m[5])])
-    good = sim.cosine_verify_pairs(
-        spark.createDataFrame(sorted(p2), "id_a long, id_b long"),
-        allv, "vec_id", "embedding", threshold=0.99).collect()
-    assert [(r.id_a, r.id_b) for r in good] == [(2, 10)]
-
-    # persistence + idempotence: fresh handle, re-adding vec 10 reports
-    # its pair again (signature refresh), never an old×old pair
-    idx2 = sim.IncrementalEmbeddingIndex(spark, path, bits=24, bands=4,
-                                         dim=8, buckets=4)
-    p3 = {(r.id_a, r.id_b) for r in
-          idx2.add_and_find(batch([(10, m[2])])).collect()}
-    assert (2, 10) in p3 and all(10 in pr for pr in p3)
-
-    # compaction: results identical afterwards, file count bounded
-    import os
-    def live_files():
-        return sum(len([f for f in files if f.endswith(".parquet")])
-                   for _, _, files in os.walk(path))
-    before = live_files()
-    idx2.compact()
-    assert live_files() <= before
-    p4 = {(r.id_a, r.id_b) for r in
-          idx2.add_and_find(batch([(12, m[2])])).collect()}
-    assert (2, 12) in p4 and (10, 12) in p4
-
-
 def test_embedding_lsh_null_vectors_dropped(spark):
     df = spark.createDataFrame(
         [(0, [1.0, 0.0, 0.0, 0.0]), (1, None), (2, [0.0, 1.0, 0.0, 0.0])],
@@ -1089,29 +607,6 @@ def test_embedding_lsh_null_vectors_dropped(spark):
     out = sim.embedding_near_dups_lsh(df, "vec_id", "embedding",
                                       threshold=0.9, bits=8, bands=2, dim=4)
     assert {r.vec_id for r in out.collect()} == {0, 2}
-
-
-def test_incremental_embedding_index_duplicate_id_in_batch(spark, tmp_path):
-    # a duplicated vec_id within one batch must not interleave band
-    # structs into a corrupted signature (review finding, round 6)
-    m = _unit_vectors(3, dim=8)
-    path = str(tmp_path / "eix_dup")
-    idx = sim.IncrementalEmbeddingIndex(spark, path, bits=24, bands=4, dim=8)
-
-    def batch(rows):
-        return spark.createDataFrame(
-            [(i, [float(x) for x in m[j]]) for i, j in rows],
-            "vec_id bigint, embedding array<float>")
-
-    idx.add_and_find(batch([(0, 0), (0, 0), (1, 1)]))   # 0 duplicated
-    stored = {r.vec_id: [r[f"p{j}"] for j in range(4)]
-              for r in idx.table.read().collect()}
-    clean = sim.IncrementalEmbeddingIndex(spark, str(tmp_path / "eix_c"),
-                                          bits=24, bands=4, dim=8)
-    clean.add_and_find(batch([(0, 0), (1, 1)]))
-    expect = {r.vec_id: [r[f"p{j}"] for j in range(4)]
-              for r in clean.table.read().collect()}
-    assert stored == expect
 
 
 def test_embedding_lsh_rejects_oversized_chunk(spark):
@@ -1357,337 +852,6 @@ def test_pca_artifact_round_trip(spark, tmp_path):
     p1 = {r["id"]: r["vec"] for r in
           sim.pca_project(df, "vec", back).collect()}
     assert p0 == p1
-
-
-def test_incremental_pca_equals_batch_fit(spark, tmp_path):
-    """Three batches folded into the store derive a model bit-identical
-    to pca_fit over the concatenation; replay is a no-op; the store
-    persists across handles; dimension mismatch fails loudly."""
-    import numpy as np
-
-    rows = _planted_vectors(n=90)
-    df = spark.createDataFrame([(i, v) for i, v in enumerate(rows)],
-                               "id long, vec array<double>")
-    parts = [df.where(F.col("id") % 3 == k) for k in range(3)]
-    ipca = sim.IncrementalPca(spark, str(tmp_path / "pca_state"))
-    for k, p in enumerate(parts):
-        assert ipca.add_batch(p, "vec", f"b{k}") is True
-    m_inc = ipca.model(3)
-    m_fit = sim.pca_fit(df, "vec", 3)
-    assert np.array_equal(m_inc.components, m_fit.components)
-    assert np.array_equal(m_inc.mean, m_fit.mean)
-    assert np.array_equal(m_inc.explained, m_fit.explained)
-    assert m_inc.n == m_fit.n == 90
-    # uncentered derivation from the same store
-    m0 = ipca.model(2, center=False)
-    f0 = sim.pca_fit(df, "vec", 2, center=False)
-    assert np.array_equal(m0.components, f0.components)
-
-    # replay: same batch_id changes nothing
-    assert ipca.add_batch(parts[0], "vec", "b0") is False
-    assert np.array_equal(ipca.model(3).components, m_fit.components)
-
-    # persistence: a fresh handle sees the same state
-    again = sim.IncrementalPca(spark, str(tmp_path / "pca_state"))
-    assert again.applied_batches() == {"b0", "b1", "b2"}
-    assert np.array_equal(again.model(3).components, m_fit.components)
-
-    # dimension mismatch fails loudly
-    bad = spark.createDataFrame([(1, [1.0, 2.0])],
-                                "id long, vec array<double>")
-    with pytest.raises(ValueError, match="dimension mismatch"):
-        again.add_batch(bad, "vec", "b9")
-    # grid mismatch fails loudly
-    other = sim.IncrementalPca(spark, str(tmp_path / "pca_state"),
-                               grid=100)
-    with pytest.raises(ValueError, match="grid mismatch"):
-        other.add_batch(parts[0], "vec", "b9")
-    with pytest.raises(ValueError, match="no batches"):
-        sim.IncrementalPca(spark, str(tmp_path / "empty")).model(2)
-
-
-# ---------------------------------------------------------------------------
-# containment_pairs — asymmetric n-gram containment
-# ---------------------------------------------------------------------------
-
-def _words(prefix, n):
-    return " ".join(f"{prefix}{i}" for i in range(n))
-
-
-def test_containment_asymmetric_subset(spark):
-    # doc 1 (12 words) is quoted wholesale inside doc 2 (62 words):
-    # containment(1 -> 2) = 1.0 but the reverse is ~0.17 — the asymmetry
-    # the operator exists for. doc 4 shares doc 2's pre/post filler
-    # (keeping those grams in-universe at df = 2, so doc 2's denominator
-    # is NOT just the quote); doc 3 is unrelated.
-    quote = _words("q", 12)
-    pre, post = _words("pre", 25), _words("post", 25)
-    df = spark.createDataFrame(
-        [(1, quote),
-         (2, pre + " " + quote + " " + post),
-         (3, _words("z", 40)),
-         (4, pre + " " + post)],
-        "doc_id bigint, text string")
-    out = {(r["doc_id"], r["partner_doc_id"]): r
-           for r in dd.containment_pairs(
-               df, "doc_id", "text", n=4, threshold=0.9).collect()}
-    # (1,2): the quote; (4,2): doc 4's whole in-universe gram set (its
-    # 44 pure pre/post grams; its 3 pre->post junction grams are df=1)
-    # is inside doc 2
-    assert set(out) == {(1, 2), (4, 2)}
-    r = out[(1, 2)]
-    # 12-word quote -> 9 4-grams, all shared, all in-universe (df = 2)
-    assert r["n_grams"] == 9 and r["shared"] == 9
-    assert r["containment"] == 1.0
-    assert out[(4, 2)]["n_grams"] == 44
-    # reverse direction: doc 2's in-universe grams = 9 quote + 44
-    # filler = 53; only 9 land in doc 1 -> 0.17, far below threshold
-    both = {(r["doc_id"], r["partner_doc_id"]): r
-            for r in dd.containment_pairs(
-                df, "doc_id", "text", n=4, threshold=0.1).collect()}
-    assert both[(2, 1)]["n_grams"] == 53
-    assert both[(2, 1)]["containment"] == 9 / 53
-    # contrast: symmetric Jaccard of docs 1 and 2 over distinct 4-gram
-    # sets is 9 / 59 — far below any dedup threshold
-    assert 9 / 59 < 0.2
-
-
-def test_containment_df_cap_excludes_boilerplate(spark):
-    # a gram shared by MORE than max_gram_docs docs is excluded from
-    # numerator and denominator; docs left with zero in-universe grams
-    # emit nothing
-    boiler = _words("b", 4)
-    df = spark.createDataFrame(
-        [(i, boiler) for i in range(4)], "doc_id bigint, text string")
-    out = dd.containment_pairs(df, "doc_id", "text", n=4,
-                               threshold=0.1, max_gram_docs=3).collect()
-    assert out == []
-    # raise the cap to 4: every pair is now fully contained
-    out2 = dd.containment_pairs(df, "doc_id", "text", n=4,
-                                threshold=0.99, max_gram_docs=4).collect()
-    assert len(out2) == 12  # 4 docs x 3 partners, directed
-    assert all(r["containment"] == 1.0 for r in out2)
-
-
-def test_containment_validation(spark):
-    df = spark.createDataFrame([(1, "a b c d e")], "doc_id bigint, text string")
-    with pytest.raises(ValueError, match="threshold"):
-        dd.containment_pairs(df, "doc_id", "text", threshold=0.0)
-    with pytest.raises(ValueError, match="max_gram_docs"):
-        dd.containment_pairs(df, "doc_id", "text", max_gram_docs=1)
-
-
-def test_incremental_containment_index(spark, tmp_path):
-    quote = _words("q", 12)                       # 9 4-grams
-    page = _words("pre", 10) + " " + quote + " " + _words("post", 10)
-    other = _words("z", 30)
-    idx = dd.IncrementalContainmentIndex(
-        spark, str(tmp_path / "cix"), n=4, threshold=0.9, buckets=4)
-
-    # batch 1 registers the big page and an unrelated doc: no pairs
-    out1 = idx.add_and_find(spark.createDataFrame(
-        [(1, page), (2, other)], "doc_id long, text string")).collect()
-    assert out1 == []
-
-    # batch 2: the quote arrives -> contained in the STORED page
-    out2 = {(r["doc_id"], r["partner_doc_id"]): r
-            for r in idx.add_and_find(spark.createDataFrame(
-                [(3, quote)], "doc_id long, text string")).collect()}
-    assert set(out2) == {(3, 1)}
-    r = out2[(3, 1)]
-    assert r["shared"] == 9 and r["n_grams"] == 9
-    assert r["containment"] == 1.0
-    # the reverse direction (page in quote) is 9/29 — below threshold
-
-    # persistence + new×new: a fresh handle, one batch carrying BOTH a
-    # new page quoting doc 3's text and another copy of the quote
-    idx2 = dd.IncrementalContainmentIndex(
-        spark, str(tmp_path / "cix"), n=4, threshold=0.9, buckets=4)
-    out3 = {(r["doc_id"], r["partner_doc_id"])
-            for r in idx2.add_and_find(spark.createDataFrame(
-                [(4, _words("mid", 10) + " " + quote),
-                 (5, quote)], "doc_id long, text string")).collect()}
-    # quote-copies 3 and 5 are contained in stored page 1, new page 4,
-    # and each other; already-reported (3,1) must NOT reappear
-    assert (5, 1) in out3 and (5, 4) in out3 and (3, 4) in out3
-    assert (5, 3) in out3 and (3, 5) in out3
-    assert (3, 1) not in out3
-
-    # re-add refreshes the stored row instead of duplicating it
-    assert idx2.table.read().count() == 5
-    idx2.add_and_find(spark.createDataFrame(
-        [(5, other)], "doc_id long, text string"))
-    assert idx2.table.read().count() == 5
-
-
-def test_incremental_containment_hot_gram_cap(spark, tmp_path):
-    # a gram held by more docs than max_gram_docs stops pairing: with
-    # cap=2 a third copy of the same text meets a full bucket and
-    # reports nothing (lower-bound contract), while cap=None reports
-    boiler = _words("b", 4)
-    for cap, expect_pairs in ((2, False), (None, True)):
-        idx = dd.IncrementalContainmentIndex(
-            spark, str(tmp_path / f"cap{cap}"), n=4, threshold=0.5,
-            max_gram_docs=cap, buckets=2)
-        idx.add_and_find(spark.createDataFrame(
-            [(1, boiler), (2, boiler)], "doc_id long, text string"))
-        out = idx.add_and_find(spark.createDataFrame(
-            [(3, boiler)], "doc_id long, text string")).collect()
-        assert bool(out) is expect_pairs
-
-
-def test_incremental_containment_short_doc_readd_refreshes(spark, tmp_path):
-    # a doc re-added with sub-n-word text must refresh to an EMPTY gram
-    # set (stale grams would keep pairing it forever)
-    quote = _words("q", 12)
-    idx = dd.IncrementalContainmentIndex(
-        spark, str(tmp_path / "cix_sh"), n=4, threshold=0.9, buckets=2)
-    idx.add_and_find(spark.createDataFrame(
-        [(1, quote)], "doc_id long, text string"))
-    # re-add doc 1 with a 2-word text: row refreshed, grams emptied
-    idx.add_and_find(spark.createDataFrame(
-        [(1, "tiny text")], "doc_id long, text string"))
-    row = idx.table.read().collect()
-    assert len(row) == 1 and row[0]["n_grams"] == 0
-    # a fresh copy of the quote now finds NO stored partner
-    out = idx.add_and_find(spark.createDataFrame(
-        [(2, quote)], "doc_id long, text string")).collect()
-    assert out == []
-
-
-def test_incremental_containment_readd_uses_fresh_denominator(spark, tmp_path):
-    # re-added doc: its denominator must come from the refreshed row
-    # ONLY — the pre-fix read emitted a second stale-sized containment
-    # row for the same pair (review catch, round 9)
-    quote = _words("q", 12)                       # 9 4-grams
-    longer = quote + " " + _words("extra", 8)     # 17 4-grams
-    idx = dd.IncrementalContainmentIndex(
-        spark, str(tmp_path / "cix_rd"), n=4, threshold=0.4, buckets=2)
-    idx.add_and_find(spark.createDataFrame(
-        [(1, quote), (9, quote)], "doc_id long, text string"))
-    out = idx.add_and_find(spark.createDataFrame(
-        [(9, longer)], "doc_id long, text string")).collect()
-    rows = [r for r in out if r["doc_id"] == 9 and r["partner_doc_id"] == 1]
-    assert len(rows) == 1                          # exactly one, not two
-    assert rows[0]["n_grams"] == 17               # fresh denominator
-    assert rows[0]["shared"] == 9
-
-
-def test_incremental_containment_validates_cap(spark, tmp_path):
-    import pytest as _pt
-    with _pt.raises(ValueError, match="max_gram_docs"):
-        dd.IncrementalContainmentIndex(
-            spark, str(tmp_path / "cix_bad"), max_gram_docs=1)
-
-
-def test_incremental_containment_rejects_intra_batch_dup_ids(spark, tmp_path):
-    # two rows with one doc_id inside ONE batch would silently union
-    # both texts' gram sets (neither text's row, nor the documented
-    # re-add refresh) — must raise instead (advisor catch, round 9)
-    import pytest as _pt
-    idx = dd.IncrementalContainmentIndex(
-        spark, str(tmp_path / "cix_dup"), n=4, threshold=0.5, buckets=2)
-    batch = spark.createDataFrame(
-        [(1, _words("a", 12)), (1, _words("b", 12))],
-        "doc_id long, text string")
-    with _pt.raises(ValueError, match="appears 2x in one batch"):
-        idx.add_and_find(batch)
-    assert idx.table.read().count() == 0          # nothing registered
-
-
-def test_incremental_containment_arrow_probe_equals_scan(spark, tmp_path):
-    # probe='arrow' must yield the exact same directed pair set (and the
-    # same refreshed store) as probe='scan' — incl. a re-added doc in
-    # the batch (exercises the arrow path's own-row exclusion) and a
-    # sub-n-word doc (empty gram array in the stored chunks)
-    quote = _words("q", 12)
-    longer = quote + " " + _words("extra", 8)
-    seed = spark.createDataFrame(
-        [(1, quote), (2, longer), (3, _words("z", 20)), (4, "tiny")],
-        "doc_id long, text string")
-    batch = spark.createDataFrame(
-        [(3, _words("z", 9)),                      # re-add, new text
-         (10, quote),                              # dup of 1/2
-         (11, _words("fresh", 15))],
-        "doc_id long, text string")
-
-    def run(probe):
-        idx = dd.IncrementalContainmentIndex(
-            spark, str(tmp_path / f"cix_{probe}"), n=4, threshold=0.4,
-            buckets=2, probe=probe)
-        idx.add_and_find(seed)
-        out = idx.add_and_find(batch)
-        pairs = sorted(map(tuple, out.collect()))
-        store = sorted((r["doc_id"], tuple(sorted(r["grams"])),
-                        r["n_grams"]) for r in idx.table.read().collect())
-        return pairs, store
-
-    scan_pairs, scan_store = run("scan")
-    arrow_pairs, arrow_store = run("arrow")
-    assert arrow_pairs == scan_pairs and len(scan_pairs) > 0
-    assert arrow_store == scan_store
-
-
-def test_incremental_containment_probe_validation_and_auto(spark, tmp_path):
-    import pytest as _pt
-    with _pt.raises(ValueError, match="probe"):
-        dd.IncrementalContainmentIndex(
-            spark, str(tmp_path / "cix_p"), probe="bogus")
-    # auto mode picks scan below the crossover (row_count 0 here) and
-    # still produces correct output
-    idx = dd.IncrementalContainmentIndex(
-        spark, str(tmp_path / "cix_a"), n=4, threshold=0.5, buckets=2)
-    assert idx.probe == "auto"
-    out = idx.add_and_find(spark.createDataFrame(
-        [(1, _words("a", 10)), (2, _words("a", 10))],
-        "doc_id long, text string"))
-    assert out.count() == 2                        # both directions
-
-
-def test_sharded_containment_index(spark, tmp_path):
-    """ShardedContainmentIndex (round 11, the past-50M lever as code):
-    within-shard pairs found, cross-shard containment deliberately out
-    of scope, multi-shard batches route correctly, replay/persistence
-    rides the per-shard protocol, NULL shard values fail loudly."""
-    quote = _words("q", 12)
-    page = _words("pre", 10) + " " + quote + " " + _words("post", 10)
-    idx = dd.ShardedContainmentIndex(
-        spark, str(tmp_path / "scix"), shard_col="source",
-        n=4, threshold=0.9, buckets=4)
-
-    # batch 1 (multi-shard): page registers in shard A, an identical
-    # page in shard B — no pairs yet in either shard
-    out1 = idx.add_and_find(spark.createDataFrame(
-        [("A", 1, page), ("B", 2, page)],
-        "source string, doc_id long, text string")).collect()
-    assert out1 == []
-
-    # batch 2: the quote lands in shard A -> contained in shard A's
-    # stored page ONLY; shard B's identical page is out of scope
-    out2 = {(r["source"], r["doc_id"], r["partner_doc_id"])
-            for r in idx.add_and_find(spark.createDataFrame(
-                [("A", 3, quote)],
-                "source string, doc_id long, text string")).collect()}
-    assert out2 == {("A", 3, 1)}
-
-    # persistence across a reopened handle + per-shard stores on disk
-    idx2 = dd.ShardedContainmentIndex(
-        spark, str(tmp_path / "scix"), shard_col="source",
-        n=4, threshold=0.9, buckets=4)
-    out3 = {(r["source"], r["doc_id"], r["partner_doc_id"])
-            for r in idx2.add_and_find(spark.createDataFrame(
-                [("B", 4, quote)],
-                "source string, doc_id long, text string")).collect()}
-    assert out3 == {("B", 4, 2)}
-    assert idx2.shard("A").table.read().count() == 2
-    assert idx2.shard("B").table.read().count() == 2
-
-    # NULL shard value -> loud routing error
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="NULL source"):
-        idx2.add_and_find(spark.createDataFrame(
-            [(None, 9, quote)],
-            "source string, doc_id long, text string"))
 
 
 def test_sql_text_helpers_match_column_forms(spark):

@@ -73,44 +73,6 @@ def test_url_dedup_groups_and_keepers(spark):
     assert out[4]["url_canonical"] is None
 
 
-def test_incremental_url_index(spark, tmp_path):
-    """Cross-batch first-seen semantics, within-batch keep-min,
-    non-URL passthrough, replay idempotence, persistence across
-    handle reopen — the gram/line-store protocol for URLs."""
-    idx = ur.IncrementalUrlIndex(spark, str(tmp_path / "urls"), buckets=4)
-    b1 = spark.createDataFrame([
-        (1, "https://www.example.com/a?utm_source=x"),
-        (2, "http://example.com/a"),                 # dup of 1 in-batch
-        (3, "https://example.com/b"),
-        (4, "not a url"),                            # passthrough
-    ], "doc_id long, url string")
-    k1 = sorted(r["doc_id"] for r in
-                idx.add_and_filter(b1, "doc_id", "url").collect())
-    assert k1 == [1, 3, 4]                           # 2 deduped in-batch
-    b2 = spark.createDataFrame([
-        (10, "https://EXAMPLE.com/a/"),              # seen (batch 1)
-        (11, "https://example.com/c"),               # fresh
-        (12, "also not a url"),                      # passthrough
-    ], "doc_id long, url string")
-    k2 = sorted(r["doc_id"] for r in
-                idx.add_and_filter(b2, "doc_id", "url").collect())
-    assert k2 == [11, 12]
-    # replay of batch 2 (crash-after-commit window): identical keepers
-    k2r = sorted(r["doc_id"] for r in
-                 idx.add_and_filter(b2, "doc_id", "url").collect())
-    assert k2r == k2
-    # reopened handle sees the persisted state
-    idx2 = ur.IncrementalUrlIndex(spark, str(tmp_path / "urls"), buckets=4)
-    b3 = spark.createDataFrame(
-        [(20, "https://example.com/c"), (21, "https://example.com/d")],
-        "doc_id long, url string")
-    k3 = sorted(r["doc_id"] for r in
-                idx2.add_and_filter(b3, "doc_id", "url").collect())
-    assert k3 == [21]
-    # store holds one row per first-seen canonical url (4 so far)
-    assert idx2.table.read().count() == 4
-
-
 def test_domain_stats(spark):
     df = spark.createDataFrame([
         (1, "https://a.example.com/x"),

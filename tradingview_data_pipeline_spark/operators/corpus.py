@@ -366,7 +366,7 @@ def span_gram_counts(df: DataFrame, id_col: str, text_col: str, *,
                      n: int = 8, partitions: int | None = None) -> DataFrame:
     """One row per (doc, word-n-gram md5-60 hash) with its within-doc
     multiplicity ``c`` — the shared substrate for ``dup_span_profile``
-    and ``dedup.containment_pairs``. Multi-consumer callers (q72's two
+    and q72's containment leg. Multi-consumer callers (q72's two
     legs) compute it once and pin it DISK_ONLY (NOTES-31/34 rule): the
     tokenize + explode + first shuffle is the dominant cost and the two
     legs' differing downstream aggregates defeat exchange reuse.
@@ -423,8 +423,8 @@ def dup_span_profile(
     cross-engine equality is unaffected.
 
     ``gram_counts``: optional precomputed ``span_gram_counts`` frame
-    (multi-consumer callers pin it and share it with
-    ``containment_pairs``); ``n`` is ignored when provided.
+    (multi-consumer callers pin it and share it with q72's
+    containment leg); ``n`` is ignored when provided.
     ``partitions``: width hint for the per-gram shuffles (see
     ``span_gram_counts`` — at the 5M-doc decade the gram stream is
     ~465M mostly-unique rows and the session's small-data width OOMs
@@ -714,7 +714,7 @@ def gram_positions(df: DataFrame, id_col: str, text_col: str,
     gives the start index directly (one shingle per word position;
     the < n-word whole-text fallback is filtered by the exact-n
     check). The shared span representation of ``dup_span_profile`` /
-    ``remove_dup_spans`` / the incremental builder's span store."""
+    ``remove_dup_spans``."""
     return (df.select(F.col(id_col),
                       F.posexplode(tx.word_shingles(F.col(text_col), n=n))
                       .alias("pos", "gram"))
@@ -1099,18 +1099,13 @@ def dedupe_lines_global(df: DataFrame, id_col: str, text_col: str, *,
     return joined.withColumns(new_cols).drop("__doc", "__hot")
 
 
-def strip_hot_lines(txt: Column, hot: Column) -> Column:
-    """Map-side line rewrite shared by ``dedupe_lines_global`` and the
-    incremental builder's line stage: drop every non-blank line whose
-    xxhash64 is in ``hot`` (an ``array<bigint>`` column — typically a
-    per-doc hot set from a join); whitespace-only lines always pass.
-    The line array binds once via the evaluate-once transform lambda."""
-    return strip_hot_lines_counted(txt, hot)["clean"]
-
-
 def strip_hot_lines_counted(txt: Column, hot: Column) -> Column:
-    """``strip_hot_lines`` plus an EXACT removed-line count, as one
-    struct (clean string, n_removed bigint) from one bound evaluation.
+    """Map-side line rewrite: drop every non-blank line whose xxhash64
+    is in ``hot`` (an ``array<bigint>`` column — typically a per-doc hot
+    set from a join); whitespace-only lines always pass. Returns the
+    clean string plus an EXACT removed-line count, as one struct (clean
+    string, n_removed bigint) from one bound evaluation: the line array
+    binds once via the evaluate-once transform lambda.
     The count can NOT be recovered from the cleaned string afterwards:
     ``array_join([], "\\n") == array_join([""], "\\n") == ""``, so a
     fully-stripped doc and a one-blank-line doc are indistinguishable —

@@ -22,8 +22,6 @@ across engines and runs — never engine-native ``hash()``.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -122,252 +120,6 @@ def minhash_signatures_long(df: DataFrame, id_col: str, text_col: str,
 
 
 LSH_MAX_BUCKET_DEFAULT = 1000
-
-
-def _batch_vs_stored_pairs(new_banded: DataFrame, stored_banded: DataFrame,
-                           key_cols: list[str], id_col: str,
-                           max_bucket: int | None,
-                           payload_cols: tuple[str, ...] = (),
-                           prepinned: bool = False) -> DataFrame:
-    """Band-bucket pairing with at least one NEW member, with an
-    O(batch)-sized PLAN — the shared join shape of the three incremental
-    indexes (MinHash / SimHash / embedding LSH).
-
-    The naive formulation (self-join stored∪new with an ``is_new``
-    post-filter) computes the right output but shuffles the FULL stored
-    signature table on every micro-batch — O(index) plan cost per
-    trigger. This shape keeps the stored side shuffle-free:
-
-      1. ``new_banded`` (batch × bands rows — tiny) is pinned eagerly.
-      2. The stored side is filtered to buckets the batch touches via a
-         broadcast LEFT SEMI join on the distinct batch bucket keys —
-         the stored scan streams under a BroadcastHashJoin, no shuffle,
-         no sort — and the (small: O(batch × collision rate)) survivor
-         set is pinned.
-      3. The degenerate-bucket cap counts stored+new members per
-         TOUCHED bucket only. Equivalent to capping the combined frame:
-         untouched buckets can't emit pairs (no new member), and a
-         touched bucket's combined population is exactly its stored
-         survivors + its batch rows.
-      4. old×new pairs come from broadcast(new) ⋈ stored-survivors;
-         new×new pairs from the tiny batch self-join.
-
-    Returns (id_a < id_b) pairs plus ``<c>_a`` / ``<c>_b`` for each
-    payload column (side-consistent with the id ordering). NOT distinct
-    — callers dedup across bands. Both inputs must already be disjoint
-    on ``id_col`` (callers anti-join stored against the batch ids).
-    """
-    from functools import reduce
-    from operator import and_
-
-    if prepinned:
-        # caller already pinned both frames and pruned the stored side
-        # to touched buckets (BandedBucketStore) — skip the extra
-        # checkpoints + semi-join, pure per-trigger overhead there
-        new_b, stored_t = new_banded, stored_banded
-    else:
-        new_b = new_banded.localCheckpoint(eager=True)
-        touched = new_b.select(*key_cols).distinct()
-        stored_t = (stored_banded
-                    .join(F.broadcast(touched), key_cols, "left_semi")
-                    .localCheckpoint(eager=True))
-    if max_bucket is not None:
-        over = (stored_t.select(*key_cols)
-                .unionByName(new_b.select(*key_cols))
-                .groupBy(*key_cols)
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .where(F.col("__n") > max_bucket)
-                .select(*key_cols))
-        new_b = new_b.join(F.broadcast(over), key_cols, "left_anti")
-        stored_t = stored_t.join(F.broadcast(over), key_cols, "left_anti")
-
-    def _pairs(left: DataFrame, right: DataFrame, strict: bool) -> DataFrame:
-        n, s = left.alias("n"), right.alias("s")
-        cond = reduce(and_, [F.col(f"n.{c}") == F.col(f"s.{c}")
-                             for c in key_cols])
-        if strict:              # new×new self-join: order by id directly
-            cond = cond & (F.col(f"n.{id_col}") < F.col(f"s.{id_col}"))
-        n_first = F.col(f"n.{id_col}") < F.col(f"s.{id_col}")
-        sel = [F.when(n_first, F.col(f"n.{id_col}"))
-               .otherwise(F.col(f"s.{id_col}")).alias("id_a"),
-               F.when(n_first, F.col(f"s.{id_col}"))
-               .otherwise(F.col(f"n.{id_col}")).alias("id_b")]
-        for c in payload_cols:
-            sel += [F.when(n_first, F.col(f"n.{c}"))
-                    .otherwise(F.col(f"s.{c}")).alias(f"{c}_a"),
-                    F.when(n_first, F.col(f"s.{c}"))
-                    .otherwise(F.col(f"n.{c}")).alias(f"{c}_b")]
-        return F.broadcast(n).join(s, cond).select(*sel)
-
-    return _pairs(new_b, stored_t, strict=False) \
-        .unionByName(_pairs(new_b, new_b, strict=True))
-
-
-class BandedBucketStore:
-    """Persisted bucket-membership cache for the incremental indexes —
-    the 1B-doc step past ``_batch_vs_stored_pairs``: that join shape
-    never SHUFFLES the stored signatures, but it still SCANS them per
-    trigger (~72 GB/trigger at 1B docs). This store keeps one row per
-    LSH bucket key — ``(bk, docs array<struct<id,pl>>, n)`` — in a
-    hash-bucketed ``ParquetTable`` keyed by ``bk``, so a micro-batch
-    READS only the bucket directories its band keys touch
-    (``read_matching``): per-trigger disk cost is
-    O(touched buckets / total buckets × store), independent of the
-    signature table.
-
-    Semantics vs the scan-based shape (pytest-pinned equivalent except
-    one corner): the degenerate-bucket cap is STICKY — once a bucket's
-    population crosses ``max_bucket`` its membership array is nulled
-    (only the count keeps growing) and it never pairs again, even if
-    re-adds would theoretically shrink it below the cap. The scan
-    shape re-counts from scratch each trigger and could re-admit such
-    a bucket; a >cap bucket shrinking below cap requires mass re-adds
-    with changed content, which the append-only contract makes
-    vanishingly rare, and capped buckets are junk by construction.
-
-    Crash protocol: callers commit this store BEFORE the signature
-    table. A crash between the two leaves the store ahead by one
-    batch; on replay, pairing against a store that already contains
-    the batch is harmless (self-pairs are excluded by the id order,
-    batch×batch pairs dedup against the new×new leg) and the
-    set-merge update is idempotent, so replay converges.
-
-    ``pl`` carries a per-doc payload BIGINT (SimHash signature;
-    0 where unused) so Hamming filters run on the pair set only.
-
-    WHEN TO ENABLE (measured, INCR_BENCH_r9 / SCALING addendum 21):
-    per-trigger cost is O(batch×bands × store/buckets + C) with
-    C ≈ 2.5 s of checkpoint/manifest constant — touched directories
-    are read AND copy-on-write rewritten wholesale, so the lever is
-    bucket count. Enable when BOTH (a) the signature table holds
-    ≳ 2M rows (below that, C alone exceeds the scan path's whole
-    cost — scan wins at every smaller measured size) and (b)
-    ``buckets`` ≥ 10 × batch×bands (at small bucket counts a batch
-    touches every directory and pruning degenerates to a full store
-    rewrite). Measured win at 5M stored signatures, batch 50,
-    buckets 4096: 10.7 s vs the scan path's 17.3 s — and the gap
-    grows with the store, since banded per-trigger work is
-    store-size-independent at a fixed touched count while the scan
-    path re-reads and re-bands every stored row.
-    """
-
-    def __init__(self, spark, path: str, *,
-                 max_bucket: int | None = LSH_MAX_BUCKET_DEFAULT,
-                 buckets: int | None = None):
-        from tradingview_data_pipeline_spark.operators.merge import ParquetTable
-        self.max_bucket = max_bucket
-        schema = T.StructType([
-            T.StructField("bk", T.StringType()),
-            T.StructField("docs", T.ArrayType(T.StructType([
-                T.StructField("id", T.LongType()),
-                T.StructField("pl", T.LongType())]))),
-            T.StructField("n", T.LongType()),
-        ])
-        self.table = ParquetTable(spark, path, schema, "bk",
-                                  buckets=buckets)
-
-    def add_and_pairs(self, new_banded: DataFrame,
-                      old_banded: DataFrame) -> DataFrame:
-        """Update the store with a batch and return its candidate
-        pairs, reading ONLY touched bucket directories.
-
-        ``new_banded``: (id, bk, pl) — one row per (batch doc, band).
-        ``old_banded``: (id, bk) — band keys of RE-ADDED docs' stored
-        signatures (their old memberships are removed; pass an empty
-        frame when the caller knows ids are fresh).
-
-        Returns NON-distinct (id_a < id_b, pl_a, pl_b) pairs with at
-        least one batch member; the caller dedups across bands. The
-        store upsert commits before returning (pairs are pinned
-        first).
-        """
-        new_b = new_banded.localCheckpoint(eager=True)
-        old_b = old_banded.localCheckpoint(eager=True)
-        touched = (new_b.select("bk").unionByName(old_b.select("bk"))
-                   .distinct())
-        stored = (self.table.read_matching(touched)
-                  .join(F.broadcast(touched), "bk", "left_semi")
-                  .localCheckpoint(eager=True))
-        new_ids = new_b.select("id").distinct()
-        # surviving stored membership: exploded arrays minus re-added
-        # docs (their refreshed entries come back via new_b)
-        surv = (stored.where(F.col("docs").isNotNull())
-                .select("bk", F.explode("docs").alias("d"))
-                .select("bk", F.col("d.id").alias("id"),
-                        F.col("d.pl").alias("pl"))
-                .join(F.broadcast(new_ids), "id", "left_anti")
-                .localCheckpoint(eager=True))
-
-        new_agg = (new_b.groupBy("bk")
-                   .agg(F.count(F.lit(1)).alias("n_new"),
-                        F.collect_list(F.struct(
-                            F.col("id"), F.col("pl"))).alias("new_docs")))
-        surv_agg = (surv.groupBy("bk")
-                    .agg(F.count(F.lit(1)).alias("n_surv"),
-                         F.collect_list(F.struct(
-                             F.col("id"), F.col("pl"))).alias("surv_docs")))
-        merged = (touched
-                  .join(stored.select("bk", "docs", "n"), "bk", "left")
-                  .join(surv_agg, "bk", "left")
-                  .join(new_agg, "bk", "left"))
-        was_capped = F.col("docs").isNull() & F.col("n").isNotNull()
-        pop = (F.coalesce(F.col("n_surv"), F.lit(0))
-               + F.coalesce(F.col("n_new"), F.lit(0)))
-        over = was_capped | (
-            F.lit(self.max_bucket is not None)
-            & (pop > F.lit(self.max_bucket or 0)))
-        upd = merged.select(
-            "bk",
-            F.when(over, F.lit(None).cast(
-                "array<struct<id:bigint,pl:bigint>>"))
-            .otherwise(F.concat(
-                F.coalesce(F.col("surv_docs"), F.expr(
-                    "CAST(array() AS array<struct<id:bigint,pl:bigint>>)")),
-                F.coalesce(F.col("new_docs"), F.expr(
-                    "CAST(array() AS array<struct<id:bigint,pl:bigint>>)"))
-            )).alias("docs"),
-            F.when(was_capped,
-                   F.col("n") + F.coalesce(F.col("n_new"), F.lit(0)))
-            .otherwise(pop).alias("n"))
-
-        over_bks = merged.where(over).select("bk")
-        new_ok = new_b.join(F.broadcast(over_bks), "bk", "left_anti")
-        surv_ok = surv.join(F.broadcast(over_bks), "bk", "left_anti")
-        pairs = _batch_vs_stored_pairs(
-            new_ok.select("id", "bk", "pl"),
-            surv_ok.select("id", "bk", "pl"),
-            ["bk"], "id", None, payload_cols=("pl",),
-            prepinned=True,
-        ).localCheckpoint(eager=True)     # pin before the store commit
-        # REPLACE matched rows verbatim — merge_upsert's NULL-coalesce
-        # would silently keep a stale membership array when a bucket
-        # crosses the cap and its docs are nulled (r8 review finding)
-        self.table.merge_with(
-            upd, lambda tgt, s: tgt.join(s.select("bk"), "bk",
-                                         "left_anti").unionByName(s))
-        return pairs
-
-    def rebuild_from(self, banded: DataFrame) -> None:
-        """Bulk-(re)build the store from a full (id, bk, pl) banded
-        frame — the migration path when enabling ``banded_store`` on an
-        index that already has signatures, and the repair path if the
-        store is ever lost (it is a DERIVED cache; the signature table
-        stays authoritative). One shuffle on bk; cap semantics match
-        the incremental updates (over-cap buckets stored nulled)."""
-        grouped = (banded.groupBy("bk")
-                   .agg(F.count(F.lit(1)).alias("n"),
-                        F.collect_list(F.struct("id", "pl")).alias("docs")))
-        over = (F.lit(self.max_bucket is not None)
-                & (F.col("n") > F.lit(self.max_bucket or 0)))
-        self.table.overwrite(grouped.select(
-            "bk",
-            F.when(over, F.lit(None).cast(
-                "array<struct<id:bigint,pl:bigint>>"))
-            .otherwise(F.col("docs")).alias("docs"),
-            "n"))
-
-    def compact(self) -> None:
-        self.table.compact()
 
 
 def _banded_signatures(g: DataFrame, id_col: str, k: int,
@@ -817,225 +569,6 @@ def connected_components(pairs: DataFrame, *, max_iter: int = 10,
     return labels
 
 
-class IncrementalNearDupIndex:
-    """Near-dup candidate detection for an APPEND-ONLY corpus without
-    recomputing old pairs: MinHash signatures persist in a keyed
-    ``ParquetTable`` (manifest-committed), and each new batch
-
-      1. computes its signatures once (k BIGINT minhashes — tens of
-         bytes per doc regardless of document size),
-      2. pairs the batch's banded hashes against the stored banded
-         hashes with an O(batch)-sized PLAN (``_batch_vs_stored_pairs``:
-         broadcast semi-join prunes stored rows to touched buckets with
-         the stored side streaming — never shuffled — then
-         broadcast(new) ⋈ survivors plus a tiny new×new self-join);
-         old×old pairs were reported when those docs arrived and cannot
-         appear (no new member), so incremental cost is
-         O(batch × collision rate), never O(corpus²),
-      3. upserts the new signatures (idempotent: re-adding a doc
-         refreshes its signature).
-
-    The index deliberately stores no payloads; exact Jaccard
-    verification of the returned candidates needs the texts and stays
-    with the caller (``jaccard_verify``). The same ``max_bucket`` guard
-    caps degenerate buckets across the combined old+new frame. At
-    corpus scale, bucket the signature table (``buckets=N``) so the
-    upsert rewrites only touched buckets.
-
-    Reference parity: the reference re-scans its whole news table to
-    skip already-seen URLs per run (newsflow_scraper.py:243-293); this
-    is the near-dup generalization with O(new) incremental work.
-    """
-
-    def __init__(self, spark: SparkSession, path: str, *, k: int = 8,
-                 bands: int = 4,
-                 max_bucket: int | None = LSH_MAX_BUCKET_DEFAULT,
-                 buckets: int | None = None,
-                 banded_store: bool = False):
-        from tradingview_data_pipeline_spark.operators.merge import ParquetTable
-        assert k % bands == 0
-        self.k, self.bands, self.max_bucket = k, bands, max_bucket
-        schema = T.StructType(
-            [T.StructField("doc_id", T.LongType())]
-            + [T.StructField(f"m{j}", T.LongType()) for j in range(k)])
-        self.table = ParquetTable(spark, path, schema, "doc_id",
-                                  buckets=buckets)
-        # opt-in 1B-doc mode: per-trigger reads prune to touched bucket
-        # DIRECTORIES instead of streaming the whole signature table
-        # (see BandedBucketStore for semantics + crash protocol).
-        # SIBLING directory, not nested: the signature table's manifest
-        # GC removes directories it doesn't own from its own path
-        self.store = BandedBucketStore(
-            spark, path.rstrip("/") + "_banded",
-            max_bucket=max_bucket, buckets=buckets) if banded_store \
-            else None
-
-    def _bk(self, banded: DataFrame) -> DataFrame:
-        return banded.select(
-            F.col("doc_id").alias("id"),
-            F.concat_ws(":", F.col("band").cast("string"),
-                        F.col("bh")).alias("bk"),
-            F.lit(0).cast("long").alias("pl"))
-
-    def add_and_find(self, df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-        """Register a batch; return DISTINCT candidate pairs
-        (doc_a < doc_b) where at least one side is from this batch."""
-        new_sigs = _minhash_agg(
-            df.select(F.col(id_col).cast("long").alias("doc_id"),
-                      F.col(text_col)),
-            "doc_id", text_col, self.k).localCheckpoint(eager=True)
-        new_ids = new_sigs.select("doc_id")
-        new_banded = _banded_signatures(new_sigs, "doc_id", self.k,
-                                        self.bands)
-        if self.store is not None:
-            # re-added docs: their OLD band keys (bucket-pruned point
-            # reads on the batch ids) must leave the store's buckets
-            old_banded = self._bk(_banded_signatures(
-                self.table.read_matching(new_ids)
-                .join(F.broadcast(new_ids), "doc_id", "left_semi"),
-                "doc_id", self.k, self.bands)).select("id", "bk")
-            raw = self.store.add_and_pairs(self._bk(new_banded),
-                                           old_banded)
-        else:
-            stored = self.table.read()
-            stored_banded = _banded_signatures(
-                stored.join(F.broadcast(new_ids), "doc_id", "left_anti"),
-                "doc_id", self.k, self.bands)
-            # O(batch) plan: the stored side streams under broadcast
-            # joins (never shuffled); see _batch_vs_stored_pairs
-            raw = _batch_vs_stored_pairs(
-                new_banded, stored_banded, ["band", "bh"], "doc_id",
-                self.max_bucket)
-        pairs = (raw
-                 .select(F.col("id_a").alias("doc_a"),
-                         F.col("id_b").alias("doc_b"))
-                 .distinct())
-        pairs = pairs.localCheckpoint(eager=True)   # pin before the upsert
-        self.table.merge_upsert(new_sigs)
-        return pairs
-
-    def compact(self) -> None:
-        """Maintenance: rewrite the persisted signature table's live
-        buckets to one file each. Streaming-cadence ``add_and_find``
-        calls leave a file per shuffle task per touched bucket behind;
-        compaction bounds the file count without changing any result —
-        crash-safe via the same manifest commit as every maintenance
-        op."""
-        self.table.compact()
-        if self.store is not None:
-            self.store.compact()
-
-    def rebuild_store(self) -> None:
-        """Backfill/repair the banded store from the (authoritative)
-        signature table — run once when enabling ``banded_store`` on a
-        pre-existing index."""
-        assert self.store is not None
-        self.store.rebuild_from(self._bk(_banded_signatures(
-            self.table.read(), "doc_id", self.k, self.bands)))
-
-
-class IncrementalSimHashIndex:
-    """Hamming-radius retrieval for an append-only corpus: 60-bit SimHash
-    signatures persist in a keyed ``ParquetTable``; each batch pairs its
-    chunked signature against the stored chunks with the same
-    O(batch)-plan join shape as ``IncrementalNearDupIndex``
-    (``_batch_vs_stored_pairs``: the stored side streams under broadcast
-    joins, never shuffled) and returns exact
-    (doc_a, doc_b, hamming <= max_hamming) pairs. Same pigeonhole recall
-    guarantee as ``simhash_candidate_pairs`` (exact within the radius
-    when ``max_hamming <= bands - 1``), same degenerate-bucket cap, 8
-    bytes of state per doc."""
-
-    def __init__(self, spark: SparkSession, path: str, *, bits: int = 60,
-                 bands: int = 4, max_hamming: int = 3,
-                 max_bucket: int | None = LSH_MAX_BUCKET_DEFAULT,
-                 buckets: int | None = None,
-                 banded_store: bool = False):
-        from tradingview_data_pipeline_spark.operators.merge import ParquetTable
-        assert bits % bands == 0 and bits <= SIMHASH_MAX_BITS
-        self.bits, self.bands = bits, bands
-        self.max_hamming, self.max_bucket = max_hamming, max_bucket
-        schema = T.StructType([T.StructField("doc_id", T.LongType()),
-                               T.StructField("simhash", T.LongType())])
-        self.table = ParquetTable(spark, path, schema, "doc_id",
-                                  buckets=buckets)
-        # same read-pruned mode as IncrementalNearDupIndex; the simhash
-        # rides in the store's payload slot so hamming runs on pairs
-        self.store = BandedBucketStore(
-            spark, path.rstrip("/") + "_banded",
-            max_bucket=max_bucket, buckets=buckets) if banded_store \
-            else None
-
-    def _bk(self, banded: DataFrame) -> DataFrame:
-        return banded.select(
-            F.col("doc_id").alias("id"),
-            F.concat_ws(":", F.col("band").cast("string"),
-                        F.col("chunk").cast("string")).alias("bk"),
-            F.col("simhash").alias("pl"))
-
-    def _banded(self, sigs: DataFrame) -> DataFrame:
-        chunk_bits = self.bits // self.bands
-        mask = (1 << chunk_bits) - 1
-        entries = ", ".join(
-            f"CAST({b} AS INT), shiftright(simhash, {b * chunk_bits}) & {mask}"
-            for b in range(self.bands))
-        return (sigs.where(F.col("simhash").isNotNull())
-                .select("doc_id", "simhash",
-                        F.expr(f"stack({self.bands}, {entries})"
-                               " AS (band, chunk)")))
-
-    def add_and_find(self, df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-        """Register a batch; return DISTINCT (doc_a < doc_b, hamming)
-        pairs within the radius where at least one side is new."""
-        new_sigs = simhash_table(
-            df.select(F.col(id_col).cast("long").alias("doc_id"),
-                      F.col(text_col)),
-            "doc_id", text_col, bits=self.bits).localCheckpoint(eager=True)
-        new_ids = new_sigs.select("doc_id")
-        if self.store is not None:
-            old_banded = self._bk(self._banded(
-                self.table.read_matching(new_ids)
-                .join(F.broadcast(new_ids), "doc_id", "left_semi"))) \
-                .select("id", "bk")
-            raw = self.store.add_and_pairs(
-                self._bk(self._banded(new_sigs)), old_banded)
-            ham = F.bit_count(F.col("pl_a").bitwiseXOR(F.col("pl_b")))
-        else:
-            stored = self.table.read()
-            stored_banded = self._banded(
-                stored.join(F.broadcast(new_ids), "doc_id", "left_anti"))
-            # O(batch) plan — see _batch_vs_stored_pairs; simhash rides
-            # along so hamming is computed on the (small) pair set only
-            raw = _batch_vs_stored_pairs(
-                self._banded(new_sigs), stored_banded, ["band", "chunk"],
-                "doc_id", self.max_bucket, payload_cols=("simhash",))
-            ham = F.bit_count(
-                F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
-        pairs = (raw.where(ham <= self.max_hamming)
-                 .select(F.col("id_a").alias("doc_a"),
-                         F.col("id_b").alias("doc_b"),
-                         ham.alias("hamming"))
-                 .distinct()
-                 .localCheckpoint(eager=True))  # pin before the upsert
-        self.table.merge_upsert(new_sigs)
-        return pairs
-
-    def compact(self) -> None:
-        """Same small-file maintenance as
-        ``IncrementalNearDupIndex.compact`` — see there."""
-        self.table.compact()
-        if self.store is not None:
-            self.store.compact()
-
-    def rebuild_store(self) -> None:
-        """Backfill/repair the banded store from the signature table —
-        see ``IncrementalNearDupIndex.rebuild_store``."""
-        assert self.store is not None
-        self.store.rebuild_from(self._bk(self._banded(self.table.read())))
-
-
 def dedup_clusters(df: DataFrame, id_col: str, text_col: str,
                    *, k: int = 16, bands: int = 4,
                    jaccard_threshold: float = 0.5,
@@ -1106,418 +639,3 @@ def suggest_minhash_bands(k: int, threshold: float) -> int:
 # sets are small enough per doc that we compute containment EXACTLY over
 # a df-capped gram universe instead of sketching it.
 # ---------------------------------------------------------------------------
-
-def containment_pairs(df: DataFrame, id_col: str, text_col: str, *,
-                      n: int = 8, threshold: float = 0.5,
-                      max_gram_docs: int = 1000,
-                      gram_counts: DataFrame | None = None,
-                      gram_doc_freq: DataFrame | None = None,
-                      partitions: int | None = None) -> DataFrame:
-    """Directed near-containment pairs: one row per (doc, partner) where
-    at least ``threshold`` of the doc's word ``n``-grams also appear in
-    the partner — catching subset/quote duplication (a doc embedded in a
-    larger page) that symmetric Jaccard scores near zero.
-
-    Containment is computed over the CAPPED gram universe: grams held by
-    fewer than 2 docs cannot contribute to an intersection and are
-    dropped before the join; grams held by more than ``max_gram_docs``
-    docs are corpus boilerplate and are excluded from BOTH the numerator
-    and the denominator (a deterministic definition the oracle mirrors —
-    and the quadratic-fanout guard: per-gram pair fanout is bounded by
-    max_gram_docs², the same cap discipline as LSH bucket capping).
-    Docs with zero in-universe grams emit no rows.
-
-    Output: (doc_id, partner_id, shared, n_grams, containment) with
-    ``containment = shared / n_grams`` ≥ threshold — integer counts and
-    one exact IEEE division, engine-reproducible. Every shuffle carries
-    8-byte md5-60 gram hashes, never text.
-
-    ``gram_counts``: optional precomputed ``corpus.span_gram_counts``
-    frame — multi-consumer callers (q72's two legs) pin it DISK_ONLY
-    and share it; ``n`` is ignored when provided. ``partitions``:
-    width hint for the per-gram shuffles (see ``span_gram_counts`` —
-    the gram stream is ~90x the doc count and the session's small-data
-    shuffle width under-partitions it at large corpora). Everything
-    AFTER the universe filter is inherently small (only df>=2 grams
-    survive), so the hint applies to the two gram-cardinality stages
-    only.
-    """
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    if max_gram_docs < 2:
-        raise ValueError(f"max_gram_docs must be >= 2, got {max_gram_docs}")
-    if gram_counts is None:
-        from tradingview_data_pipeline_spark.operators import corpus as _cp
-        gram_counts = _cp.span_gram_counts(df, id_col, text_col, n=n,
-                                           partitions=partitions)
-    grams = gram_counts.select(id_col, "h")
-    if partitions is not None:
-        grams = grams.repartition(partitions, F.col("h"))
-    # gram_doc_freq: optional precomputed (h, nd) frame (shared with
-    # dup_span_profile by q72 — the by-h aggregate is the other heavy
-    # shuffle over the substrate)
-    nd = (gram_doc_freq if gram_doc_freq is not None
-          else grams.groupBy("h").agg(F.count(F.lit(1)).alias("nd")))
-    kept = (grams.join(nd.where((F.col("nd") >= 2)
-                                & (F.col("nd") <= max_gram_docs)), "h")
-            .select(id_col, "h"))
-    sizes = kept.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_grams"))
-    a = kept.select(F.col(id_col).alias("_ida"), "h")
-    b = kept.select(F.col(id_col).alias("_idb"), "h")
-    shared = (a.join(b, "h")
-              .where(F.col("_ida") < F.col("_idb"))
-              .groupBy("_ida", "_idb")
-              .agg(F.count(F.lit(1)).alias("shared")))
-    directed = shared.unionByName(
-        shared.select(F.col("_idb").alias("_ida"),
-                      F.col("_ida").alias("_idb"), "shared"))
-    return (directed
-            .join(sizes.withColumnRenamed(id_col, "_ida"), "_ida")
-            .withColumn("containment",
-                        F.col("shared").cast("double")
-                        / F.col("n_grams").cast("double"))
-            .where(F.col("containment") >= F.lit(threshold))
-            .select(F.col("_ida").alias(id_col),
-                    F.col("_idb").alias(f"partner_{id_col}"),
-                    "shared", "n_grams", "containment"))
-
-
-class IncrementalContainmentIndex:
-    """Quote/subset detection for an APPEND-ONLY corpus: "does this new
-    document substantially appear in the corpus already (or contain a
-    stored document)?" — the incremental form of ``containment_pairs``,
-    with the same O(batch)-plan discipline as the other incremental
-    indexes.
-
-    State is ONE keyed ``ParquetTable`` row per document:
-    ``(doc_id, grams array<bigint>, n_grams)`` — the doc's distinct
-    word-n-gram md5-60 hashes (~8 bytes of state per distinct gram;
-    re-adding a doc refreshes its row). Each batch:
-
-      1. computes its per-doc distinct gram sets once
-         (``corpus.span_gram_counts``),
-      2. pairs batch grams against stored grams via
-         ``_batch_vs_stored_pairs`` keyed on the gram hash — the stored
-         side explodes map-side and streams under broadcast joins
-         (never shuffled); the NON-distinct pair stream has exactly one
-         row per shared gram, so ``shared = count per pair``,
-      3. attaches denominators (batch counts in-batch; stored partners
-         via a bucket-pruned ``read_matching`` point read) and emits
-         DIRECTED rows where ``shared / n_grams >= threshold``.
-
-    Contract differences vs the batch operator (deliberate — stored
-    denominators must not go stale as the corpus grows):
-    ``n_grams`` is the doc's FULL distinct gram count fixed at
-    registration (not the df-capped universe), and the
-    ``max_gram_docs`` cap drops hot grams from the NUMERATOR only
-    (population counted over stored+batch holders per touched gram) —
-    so reported containment is a LOWER BOUND for docs made of corpus
-    boilerplate, and exact for pairs sharing only sub-cap grams.
-
-    Crash protocol: the returned pairs are pinned before the single
-    table upsert; replaying a batch after a crash re-reports its pairs
-    and re-upserts identical rows (idempotent), so replay converges —
-    same story as ``IncrementalNearDupIndex``.
-
-    Scale contract (measured, INCR_BENCH_r9/r10): per-trigger cost is
-    flat through ~500k stored docs (~5-8 s at a fixed 500-doc batch)
-    and starts tracking the store SCAN at the 5M-doc decade (17-23 s in
-    ``probe='scan'``). The ``BandedBucketStore`` read-pruned mode
-    deliberately does NOT apply here, and the reason is arithmetic, not
-    taste: a 500-doc batch probes ~46k distinct gram keys (vs ~2k band
-    keys for MinHash), so (a) at any practical bucket-directory count
-    B, the expected fraction of directories touched is
-    1 - exp(-46k/B) ≈ 1 — "pruning" reads everything and the
-    copy-on-write rewrite makes writes strictly worse; (b) per-bucket
-    Bloom summaries die on the probe side — 46k probes per trigger
-    need per-probe fp << 1/46k (~30 bits/key, GBs of summaries);
-    (c) exact prefix filtering (PPJoin-style) at the default
-    threshold 0.5 only halves the probe keys — pigeonhole gives a
-    (1-t)·|set|+1 prefix, no better. The levers that DO hold, both
-    measured at 5M stored docs (round 10, phase-profiled; SCALING.md
-    round-10 addendum 26, evidence/INCR_BENCH_r10.jsonl):
-
-      * the ParquetTable hardlink insert fast path — the largest
-        phase of the trigger was not the probe but the UPSERT's
-        copy-on-write of every touched bucket (6.9 s of 15.1 s);
-        with fresh-key batches committing as hardlink appends it
-        drops to 2.9 s and the trigger to ~13 s;
-      * keep the bucket count LOW (32-class) for this read-dominated
-        doc-keyed store: a 4096-bucket layout was measured WORSE in
-        every phase (probe 4.8 -> 14.7 s, upsert 2.9 -> 10 s — 1.2k
-        rows/bucket makes tiny files whose open/scheduling overhead
-        swamps any pruning).
-
-    ``probe='arrow'`` (opt-in) replaces the stored-side codegen
-    explode+broadcast-probe with a vectorized Arrow searchsorted pass;
-    it is output-identical (pytest-pinned) but MEASURED SLOWER at
-    every decade (7.6 vs 4.8 s at 5M) — the full gram column must
-    cross the JVM->Python Arrow boundary, which costs more than the
-    codegen probe it avoids. ``probe='auto'`` therefore always takes
-    'scan'; the option is kept as the measured negative result and for
-    deployments where the Arrow boundary is cheaper. The remaining
-    floor is the ~3.6 GB stored-gram columnar read (~4.8 s at 32
-    threads). Past ~50M docs, shard the corpus (per-source indexes)
-    or raise the batch size so the read amortizes.
-    """
-
-    def __init__(self, spark: SparkSession, path: str, *, n: int = 8,
-                 threshold: float = 0.5,
-                 max_gram_docs: int | None = 1000,
-                 buckets: int | None = None,
-                 probe: str = "auto"):
-        from tradingview_data_pipeline_spark.operators.merge import ParquetTable
-        if not 0.0 < threshold <= 1.0:
-            raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-        if max_gram_docs is not None and max_gram_docs < 2:
-            # same contract as containment_pairs: a cap below 2 drops
-            # every shared gram and the index silently reports nothing
-            raise ValueError(
-                f"max_gram_docs must be >= 2 or None, got {max_gram_docs}")
-        if probe not in ("auto", "scan", "arrow"):
-            raise ValueError(f"probe must be auto/scan/arrow, got {probe!r}")
-        self.probe = probe
-        self.n, self.threshold = n, threshold
-        self.max_gram_docs = max_gram_docs
-        schema = T.StructType([
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("grams", T.ArrayType(T.LongType())),
-            T.StructField("n_grams", T.LongType()),
-        ])
-        self.table = ParquetTable(spark, path, schema, "doc_id",
-                                  buckets=buckets)
-
-    def add_and_find(self, df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-        """Register a batch; return DIRECTED rows
-        (doc_id, partner_doc_id, shared, n_grams, containment) where at
-        least one side is from this batch and the doc_id side's
-        containment in the partner clears the threshold."""
-        from tradingview_data_pipeline_spark.operators import corpus as _cp
-        batch = df.select(F.col(id_col).cast("long").alias("doc_id"),
-                          F.col(text_col))
-        # intra-batch duplicate doc_ids would silently UNION both texts'
-        # gram sets below (neither text's row, and not the documented
-        # re-add refresh either) — fail loudly instead; the check is one
-        # batch-sized doc_id-only job per trigger
-        dup = (batch.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c"))
-               .where(F.col("c") > 1).limit(1).collect())
-        if dup:
-            raise ValueError(
-                f"IncrementalContainmentIndex.add_and_find: doc_id "
-                f"{dup[0]['doc_id']} appears {dup[0]['c']}x in one batch "
-                "— dedup the batch first (re-add semantics refresh a "
-                "row across batches, not within one)")
-        agg = (_cp.span_gram_counts(batch, "doc_id", text_col, n=self.n)
-               .groupBy("doc_id")
-               .agg(F.collect_list("h").alias("grams"),
-                    F.count(F.lit(1)).alias("n_grams")))
-        # docs shorter than n words have ZERO grams but must still
-        # register (an empty row) — otherwise re-adding a doc with new
-        # short text would silently keep its stale gram set
-        new_rows = (batch.select("doc_id").distinct()
-                    .join(agg, "doc_id", "left")
-                    .select("doc_id",
-                            F.coalesce(F.col("grams"), F.expr(
-                                "CAST(array() AS array<bigint>)"))
-                            .alias("grams"),
-                            F.coalesce(F.col("n_grams"), F.lit(0))
-                            .cast("bigint").alias("n_grams"))
-                    .localCheckpoint(eager=True))
-        new_ids = new_rows.select("doc_id")
-        new_g = new_rows.select(
-            "doc_id", F.explode("grams").alias("h"))
-        # 'auto' is always the scan probe — the arrow path measured
-        # slower at every store size (class docstring); it remains
-        # available as an explicit opt-in only
-        if self.probe == "arrow":
-            stored_g = self._arrow_probe(new_rows)
-        else:
-            stored_g = (self.table.read()
-                        .join(F.broadcast(new_ids), "doc_id", "left_anti")
-                        .select("doc_id", F.explode("grams").alias("h")))
-        raw = _batch_vs_stored_pairs(new_g, stored_g, ["h"], "doc_id",
-                                     self.max_gram_docs)
-        # pin the (small, pair-bounded) shared counts: partners is
-        # collected for the bucket-pruned point read and the output
-        # consumes directed twice (main input + sizes) — unpinned, the
-        # batch-vs-stored join would re-execute three times per trigger
-        shared = (raw.groupBy("id_a", "id_b")
-                  .agg(F.count(F.lit(1)).alias("shared"))
-                  .localCheckpoint(eager=True))
-        directed = shared.unionByName(
-            shared.select(F.col("id_b").alias("id_a"),
-                          F.col("id_a").alias("id_b"), "shared"))
-        partners = directed.select(F.col("id_a").alias("doc_id")).distinct()
-        # stored denominators: anti-join the batch ids — a RE-ADDED
-        # doc's denominator must come from its refreshed row only (the
-        # pre-upsert read would otherwise emit a second, stale-sized
-        # containment row for the same pair)
-        sizes = (new_rows.select("doc_id", "n_grams").unionByName(
-            self.table.read_matching(partners)
-            .join(F.broadcast(partners), "doc_id", "left_semi")
-            .join(F.broadcast(new_ids), "doc_id", "left_anti")
-            .select("doc_id", "n_grams")))
-        out = (directed
-               .join(sizes.withColumnRenamed("doc_id", "id_a"), "id_a")
-               .withColumn("containment",
-                           F.col("shared").cast("double")
-                           / F.col("n_grams").cast("double"))
-               .where(F.col("containment") >= F.lit(self.threshold))
-               .select(F.col("id_a").alias("doc_id"),
-                       F.col("id_b").alias("partner_doc_id"),
-                       "shared", "n_grams", "containment")
-               .localCheckpoint(eager=True))   # pin before the upsert
-        self.table.merge_upsert(new_rows)
-        return out
-
-    def _arrow_probe(self, new_rows: DataFrame) -> DataFrame:
-        """Vectorized stored-side probe: emit the stored (doc_id, h)
-        rows whose gram appears in the batch — the exact multiset the
-        scan probe's anti-join + explode + broadcast-semi-join yields —
-        WITHOUT ever exploding the stored table through codegen.
-
-        One driver collect of the (checkpointed) batch gram arrays
-        (O(batch) — ~46k longs at batch 500, a few hundred KB) builds a
-        sorted int64 probe array, broadcast to the executors; a
-        ``mapInPandas`` pass then flattens each Arrow chunk's gram
-        lists into one contiguous int64 vector and keeps the hits via
-        ``searchsorted`` — memory-bandwidth-bound, no shuffle, no join
-        machinery, parallel over the store's file partitions.
-        """
-        import numpy as np
-        import pandas as pd
-
-        rows = new_rows.select("doc_id", "grams").collect()
-        batch_ids = np.array(sorted(r["doc_id"] for r in rows),
-                             dtype=np.int64)
-        flat = [g for r in rows for g in r["grams"]]
-        if not flat:
-            return new_rows.sparkSession.createDataFrame(
-                [], "doc_id long, h long")
-        probe = np.unique(np.array(flat, dtype=np.int64))
-        sc = new_rows.sparkSession.sparkContext
-        b_probe, b_ids = sc.broadcast(probe), sc.broadcast(batch_ids)
-
-        def hits(it):
-            bg, bid = b_probe.value, b_ids.value
-            for pdf in it:
-                ids = pdf["doc_id"].to_numpy()
-                # exclude the batch's own (re-added) rows, same as the
-                # scan path's anti-join on new_ids
-                pos = np.searchsorted(bid, ids)
-                own = (pos < len(bid)) & \
-                    (bid[np.minimum(pos, len(bid) - 1)] == ids)
-                if own.any():
-                    pdf = pdf[~own]
-                    ids = ids[~own]
-                if not len(pdf):
-                    continue
-                grams = pdf["grams"].to_list()
-                lens = np.fromiter((len(g) for g in grams),
-                                   dtype=np.int64, count=len(grams))
-                if not lens.sum():
-                    continue
-                vals = np.concatenate(
-                    [np.asarray(g, dtype=np.int64)
-                     for g in grams if len(g)])
-                pos = np.searchsorted(bg, vals)
-                hit = (pos < len(bg)) & \
-                    (bg[np.minimum(pos, len(bg) - 1)] == vals)
-                if hit.any():
-                    yield pd.DataFrame(
-                        {"doc_id": np.repeat(ids, lens)[hit],
-                         "h": vals[hit]})
-
-        return (self.table.read().select("doc_id", "grams")
-                .mapInPandas(hits, "doc_id long, h long"))
-
-    def compact(self) -> None:
-        """Maintenance: rewrite live buckets to one file each."""
-        self.table.compact()
-
-
-class ShardedContainmentIndex:
-    """Per-shard containment indexing — the documented past-~50M lever
-    made code (round 11; ``IncrementalContainmentIndex`` docstring: the
-    per-trigger floor is the stored-gram columnar read, ~3.6 GB at 5M
-    docs, so past ~50M "shard the corpus (per-source indexes) or raise
-    the batch size"). One ``IncrementalContainmentIndex`` per shard
-    value under ``<path>/shard_<sanitized>-<md5_8>/``; a batch routes by
-    its ``shard_col`` and each trigger reads ONLY the shards the batch
-    touches — a single-source batch against an S-shard store reads 1/S
-    of the gram mass, so per-trigger cost tracks docs-per-touched-shard,
-    not total store size (measured:
-    evidence/CONTAINMENT_SHARD_BENCH_r11.jsonl, SCALING addendum 30).
-
-    Semantics contract (deliberate, documented): containment pairs are
-    reported WITHIN a shard only. Sharding by source encodes the policy
-    that quote/subset duplication is a within-source-family phenomenon
-    (the same scoping CCNet applies to per-snapshot URL dedup); a doc
-    quoting a document of ANOTHER source is out of scope by
-    construction. Callers needing global scope keep the unsharded
-    index and pay its read floor.
-
-    Crash/replay: each shard rides the underlying index's idempotent
-    protocol unchanged; a replayed batch re-touches the same shards and
-    converges. New shard values create their store lazily on first
-    batch. NULL shard values are a routing bug and fail loudly.
-    """
-
-    def __init__(self, spark: SparkSession, path: str, *,
-                 shard_col: str, **index_kwargs):
-        self.spark, self.path = spark, path
-        self.shard_col = shard_col
-        self._kw = index_kwargs
-        self._shards: dict[str, IncrementalContainmentIndex] = {}
-
-    def _shard_dir(self, value) -> str:
-        import hashlib
-        import re as _re
-        s = str(value)
-        safe = _re.sub(r"[^A-Za-z0-9._-]", "_", s)[:40]
-        h = hashlib.md5(s.encode()).hexdigest()[:8]
-        return os.path.join(self.path, f"shard_{safe}-{h}")
-
-    def shard(self, value) -> IncrementalContainmentIndex:
-        """The per-value index handle (lazily constructed)."""
-        key = str(value)
-        if key not in self._shards:
-            self._shards[key] = IncrementalContainmentIndex(
-                self.spark, self._shard_dir(value), **self._kw)
-        return self._shards[key]
-
-    def add_and_find(self, df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-        """Route a batch to its shards; return the union of per-shard
-        DIRECTED containment rows with the shard value prepended.
-        The distinct-shard collect is bounded by sources-per-batch
-        (crawl batches are typically single-source)."""
-        batch = df.select(self.shard_col, id_col, text_col) \
-                  .localCheckpoint(eager=True)      # one eval, S filters
-        vals = [r[0] for r in
-                batch.select(self.shard_col).distinct().collect()]
-        if any(v is None for v in vals):
-            raise ValueError(
-                f"ShardedContainmentIndex: NULL {self.shard_col} in "
-                "batch — shard routing requires a non-null shard value")
-        outs = []
-        for v in sorted(vals, key=str):
-            sub = batch.where(F.col(self.shard_col) == F.lit(v)) \
-                       .drop(self.shard_col)
-            pairs = self.shard(v).add_and_find(sub, id_col, text_col)
-            outs.append(pairs.select(
-                F.lit(v).alias(self.shard_col), "*"))
-        if not outs:
-            return self.spark.createDataFrame(
-                [], f"{self.shard_col} string, doc_id long, "
-                    "partner_doc_id long, shared bigint, n_grams bigint, "
-                    "containment double")
-        out = outs[0]
-        for o in outs[1:]:
-            out = out.unionByName(o)
-        return out
-
-    def compact(self) -> None:
-        for idx in self._shards.values():
-            idx.compact()

@@ -715,9 +715,9 @@ class ParquetTable:
         store. Returns True when it committed (caller skips the rewrite
         path), False to fall back.
 
-        Why: batch-cadence incremental indexes upsert mostly-fresh keys
-        every trigger, and ``_rewrite_touched_buckets`` copy-on-writes
-        every touched bucket — at 5M stored containment rows that is a
+        Why: a batch-cadence writer upserts mostly-fresh keys every
+        trigger, and ``_rewrite_touched_buckets`` copy-on-writes
+        every touched bucket — at 5M stored rows that is a
         full-store rewrite per 500-doc batch (measured 6.9 s of a 15 s
         trigger, round 10). For a no-collision batch the merged result
         is exactly old-rows + new-rows, so each touched bucket's new
@@ -942,8 +942,8 @@ class ParquetTable:
 
     def merge_with(self, source: DataFrame, combine) -> None:
         """General MERGE with a caller-supplied ``combine(tgt_slice,
-        src) -> DataFrame`` (e.g. additive aggregate-state merging for
-        incremental rollups, operators/incremental.py).  Bucketed tables
+        src) -> DataFrame`` (e.g. additive aggregate-state merging, or
+        replacing matched rows verbatim).  Bucketed tables
         rewrite only the buckets the source touches — the combine sees
         exactly the target rows that can interact with the source keys."""
         src = align_to_schema(source, self.schema) \

@@ -866,131 +866,6 @@ def suggest_lsh_chunk_bits(n: int, target_bucket_pop: float = 4.0) -> int:
     return max(4, math.ceil(math.log2(max(2.0, n / target_bucket_pop))))
 
 
-class IncrementalEmbeddingIndex:
-    """Embedding near-dup candidates for an APPEND-ONLY corpus without
-    recomputing old pairs — the vector-side sibling of
-    ``dedup.IncrementalNearDupIndex`` / ``IncrementalSimHashIndex``:
-
-      1. each new batch computes its hyperplane band keys once
-         (``embedding_lsh_bands``, one integer matmul per Arrow batch —
-         ``bands`` BIGINTs of state per vector, never the vector),
-      2. pairs the batch's band keys against the stored keys with an
-         O(batch)-sized plan (``dedup._batch_vs_stored_pairs``: the
-         stored side streams under broadcast joins, never shuffled;
-         old×old pairs were reported when those vectors arrived), so
-         incremental cost is O(batch × collision rate),
-      3. upserts the new keys (idempotent: re-adding refreshes them).
-
-    Returns CANDIDATE pairs; exact verification needs the vectors and
-    stays with the caller (``cosine_verify_pairs``), mirroring how the
-    text index defers to ``jaccard_verify``.  The same ``max_bucket``
-    guard caps degenerate buckets (zero vectors, boilerplate
-    embeddings) across the combined frame.  Size ``bits`` for the
-    EVENTUAL corpus (``suggest_lsh_chunk_bits``) — band keys persist,
-    so re-sizing later means rebuilding the index.  At corpus scale,
-    bucket the table (``buckets=N``) so upserts rewrite only touched
-    buckets; ``compact()`` bounds streaming-cadence file counts via the
-    same manifest commit as every maintenance op."""
-
-    def __init__(self, spark, path: str, *, bits: int = 96, bands: int = 8,
-                 dim: int = 64, max_bucket: int | None = 1000,
-                 buckets: int | None = None,
-                 banded_store: bool = False):
-        from tradingview_data_pipeline_spark.operators.dedup import (
-            BandedBucketStore,
-        )
-        from tradingview_data_pipeline_spark.operators.merge import ParquetTable
-        assert bits % bands == 0
-        self.bits, self.bands, self.dim = bits, bands, dim
-        self.max_bucket = max_bucket
-        schema = T.StructType(
-            [T.StructField("vec_id", T.LongType())]
-            + [T.StructField(f"p{j}", T.LongType()) for j in range(bands)])
-        self.table = ParquetTable(spark, path, schema, "vec_id",
-                                  buckets=buckets)
-        # same read-pruned mode as the text indexes (dedup.py)
-        self.store = BandedBucketStore(
-            spark, path.rstrip("/") + "_banded",
-            max_bucket=max_bucket, buckets=buckets) if banded_store \
-            else None
-
-    def _bk(self, melted: DataFrame) -> DataFrame:
-        return melted.select(
-            F.col("vec_id").alias("id"),
-            F.concat_ws(":", F.col("pos").cast("string"),
-                        F.col("key").cast("string")).alias("bk"),
-            F.lit(0).cast("long").alias("pl"))
-
-    def _wide(self, df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-        # one row per id BEFORE banding: a duplicated id in the batch
-        # would interleave its structs in the collect_list and shift
-        # every band key (the text siblings are safe because their
-        # signature aggregates group by doc_id); arbitrary-row pick
-        # matches merge_upsert's dedup-on-key contract
-        br = embedding_lsh_bands(
-            df.select(F.col(id_col).cast("long").alias("vec_id"),
-                      F.col(vec_col))
-            .dropDuplicates(["vec_id"]),
-            "vec_id", vec_col, bits=self.bits, bands=self.bands,
-            dim=self.dim)
-        return (br.groupBy("vec_id")
-                .agg(F.array_sort(F.collect_list(F.struct("pos", "key")))
-                     .alias("a"))
-                .select("vec_id", *[F.expr(f"a[{j}].key").alias(f"p{j}")
-                                    for j in range(self.bands)]))
-
-    def _melt(self, wide: DataFrame) -> DataFrame:
-        return wide.select(
-            "vec_id",
-            F.posexplode(F.array(*[F.col(f"p{j}")
-                                   for j in range(self.bands)]))
-            .alias("pos", "key"))
-
-    def add_and_find(self, df: DataFrame, id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
-        """Register a batch; return DISTINCT candidate pairs
-        (id_a < id_b) where at least one side is from this batch."""
-        from tradingview_data_pipeline_spark.operators.dedup import (
-            _batch_vs_stored_pairs,
-        )
-        new_w = self._wide(df, id_col, vec_col).localCheckpoint(eager=True)
-        new_ids = new_w.select("vec_id")
-        if self.store is not None:
-            old_melt = self._bk(self._melt(
-                self.table.read_matching(new_ids)
-                .join(F.broadcast(new_ids), "vec_id", "left_semi"))) \
-                .select("id", "bk")
-            pairs = (self.store.add_and_pairs(
-                self._bk(self._melt(new_w)), old_melt)
-                .select("id_a", "id_b").distinct())
-        else:
-            stored = self.table.read()
-            stored_melt = self._melt(
-                stored.join(F.broadcast(new_ids), "vec_id", "left_anti"))
-            # O(batch) plan: stored side streams under broadcast joins —
-            # never shuffled (see dedup._batch_vs_stored_pairs)
-            pairs = (_batch_vs_stored_pairs(
-                self._melt(new_w), stored_melt, ["pos", "key"], "vec_id",
-                self.max_bucket)
-                .distinct())
-        pairs = pairs.localCheckpoint(eager=True)   # pin before the upsert
-        self.table.merge_upsert(new_w)
-        return pairs
-
-    def compact(self) -> None:
-        """Maintenance: one file per live bucket, results unchanged;
-        crash-safe via the manifest commit."""
-        self.table.compact()
-        if self.store is not None:
-            self.store.compact()
-
-    def rebuild_store(self) -> None:
-        """Backfill/repair the banded store from the band-key table —
-        see ``dedup.IncrementalNearDupIndex.rebuild_store``."""
-        assert self.store is not None
-        self.store.rebuild_from(self._bk(self._melt(self.table.read())))
-
-
 # ---------------------------------------------------------------------------
 # Dimensionality reduction — PCA (exact-moment) and random projection.
 # The 100-TB pre-step for the pairwise/ANN family: SemDeDup's in-cluster
@@ -1282,119 +1157,3 @@ def load_pca(spark, path: str) -> PcaModel:
     expl = np.array([cells[(-2, j)] for j in range(k)])
     return PcaModel(comp, mean, int(cells[(-3, -3)]), expl,
                     center=bool(cells[(-4, -4)]), grid=int(cells[(-5, -5)]))
-
-
-class IncrementalPca:
-    """Streaming-cadence PCA maintenance — the incremental counterpart
-    of ``pca_fit`` (the repo's family rule: every batch operator that
-    maintains corpus-derived state gets a persisted incremental index;
-    cf. IncrementalNearDupIndex / IncrementalUrlIndex / IncrementalRollup).
-
-    Why it works: the exact-moment representation (count, Σq, ΣqqT as
-    arbitrary-precision ints) is MERGEABLE — add a batch's cells to the
-    stored cells and the result is bit-identical to a from-scratch fit
-    over the union.  State is d²+d+2 rows in one keyed ParquetTable
-    (model-sized — KBs at d=64 — however many vectors have flowed
-    through), so maintenance cost is one moment pass over the BATCH
-    plus one tiny table rewrite: O(batch), never O(corpus).
-
-    Replay protocol: every applied ``batch_id`` is recorded as a marker
-    row IN THE SAME TABLE, so the moment update and the replay guard
-    commit in ONE atomic manifest swap — a crashed ``add_batch`` either
-    fully applied or never happened, and re-delivery is a no-op
-    (test-pinned).  This is stricter than the gram/line stores' content
-    dedup because moments are not content-addressable: double-adding
-    the same rows would silently skew the covariance.
-
-    ``model(out_dim, center=...)`` derives a ``PcaModel`` from the
-    stored cells at any time — bit-identical to ``pca_fit`` on the
-    concatenation of every applied batch (test-pinned).
-    """
-
-    def __init__(self, spark, path: str, *, grid: int = PCA_GRID):
-        from pyspark.sql import types as T
-
-        from tradingview_data_pipeline_spark.operators.merge import (
-            ParquetTable,
-        )
-        self.spark = spark
-        self.grid = grid
-        schema = T.StructType([
-            T.StructField("ck", T.StringType(), False),
-            T.StructField("i", T.IntegerType()),
-            T.StructField("j", T.IntegerType()),
-            T.StructField("v", T.DecimalType(38, 0)),
-        ])
-        # unbucketed: the whole state is d²+d+O(batches) tiny rows
-        self.table = ParquetTable(spark, path, schema, "ck", buckets=None)
-
-    # -- internals ------------------------------------------------------------
-
-    def _cells(self):
-        """(meta, moments, applied batch ids) from the committed state."""
-        meta, cells, batches = {}, {}, set()
-        for r in self.table.read().collect():
-            if r["ck"].startswith("batch:"):
-                batches.add(r["ck"][6:])
-            elif r["ck"].startswith("meta:"):
-                meta[r["ck"][5:]] = int(r["v"])
-            else:
-                cells[(r["i"], r["j"])] = int(r["v"])
-        return meta, cells, batches
-
-    def applied_batches(self) -> set:
-        return self._cells()[2]
-
-    # -- maintenance ----------------------------------------------------------
-
-    def add_batch(self, df: DataFrame, vec_col: str, batch_id: str) -> bool:
-        """Fold one batch into the stored moments; returns False (and
-        changes nothing) when ``batch_id`` was already applied."""
-        import decimal
-
-        meta, cells, batches = self._cells()
-        if batch_id in batches:
-            return False
-        head = df.select(vec_col).first()
-        if head is None or head[0] is None:
-            raise ValueError("add_batch: empty batch")
-        d = len(head[0])
-        if meta and meta.get("d") != d:
-            raise ValueError(
-                f"dimension mismatch: store built at d={meta.get('d')}, "
-                f"batch has d={d}")
-        if meta and meta.get("grid") != self.grid:
-            raise ValueError(
-                f"grid mismatch: store built at grid={meta.get('grid')}, "
-                f"instance configured grid={self.grid}")
-        n, s, g = _collect_moments(df, vec_col, d, self.grid)
-        new = dict(cells)
-        new[(-1, -1)] = new.get((-1, -1), 0) + n
-        for i in range(d):
-            new[(i, -1)] = new.get((i, -1), 0) + s[i]
-            for j in range(d):
-                new[(i, j)] = new.get((i, j), 0) + g[i][j]
-        rows = [(f"{i}:{j}", i, j, decimal.Decimal(v))
-                for (i, j), v in new.items()]
-        rows += [("meta:d", -9, -9, decimal.Decimal(d)),
-                 ("meta:grid", -9, -9, decimal.Decimal(self.grid)),
-                 (f"batch:{batch_id}", -9, -9, decimal.Decimal(0))]
-        src = self.spark.createDataFrame(rows, self.table.schema)
-        # ONE manifest commit carries the moments AND the replay marker
-        self.table.merge_upsert(src)
-        return True
-
-    # -- derivation -----------------------------------------------------------
-
-    def model(self, out_dim: int, *, center: bool = True) -> PcaModel:
-        meta, cells, _ = self._cells()
-        if not meta:
-            raise ValueError("no batches applied yet")
-        d = meta["d"]
-        if not 1 <= out_dim <= d:
-            raise ValueError(f"out_dim must be in [1, {d}]")
-        n = cells[(-1, -1)]
-        s = [cells.get((i, -1), 0) for i in range(d)]
-        g = [[cells.get((i, j), 0) for j in range(d)] for i in range(d)]
-        return _model_from_moments(n, s, g, d, out_dim,
-                                   center=center, grid=meta["grid"])

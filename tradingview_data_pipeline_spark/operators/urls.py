@@ -246,72 +246,3 @@ def domain_cap(df: DataFrame, id_col: str, url_col: str, *, k: int,
             .unionByName(mid.select(*cols))
             .unionByName(losers.select(*cols))
             .unionByName(survivors.select(*cols)))
-
-
-class IncrementalUrlIndex:
-    """Streaming-cadence URL dedup for an append-only corpus — the
-    incremental sibling of ``url_dedup``, completing the family pattern
-    (every dedup granularity here has a batch operator AND a persisted
-    incremental index: exact/MinHash/SimHash/embedding/lines/grams/URL).
-
-    State: one (uh, doc) row per first-seen canonical URL —
-    ``uh = xxhash64(canonical_url(url))``, ``doc`` the id that shipped
-    it — in a hash-bucketed ``ParquetTable`` keyed by ``uh``, so each
-    micro-batch READS only the bucket directories its own URL hashes
-    touch (``read_matching``: O(batch × bucket width), never O(store)).
-
-    Replay safety (the gram/line-store protocol): stored rows whose
-    ``doc`` is IN the current batch are that batch's own replay echoes
-    and are ignored when deciding "seen before", so a replayed batch
-    keeps exactly what the first run kept, and the insert anti-joins on
-    (uh, doc) — idempotent under any crash window. Rows whose URL does
-    not canonicalize (no scheme) always pass and are never recorded —
-    address-level dedup has no opinion on address-less docs.
-    """
-
-    def __init__(self, spark, path: str, *, buckets: int | None = None):
-        from pyspark.sql import types as T
-
-        from tradingview_data_pipeline_spark.operators.merge import (
-            ParquetTable)
-        self.table = ParquetTable(
-            spark, path,
-            T.StructType([T.StructField("uh", T.LongType()),
-                          T.StructField("doc", T.LongType())]),
-            "uh", buckets=buckets)
-
-    def add_and_filter(self, df: DataFrame, id_col: str,
-                       url_col: str) -> DataFrame:
-        """Register a batch; return its first-seen rows (original
-        columns) — within-batch dups keep the smallest id, rows whose
-        canonical URL the store has already seen are dropped."""
-        canon = canonical_url(F.col(url_col))
-        batch = df.withColumn(
-            "__uh", F.when(canon.isNotNull(), F.xxhash64(canon))) \
-            .localCheckpoint(eager=True)
-        hashed = batch.where(F.col("__uh").isNotNull())
-        keys = hashed.select(F.col("__uh").alias("uh")).distinct()
-        batch_docs = hashed.select(F.col(id_col).alias("doc")).distinct()
-        seen = (self.table.read_matching(keys)
-                .join(F.broadcast(keys), "uh", "left_semi")
-                .join(F.broadcast(batch_docs), "doc", "left_anti")
-                .select("uh").distinct())
-        fresh = hashed.join(seen, F.col("__uh") == F.col("uh"),
-                            "left_anti")
-        first = (fresh.groupBy("__uh")
-                 .agg(F.min(id_col).alias("__keep")))
-        keepers = (fresh.join(first, "__uh")
-                   .where(F.col(id_col) == F.col("__keep"))
-                   .drop("__keep"))
-        passthrough = batch.where(F.col("__uh").isNull())
-        out = keepers.unionByName(passthrough).drop("__uh") \
-            .localCheckpoint(eager=True)       # pin before the commit
-        new_rows = keepers.select(F.col("__uh").alias("uh"),
-                                  F.col(id_col).alias("doc"))
-        self.table.merge_with(
-            new_rows, lambda tgt, src: tgt.unionByName(
-                src.join(tgt, ["uh", "doc"], "left_anti")))
-        return out
-
-    def compact(self) -> None:
-        self.table.compact()

@@ -335,8 +335,7 @@ def main(argv: list[str] | None = None) -> None:
         reported("Corpus Prep", corpus_body)
     if args.job == "train-classifier":
         # train the learned quality filter once, offline; the weights
-        # parquet is the artifact --quality-model consumes (and the
-        # incremental builder reloads across restarts) — train-once /
+        # parquet is the artifact --quality-model consumes — train-once /
         # gate-anywhere, mirroring the tokenizer artifact contract
         from tradingview_data_pipeline_spark.operators import (
             classify as _cl,

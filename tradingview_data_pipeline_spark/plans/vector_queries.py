@@ -120,7 +120,7 @@ def q53_centroid_ann(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # q81 — exact embedding moment cells (slot freed by merge #18): the
-# distributed HALF of PCA (`similarity.pca_fit` / `IncrementalPca`)
+# distributed HALF of PCA (`similarity.pca_fit`)
 # made oracle-checkable.  The fit's only cross-machine artifact is the
 # moment cell set — count (−1,−1), first moments (i,−1), second-moment
 # Gram (i,j) — over elements quantized to the 1e-4 grid; everything

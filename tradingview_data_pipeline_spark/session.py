@@ -161,7 +161,7 @@ _LOCAL_DEFAULTS = {
     # (interleaved min-of-4). Parallelism-first coalescing stays.
     # zstd over default snappy: ~30-40% smaller parquet at comparable
     # speed — at the 100 TB design point scan bytes are the dominant
-    # cost, and every maintained table (MERGE/rollup/SCD2/export) is
+    # cost, and every maintained table (MERGE/export) is
     # written through this session. Runtime bloom-filter join pruning
     # is already on by default in Spark 4.
     "spark.sql.parquet.compression.codec": "zstd",

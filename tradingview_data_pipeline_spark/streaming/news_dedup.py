@@ -23,7 +23,7 @@ truncation (F12), provider prefix strip (F13), URL composition (F16).
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from tradingview_data_pipeline_spark.functions.cleaning import (
@@ -82,44 +82,6 @@ def stream_news_to_table(
             table.append_dedup(batch)
 
     writer = deduped.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_neardup_candidates(
-    doc_stream: DataFrame,
-    index,      # dedup.IncrementalNearDupIndex / IncrementalSimHashIndex
-    pairs_table: ParquetTable,              # / similarity.IncrementalEmbeddingIndex
-    checkpoint_dir: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    available_now: bool = True,
-):
-    """Streaming near-duplicate detection: each micro-batch registers its
-    documents with the incremental index and appends the NEW candidate
-    pairs (new-member-only — nothing is re-reported) to a keyed pairs
-    table. Work per trigger is O(batch × collision rate): the signature
-    table carries the whole corpus history, the stream never re-reads
-    it. Restart-safe end-to-end: the checkpoint replays an
-    unacknowledged batch, ``add_and_find`` re-upserts the same
-    signatures (idempotent MERGE), and the pairs sink dedups on the
-    pair key.
-
-    Works with every incremental index family — all expose
-    ``add_and_find(batch, id_col, content_col)`` returning (a, b) pair
-    columns: MinHash/SimHash over text, hyperplane LSH over embeddings
-    (pass ``text_col="embedding"``; pair columns differ in name only,
-    so the key is derived from whatever the index returns)."""
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        pairs = index.add_and_find(batch_df, id_col, text_col)
-        ca, cb = pairs.columns[:2]
-        pairs_table.append_dedup(
-            pairs.withColumn("pair_key", F.concat_ws(":", ca, cb)))
-
-    writer = doc_stream.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)

@@ -1,4 +1,4 @@
-"""Every public top-level name in the package is reached from a root.
+"""Every public name in the package is reached from a root.
 
 A static guard over the package's AST. The roots are the surfaces the
 engine is run through:
@@ -19,7 +19,8 @@ tracer wraps functions), and every method of a reached class whose name
 it mentions. A public (non-underscore) function, class or method of a
 reached class that no root reaches must sit on ``ALLOWLIST`` with a
 one-line reason, and an entry whose name no longer exists, or is now
-reached, is stale.
+reached, is stale. The same kind of dead entry is checked for in the
+conftest's ``scale``-tier name list.
 """
 
 import ast

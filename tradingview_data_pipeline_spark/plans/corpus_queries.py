@@ -491,8 +491,8 @@ def q71_bm25_rank(spark, sf_dir):
 #                   approximation of suffix-array substring dedup,
 #                   catching boilerplate spans document-level MinHash
 #                   (q28) misses;
-#   'containment' — directed near-containment pairs, computed here
-#                   over the same gram counts: docs >= 50% of whose in-universe
+#   'containment' — directed near-containment pairs over the same
+#                   gram counts: docs >= 50% of whose in-universe
 #                   8-grams appear in the partner — the ASYMMETRIC
 #                   measure (Broder 1997) that flags a short doc quoted
 #                   wholesale inside a larger one, which Jaccard
@@ -615,7 +615,7 @@ def q72_dup_spans(spark, sf_dir):
                        .otherwise(F.lit(0.0)).alias("frac")))
     # containment over the df-capped universe (kept = grams with nd in
     # [2, cap]); the denominator n_grams comes from the combined
-    # aggregate instead of its own groupBy pass
+    # aggregate, not a groupBy pass of its own
     kept = (pgn.where((F.col("nd") >= 2) & (F.col("nd") <= _Q72_CCAP))
             .select("doc_id", "h"))
     a = kept.select(F.col("doc_id").alias("_ida"), "h")

@@ -94,6 +94,15 @@ def test_region_pick_joins_are_broadcast(spark):
 # reproduce the reference bit-for-bit and has a tested mode="scale").
 # ---------------------------------------------------------------------------
 
+def _part_as_stocks(spark):
+    """The part table dressed as a two-metric stock frame."""
+    return (spark.read.parquet(f"{SF}/part.parquet")
+            .selectExpr("p_name as symbol", "p_type as sector",
+                        "p_brand as industry",
+                        "cast(p_retailprice as double) as pe_ratio",
+                        "cast(p_size as double) as return_on_equity_ttm"))
+
+
 def test_fundamental_scores_with_hint_runs_no_action(spark):
     """The scoring job's percentile-mode gate must not spend a Spark
     action when the caller supplies a size hint (the job path passes
@@ -103,11 +112,7 @@ def test_fundamental_scores_with_hint_runs_no_action(spark):
 
     from tradingview_data_pipeline_spark.plans import fundamental_score as fs
 
-    df = (spark.read.parquet(f"{SF}/part.parquet")
-          .selectExpr("p_name as symbol", "p_type as sector",
-                      "p_brand as industry",
-                      "cast(p_retailprice as double) as pe_ratio",
-                      "cast(p_size as double) as return_on_equity_ttm"))
+    df = _part_as_stocks(spark)
 
     def boom(self, *a, **kw):                  # any action = test failure
         raise AssertionError("Spark action during plan construction")
@@ -129,6 +134,33 @@ def test_fundamental_scores_with_hint_runs_no_action(spark):
     )
     assert parquet_footer_rows([f"{SF}/part.parquet"]) \
         == spark.read.parquet(f"{SF}/part.parquet").count()
+
+
+def test_fundamental_scores_small_and_set_modes_agree(spark):
+    """The size hint picks the percentile operator's plan, never its
+    numbers: the window form (small) equals the set-based form row for
+    row."""
+    from tradingview_data_pipeline_spark.plans import fundamental_score as fs
+
+    df = _part_as_stocks(spark)
+    small = fs.fundamental_scores(df, size_hint_rows=2_000).collect()
+    large = fs.fundamental_scores(df, size_hint_rows=10**9).collect()
+    assert len(small) == df.count()
+    assert sorted(map(tuple, small)) == sorted(map(tuple, large))
+
+
+def test_fundamental_scores_small_mode_plan_shape(spark):
+    """Small mode ranks the melted frame with windows on the plan's own
+    keys: the whole scoring plan holds at most 10 shuffle exchanges and 3
+    broadcasts (the histogram/offset/total form planned 28 and 15)."""
+    from tradingview_data_pipeline_spark.plans import fundamental_score as fs
+
+    scored = fs.fundamental_scores(_part_as_stocks(spark), size_hint_rows=2_000)
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    broadcasts = plan.count("BroadcastExchange")
+    shuffles = plan.count("Exchange ") - broadcasts
+    assert shuffles <= 10, plan
+    assert broadcasts <= 3, plan
 
 
 _AGG_NODES = ("HashAggregate", "SortAggregate", "ObjectHashAggregate")

@@ -20,7 +20,8 @@ it mentions. A public (non-underscore) function, class or method of a
 reached class that no root reaches must sit on ``ALLOWLIST`` with a
 one-line reason, and an entry whose name no longer exists, or is now
 reached, is stale. The same kind of dead entry is checked for in the
-conftest's ``scale``-tier name list.
+conftest's ``scale``-tier name list, and so is a module-level import that
+its module never uses.
 """
 
 import ast
@@ -275,3 +276,29 @@ def test_scale_tier_names_are_defined_tests():
                         if isinstance(n, ast.FunctionDef) and n.name.startswith("test_")}
     assert not scale - defined, \
         f"scale-tier names with no test behind them: {sorted(scale - defined)}"
+
+
+def _unused_imports(tree) -> list:
+    """(line, name) of each module-level import the module never mentions
+    as a name; a name listed in ``__all__`` is a re-export, not unused."""
+    bound = {}
+    for node in tree.body:
+        if isinstance(node, ast.Import):
+            bound.update({(a.asname or a.name).split(".")[0]: node.lineno
+                          for a in node.names})
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            bound.update({a.asname or a.name: node.lineno for a in node.names})
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+                getattr(t, "id", None) == "__all__" for t in node.targets):
+            used |= set(ast.literal_eval(node.value))
+    return sorted((line, name) for name, line in bound.items() if name not in used)
+
+
+def test_package_modules_use_every_import():
+    unused = []
+    for path in sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, PKG)
+        unused += [f"{rel}:{line} {name}" for line, name in _unused_imports(_parse(path))]
+    assert not unused, f"module-level imports their module never uses: {unused}"

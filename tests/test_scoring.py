@@ -2,6 +2,8 @@
 SURVEY §4 items 3-4 (ddof=1, <2-peer neutral 50, std==0 skip, strict
 inequality, tie determinism)."""
 
+import itertools
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -129,8 +131,9 @@ def test_hierarchical_coalesce_gates(spark):
 
 
 def test_attach_peer_percentile_exact_matches_window(spark):
-    """Set-based exact percentile == (rank-1)*100/n window formula,
-    globally and per group, with ties and nulls."""
+    """Both modes == (rank-1)*100/n window formula, globally and per
+    group, with ties and nulls. Small mode is that window itself, so this
+    is the equivalence check on the set-based path."""
     import random
     rng = random.Random(7)
     rows = [(i, ["x", "y", "z"][i % 3],
@@ -138,10 +141,10 @@ def test_attach_peer_percentile_exact_matches_window(spark):
             for i in range(200)]
     df = spark.createDataFrame(rows, "id long, grp string, v double")
 
-    from pyspark.sql import Window
-    for keys in ([], ["grp"]):
+    for mode, keys in itertools.product(("small", "set"), ([], ["grp"])):
         got = ops.attach_peer_percentile_exact(
-            df, "v", "pct", group_keys=keys, min_peers=2, round_digits=2)
+            df, "v", "pct", mode=mode, group_keys=keys, min_peers=2,
+            round_digits=2)
         wr = Window.partitionBy(*keys).orderBy(F.col("v").asc_nulls_last())
         wg = Window.partitionBy(*keys) if keys else Window.partitionBy(F.lit(0))
         n = F.count("v").over(wg)
@@ -151,17 +154,21 @@ def test_attach_peer_percentile_exact_matches_window(spark):
         exp = df.withColumn("pct", ref_pct)
         g = {r["id"]: r["pct"] for r in got.collect()}
         x = {r["id"]: r["pct"] for r in exp.collect()}
-        assert g == x, keys
+        assert g == x, (mode, keys)
 
 
 def test_attach_peer_percentile_small_group_gets_neutral(spark):
     df = spark.createDataFrame(
         [(1, "a", 5.0), (2, "b", 1.0), (3, "b", 2.0)],
         "id long, grp string, v double")
-    out = ops.attach_peer_percentile_exact(df, "v", "pct", group_keys=["grp"])
-    got = {r["id"]: r["pct"] for r in out.collect()}
-    assert got[1] == 50.0            # singleton group -> neutral
-    assert got[2] == 0.0 and got[3] == 50.0
+    for mode in ("small", "set"):
+        out = ops.attach_peer_percentile_exact(df, "v", "pct", mode=mode,
+                                               group_keys=["grp"])
+        got = {r["id"]: r["pct"] for r in out.collect()}
+        assert got[1] == 50.0            # singleton group -> neutral
+        assert got[2] == 0.0 and got[3] == 50.0
+    with pytest.raises(ValueError, match="small/set"):
+        ops.attach_peer_percentile_exact(df, "v", "pct", mode="auto")
 
 
 def test_weighted_sum_null_as_zero(spark):

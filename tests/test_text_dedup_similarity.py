@@ -400,6 +400,23 @@ def test_connected_components_chains_and_keeper(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 9: 1, 5: 5, 6: 5}
 
 
+def test_connected_components_driver_path_is_a_local_table(spark):
+    """The driver path hands its union-find result to the JVM as an Arrow
+    table: a LocalTableScan, no PythonRDD scan for Python workers to
+    serve. String ids and an empty pair set keep their id type."""
+    cases = [([("b", "c"), ("a", "b"), ("x", "y")], "string",
+              {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}),
+             ([], "bigint", {}), ([], "string", {})]
+    for edges, id_type, want in cases:
+        pairs = spark.createDataFrame(edges, f"doc_a {id_type}, doc_b {id_type}")
+        comp = dd.connected_components(pairs)
+        plan = comp._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert comp.schema.simpleString() == \
+            f"struct<doc_id:{id_type},cluster_id:{id_type}>"
+        assert {r["doc_id"]: r["cluster_id"] for r in comp.collect()} == want
+
+
 def test_dedup_clusters_end_to_end(spark):
     base = "the quick brown fox jumps over the lazy dog and runs far away today"
     df = spark.createDataFrame(

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
 # F1 — clean_value (reference: uploadtodb.py:126-138, funda_uploadtodb.py:113-136)

@@ -23,6 +23,7 @@ across engines and runs — never engine-native ``hash()``.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -495,12 +496,14 @@ def connected_components(pairs: DataFrame, *, max_iter: int = 10,
             if a != b:
                 lo, hi = (a, b) if (a < b) else (b, a)
                 parent[hi] = lo
-        nodes = {x for r in rows for x in (r["doc_a"], r["doc_b"])}
-        out = [(x, find(x)) for x in nodes]
+        nodes = list({x for r in rows for x in (r["doc_a"], r["doc_b"])})
         # derive the id type from the input so string/any-typed doc ids work
         id_type = pairs.schema["doc_a"].dataType
         out_schema = T.StructType([T.StructField("doc_id", id_type),
                                    T.StructField("cluster_id", id_type)])
+        # an Arrow table becomes a LocalTableScan on the JVM; a list of
+        # tuples would run a PythonRDD stage on cold Python workers
+        out = pa.table({"doc_id": nodes, "cluster_id": [find(x) for x in nodes]})
         return pairs.sparkSession.createDataFrame(out, out_schema)
 
     # Iteration-loop plan hygiene (r13, guide §2.4/§5): everything a

@@ -7,8 +7,9 @@ file:line in ``/root/reference/``.
 Scale notes (100 TB design point):
 - Window functions shuffle on their partition keys; every operator here
   partitions by a business key (sector/industry/category), never globally —
-  except ``bucket_by_global_rank`` in parity mode, which is documented and
-  gated (see its docstring for the scale-mode alternative).
+  except ``bucket_by_global_rank`` in parity mode and
+  ``attach_peer_percentile_exact`` in small mode, which are documented and
+  gated (see their docstrings for the scale-mode alternatives).
 - Peer statistics at multiple granularities are computed as *windowed
   aggregates over the same shuffled layout* where possible (industry windows
   are sub-partitions of sector windows), letting Spark reuse one exchange
@@ -204,7 +205,7 @@ def group_zscore(value: Column, w: WindowSpec, *, min_group: int = 3,
 
 def peer_percentile(df: DataFrame, metric: str, partition_by: Sequence[str],
                     out_col: str | None = None, *, lower_is_better: bool = False,
-                    min_peers: int = 2) -> DataFrame:
+                    min_peers: int = 2, round_digits: int | None = None) -> DataFrame:
     out_col = out_col or f"{metric}_pct"
     v = F.col(metric)
     direction = v.asc_nulls_last() if not lower_is_better else v.desc_nulls_last()
@@ -212,6 +213,8 @@ def peer_percentile(df: DataFrame, metric: str, partition_by: Sequence[str],
     wg = Window.partitionBy(*partition_by)
     n = F.count(v).over(wg)
     pct = (F.rank().over(w) - F.lit(1)) * 100.0 / n
+    if round_digits is not None:
+        pct = round_py(pct, round_digits)
     return df.withColumn(
         out_col,
         F.when(v.isNull(), F.lit(None).cast("double"))
@@ -222,11 +225,12 @@ def peer_percentile(df: DataFrame, metric: str, partition_by: Sequence[str],
 
 # ---------------------------------------------------------------------------
 # W4 at the "all" granularity — exact global (or tiny-key-grouped) peer
-# percentile WITHOUT a single-task window. An empty-partition Window
-# evaluates the whole table in one task; this operator gets the identical
-# numbers from set-based passes:
+# percentile, pct(v) = 100 * #{peers < v} / #peers == (rank(v)-1)*100/n.
 #
-#   pct(v) = 100 * #{peers < v} / #peers        (== (rank(v)-1)*100/n)
+# "small" mode is the rank window itself (peer_percentile): one exchange
+# on the keys, and a group's rows sit in one task, which is fine while the
+# input is small. "set" mode gets the identical numbers WITHOUT a window
+# over a whole group, from set-based passes:
 #
 #   1. histogram: groupBy(keys, value) -> count          [shuffle on value]
 #   2. range-bucket the distinct values by approxQuantile split points
@@ -237,63 +241,62 @@ def peer_percentile(df: DataFrame, metric: str, partition_by: Sequence[str],
 #   4. broadcast per-keys totals -> n
 #   5. left-join the (keys, value) -> pct lookup back onto the fact
 #
-# Every stage is either a hash aggregate, a window over a bounded frame,
-# or a broadcast join — nothing holds O(table) rows in one task.
+# Every set-mode stage is either a hash aggregate, a window over a bounded
+# frame, or a broadcast join — nothing holds O(table) rows in one task.
 # ---------------------------------------------------------------------------
+
+SET_MODE_BUCKETS = 64    # approxQuantile split points per group, set mode
+
 
 def attach_peer_percentile_exact(
     df: DataFrame,
     value_col: str,
     out_col: str,
     *,
+    mode: str,
     group_keys: Sequence[str] = (),
     min_peers: int = 2,
     round_digits: int | None = None,
-    buckets: int = 64,
-    mode: str = "auto",
-    small_input_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Attach ``out_col`` = exact ascending peer percentile of
     ``value_col`` within ``group_keys`` (empty = global peer set).
 
     Matches ``(rank() over (order by v asc nulls last) - 1) * 100 / n``
-    bit-for-bit: #{< v} and n are exact integers, combined with the same
-    double arithmetic. Rows with NULL value get NULL (callers mask).
-    Groups with fewer than ``min_peers`` non-null values get 50.0.
+    bit-for-bit, with ``n = count(v)`` over the group: #{< v} and n are
+    exact integers, combined with the same double arithmetic and the
+    same ``round_py`` rounding. Rows with NULL value get NULL (callers
+    mask). Groups with fewer than ``min_peers`` non-null values get 50.0.
 
-    ``mode`` gates the bucketing stage (results are identical in every
-    mode — only the physical plan changes):
+    ``mode`` picks the physical plan; the results are identical in both
+    modes, and callers pick it from a row count they already hold
+    (parquet footers), so choosing it runs no Spark job:
 
-    - ``"set"``: always compute ~``buckets`` approx-quantile split points
-      (one eager action) so the ranking window runs per (keys, bucket) —
-      the 100 TB path: no task ever holds more than ~1/buckets of a
-      group's distinct values.
-    - ``"small"``: single bucket, NO approxQuantile action.  The ranking
-      window runs over the per-(keys) distinct-value histogram — an
-      aggregated, bounded frame, so this is safe whenever the histogram
-      fits in a task, and 2 Spark jobs cheaper locally.
-    - ``"auto"`` (default): a bounded LIMIT-probe (reads at most
-      ``small_input_threshold + 1`` rows, never the full table) picks
-      ``small`` below the threshold, ``set`` at or above it.
+    - ``"small"``: that formula as written — a rank window and a count
+      window over ``partition by keys`` (one exchange). A group's rows
+      sit in one task, so this is for inputs that fit in one.
+    - ``"set"``: ``SET_MODE_BUCKETS`` approx-quantile split points (one
+      eager action) so the ranking window runs per (keys, bucket) over
+      the distinct-value histogram — the 100 TB path: no task ever holds
+      more than ~1/buckets of a group's distinct values.
     """
     keys = list(group_keys)
+    if mode == "small":
+        return peer_percentile(df, value_col, keys, out_col,
+                               min_peers=min_peers, round_digits=round_digits)
+    if mode != "set":
+        raise ValueError(f"attach_peer_percentile_exact: mode must be small/set, got {mode!r}")
+
     v = F.col(value_col)
     nn = df.where(v.isNotNull()).select(*keys, v.alias("__gv"))
     hist = nn.groupBy(*keys, "__gv").agg(F.count(F.lit(1)).alias("__c"))
 
-    if mode == "auto":
-        probe = nn.limit(small_input_threshold + 1).count()
-        mode = "small" if probe <= small_input_threshold else "set"
-
-    if mode == "small":
-        bounds: list[float] = []
-    else:
-        # split points: balance only; dedup + sort so bucket ids are ordered
-        probs = [i / buckets for i in range(1, buckets)]
-        try:
-            bounds = sorted(set(nn.stat.approxQuantile("__gv", probs, 1.0 / (4 * buckets))))
-        except Exception:        # empty input
-            bounds = []
+    # split points: balance only; dedup + sort so bucket ids are ordered
+    probs = [i / SET_MODE_BUCKETS for i in range(1, SET_MODE_BUCKETS)]
+    try:
+        bounds = sorted(set(nn.stat.approxQuantile(
+            "__gv", probs, 1.0 / (4 * SET_MODE_BUCKETS))))
+    except Exception:        # empty input
+        bounds = []
     if bounds:
         barr = F.array(*[F.lit(float(b)) for b in bounds])
         bid = F.size(F.filter(barr, lambda b: b < F.col("__gv")))
@@ -331,10 +334,6 @@ def attach_peer_percentile_exact(
     lookup = hist.select(
         *[F.col(k).alias(f"__k_{k}") for k in keys],
         F.col("__gv"), pct.alias(out_col))
-    if mode == "small":
-        # the histogram is probe-bounded here, so ship it to the fact side
-        # instead of shuffling the fact into a sort-merge join
-        lookup = F.broadcast(lookup)
     cond = [df[k].eqNullSafe(lookup[f"__k_{k}"]) for k in keys]
     cond.append(df[value_col] == lookup["__gv"])
     joined = df.join(lookup, on=_and_all(cond), how="left")

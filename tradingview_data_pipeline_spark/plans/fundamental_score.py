@@ -15,15 +15,24 @@ whole job is windows + expressions:
 4. 0.4/0.3/0.2/0.1 blend with neutral-50 default (A8, :304-316);
 5. rank within market-cap category (W2, :339-349).
 
-Three shuffles total (industry / sector / global percentile trees) — each
-partitioned by a business key, skew-safe under AQE; nothing is
-single-task. At 100 TB the same plan holds: the windows are per-metric
-expressions over three exchanges, not per-metric jobs.
+Plan size, counted on the executed plan: at market size (small mode,
+below ``2M / len(metrics)`` rows) the job plans 10 shuffle exchanges and
+3 broadcasts. The three rank windows share ONE exchange on ``metric``,
+because (metric) partitioning satisfies the (metric, industry) and
+(metric, sector) windows too. The other nine are the industry and sector
+peer-count windows (planned on both the wide and the melted frame), the
+(metric, industry) and (metric, sector) count aggregates (the second
+recomputes the first), and the pivot and join-back on ``symbol``. Each
+exchange is partitioned by a business key, skew-safe under AQE. At
+decade scale (set mode) the "all" level comes from the set-based
+percentile operator instead (29 exchanges, 14 broadcasts): no window
+over a whole metric, nothing single-task, and still per-metric
+expressions over shared exchanges, not per-metric jobs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tradingview_data_pipeline_spark.functions.cleaning import clip_upper, round_py
@@ -153,15 +162,16 @@ def fundamental_scores(df: DataFrame, *,
             pct = round_py((F.rank().over(wr) - F.lit(1)) * 100.0 / n, 2)
             return F.when(n < 2, F.lit(50.0)).otherwise(pct)
 
-        # "all"-level percentile per metric: a (metric)-partitioned window
-        # holds the FULL table in one task per metric at scale, so it comes
-        # from the set-based exact-percentile operator instead. The mode
-        # gate prefers a caller-supplied size hint (the job path passes
-        # ParquetTable.row_count() — exact, from parquet footers, zero
-        # Spark actions); only hint-less callers pay the bounded
-        # LIMIT-probe fallback. Results are identical in either mode —
-        # only the physical plan changes, so a stale/absent hint can
-        # never change answers.
+        # "all"-level percentile per metric: small mode is the
+        # (metric)-partitioned rank window, which shares the exchange of
+        # the two keyed windows above; at scale that window holds the FULL
+        # table in one task per metric, so set mode uses the set-based
+        # form instead. The mode gate prefers a caller-supplied size hint
+        # (the job path passes ParquetTable.row_count() — exact, from
+        # parquet footers, zero Spark actions); only hint-less callers pay
+        # the bounded LIMIT-probe fallback. Results are identical in
+        # either mode — only the physical plan changes, so a stale/absent
+        # hint can never change answers.
         cap = 2_000_000 // max(len(metrics), 1)
         n_rows = size_hint_rows if size_hint_rows is not None \
             else df.limit(cap + 1).count()

@@ -404,19 +404,20 @@ def q38_fundamental_shape(spark, sf_dir):
     vv = F.col("p_size").cast("double") - 25.0
     vv_m = F.when(vv <= 0, F.lit(None).cast("double")).otherwise(vv)
 
-    # the "all"-level percentiles come from the set-based exact-percentile
-    # operator (histogram + bucket offsets + broadcast joins) — NOT an
-    # empty-partition window, which would evaluate the whole table in one
-    # task at scale. Keyed levels keep business-key windows.
+    # the "all"-level percentiles come from the exact-percentile operator:
+    # a rank window per metric while the table is small, its set-based
+    # form (histogram + bucket offsets + broadcast joins) once a window
+    # per metric would hold too much of the table in one task. Keyed
+    # levels keep business-key windows.
     base = p.select("p_partkey", "p_brand", "p_type",
                     vq.alias("__vq"), vv.alias("__vv"), (-vv_m).alias("__negv"))
     # the mode gate reads the part table's parquet FOOTER row count —
-    # exact, driver-side, zero Spark actions (auto mode would LIMIT-probe
-    # through join lineage) — and BOTH metrics go through ONE melted
-    # attach call (keys=['__m']): one histogram scan and one join-back
-    # instead of two of each. The cap is divided by the melt factor:
-    # stack(2, ...) doubles the frame, and it's the MELTED frame that
-    # "small" mode broadcasts. Mode changes the plan, never the result.
+    # exact, driver-side, zero Spark actions — and BOTH metrics go through
+    # ONE melted attach call (keys=['__m']): one exchange (small) or one
+    # histogram scan and join-back (set) instead of two of each. The cap
+    # is divided by the melt factor: stack(2, ...) doubles the frame, and
+    # it's the MELTED frame whose per-metric groups "small" mode ranks in
+    # one task each. Mode changes the plan, never the result.
     from tradingview_data_pipeline_spark.operators.merge import parquet_footer_rows
     _cap = 2_000_000 // 2
     n_rows = parquet_footer_rows([os.path.join(sf_dir, "part.parquet")])

@@ -10,8 +10,6 @@ expressions so both sides stay in lockstep. Hashing is md5-derived
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from tradingview_data_pipeline_spark.operators import dedup as dd

@@ -57,8 +57,6 @@ _SCALE_TESTS = {
     "test_corpus_prep_sequence_targets_causal",
     "test_corpus_prep_tokenize_pack_stage",
     "test_full_dag",
-    # test_merge_and_sources.py
-    "test_random_op_sequence_bucketed_matches_unbucketed",
     # test_pipelines.py
     "test_fundamental_ranks",
     # test_plan_shapes.py
@@ -96,8 +94,6 @@ _SCALE_TESTS = {
     # test_text_dedup_similarity.py
     "test_connected_components_distributed_matches_driver_path",
     "test_connected_components_distributed_path_graph_converges",
-    # test_time_travel.py
-    "test_randomized_ops_match_snapshot_model",
     # test_urls.py
     "test_domain_cap_mode_equivalence",
 }

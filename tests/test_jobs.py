@@ -146,8 +146,8 @@ def test_backfill_replays_history_in_mtime_order(spark, tmp_path):
     again = jobs.run_backfill(spark, str(downloads), tables)
     assert again["stock_data_rows"] == 20
 
-    st = tables["stock_data"].status()          # warehouse table is plain
-    assert st["layout"] == "plain" and st["parquet_files"] > 0
+    st = tables["stock_data"].status()
+    assert st["exists"] and st["parquet_files"] > 0
     assert st["bytes"] > 0
 
 
@@ -313,7 +313,7 @@ def test_cli_reconcile_detects_divergence(spark, tmp_path, capsys,
     assert "stock_data OK" in out and "DIVERGENT" not in out
 
     # tamper with copy B -> the CLI flags it and exits 1
-    wh_b["stock_data"].update_where(spark.createDataFrame(
+    wh_b["stock_data"].merge_upsert(spark.createDataFrame(
         [("SYM003", 99.0)], "symbol string, rsi_14_1_day double"))
     with pytest.raises(SystemExit) as exc:
         jobs.main(argv)
@@ -349,7 +349,7 @@ def test_cli_reconcile_flags_missing_column(spark, tmp_path, capsys,
         if warehouse.endswith("wb"):
             t = tables["stock_data"]
             orig = t.read
-            t.read = lambda version=None: orig(version).drop("rsi_14_1_day")
+            t.read = lambda: orig().drop("rsi_14_1_day")
         return tables
 
     monkeypatch.setattr(jobs, "warehouse_tables", dropping)

@@ -1,30 +1,21 @@
-"""Crash-consistency of the manifest-committed bucket MERGE (merge.py
-`_rewrite_touched_buckets` + `_commit_manifest` + `repair`).
+"""Crash consistency of ParquetTable's whole-table swap (merge.py
+``_replace_with``).
 
-The bucketed layout is a set of immutable bucket directories plus one
-`_manifest.json`; the ONLY visibility point of a maintenance op is the
-atomic `os.replace` of that manifest. These tests pin the contract:
-
-- a crash at ANY point BEFORE the commit leaves reads on the exact
-  pre-merge snapshot (never mixed, never missing a bucket);
-- a crash AFTER the commit (before garbage collection) leaves reads on
-  the exact post-merge snapshot; stale dirs are invisible orphans;
-- reads NEVER mutate the directory (no repair-on-read);
-- re-running the interrupted op (or `repair()`) converges to the same
-  state as an uninterrupted run and clears the orphans;
-- pre-manifest (hive-layout) tables, including their historical
-  rename-pair crash states, migrate in place on the first maintenance
-  op.
+A write lands in a sibling ``path__tmp_*`` directory and is swapped in
+with two renames: ``path -> path__old_*``, then ``tmp -> path``. A crash
+between them leaves no ``path``. Reads must still see the last committed
+table (the lone ``__old_`` copy) without writing anything, and the next
+write must commit on top of it and leave no sibling directory behind.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
 from pyspark.sql import types as T
 
+from tradingview_data_pipeline_spark.operators import merge
 from tradingview_data_pipeline_spark.operators.merge import ParquetTable
 
 SCHEMA = T.StructType([
@@ -33,241 +24,39 @@ SCHEMA = T.StructType([
 ])
 
 
-def _rows(df):
-    return {r["symbol"]: r["v"] for r in df.collect()}
+def _rows(t):
+    return {r["symbol"]: r["v"] for r in t.read().collect()}
 
 
-def _listing(path):
-    return sorted(os.listdir(path))
+def test_crash_between_swap_renames_keeps_the_table(spark, tmp_path,
+                                                    monkeypatch):
+    path = str(tmp_path / "tbl")
+    ParquetTable(spark, path, SCHEMA, "symbol").overwrite(
+        spark.createDataFrame([("A", 1.0), ("B", 2.0)], SCHEMA))
 
-
-def _make(spark, tmp_path, n=40):
-    t = ParquetTable(spark, str(tmp_path / "tbl"), SCHEMA, "symbol", buckets=4)
-    base = spark.createDataFrame(
-        [(f"S{i:03d}", float(i)) for i in range(n)], SCHEMA)
-    t.overwrite(base)
-    src = spark.createDataFrame(
-        [(f"S{i:03d}", 1000.0 + i) for i in range(0, n, 3)]
-        + [("NEW1", -1.0), ("NEW2", -2.0)], SCHEMA)
-    expected = {f"S{i:03d}": float(i) for i in range(n)}
-    expected.update({f"S{i:03d}": 1000.0 + i for i in range(0, n, 3)})
-    expected.update({"NEW1": -1.0, "NEW2": -2.0})
-    return t, src, expected
-
-
-def _crash_at_bucket_rename(monkeypatch, k: int):
-    """Raise instead of performing the k-th rename of a merged bucket dir
-    out of the tmp write (the publish loop's moves), pass everything
-    else."""
     real = os.rename
-    calls = {"n": 0}
+    calls = []
 
     def crashing(src, dst):
-        if "__bucket=" in str(src):
-            calls["n"] += 1
-            if calls["n"] == k:
-                raise OSError("simulated crash in bucket publish")
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("simulated crash between the swap's renames")
         return real(src, dst)
 
-    monkeypatch.setattr(os, "rename", crashing)
-
-
-@pytest.mark.parametrize("k", [1, 3])
-def test_crash_before_commit_reads_exact_old_snapshot(spark, tmp_path,
-                                                      monkeypatch, k):
-    # crash on the k-th bucket move: some new dirs landed, but the
-    # manifest was never replaced — readers stay on the FULL pre-merge
-    # snapshot (strictly stronger than the old mixed-version guarantee)
-    t, src, expected = _make(spark, tmp_path)
-    before = _rows(t.read())
-    manifest_before = json.load(open(os.path.join(t.path, "_manifest.json")))
-    _crash_at_bucket_rename(monkeypatch, k)
+    monkeypatch.setattr(merge.os, "rename", crashing)
     with pytest.raises(OSError, match="simulated crash"):
-        t.merge_upsert(src)
+        ParquetTable(spark, path, SCHEMA, "symbol").merge_upsert(
+            spark.createDataFrame([("D", 4.0)], SCHEMA))
     monkeypatch.undo()
+    assert not os.path.exists(path)
 
-    assert json.load(open(os.path.join(t.path, "_manifest.json"))) \
-        == manifest_before                      # commit never happened
-    assert _rows(t.read()) == before            # exact old snapshot
-    listing_after_crash = _listing(t.path)
-    _rows(t.read())
-    assert _listing(t.path) == listing_after_crash   # reads never mutate
+    t = ParquetTable(spark, path, SCHEMA, "symbol")
+    listing = sorted(os.listdir(tmp_path))
+    assert t.exists() and t.row_count() == 2
+    assert _rows(t) == {"A": 1.0, "B": 2.0}
+    assert t.status()["parquet_files"] > 0
+    assert sorted(os.listdir(tmp_path)) == listing     # reads write nothing
 
-    t.merge_upsert(src)                         # re-run converges + GCs
-    assert _rows(t.read()) == expected
-    live = set(json.load(open(os.path.join(t.path, "_manifest.json")))
-               ["buckets"].values())
-    orphans = [n for n in _listing(t.path)
-               if os.path.isdir(os.path.join(t.path, n)) and n not in live]
-    assert orphans == []
-
-
-def test_crash_after_commit_reads_exact_new_snapshot(spark, tmp_path,
-                                                     monkeypatch):
-    # crash between the manifest commit and GC: simulate by making rmtree
-    # a no-op during the merge — stale dirs remain but are unreferenced
-    import shutil as _shutil
-    t, src, expected = _make(spark, tmp_path)
-    monkeypatch.setattr(_shutil, "rmtree", lambda *a, **kw: None)
-    t.merge_upsert(src)
-    monkeypatch.undo()
-
-    m = json.load(open(os.path.join(t.path, "_manifest.json")))
-    live = set(m["buckets"].values())
-    orphans = [n for n in _listing(t.path)
-               if os.path.isdir(os.path.join(t.path, n)) and n not in live]
-    assert orphans                               # crash artifacts present
-    assert _rows(t.read()) == expected           # but invisible to reads
-
-    listing = _listing(t.path)
-    _rows(t.read())
-    assert _listing(t.path) == listing           # reads never mutate
-
-    t.repair()                                   # explicit GC
-    assert all(not os.path.isdir(os.path.join(t.path, n))
-               or n in live for n in _listing(t.path))
-    assert _rows(t.read()) == expected
-
-
-def test_interrupted_ops_accumulate_then_converge(spark, tmp_path,
-                                                  monkeypatch):
-    # two successive crashes at different points, then a clean run: the
-    # table converges to the uninterrupted result and every orphan from
-    # both failed attempts is collected
-    t, src, expected = _make(spark, tmp_path)
-    for k in (2, 1):
-        _crash_at_bucket_rename(monkeypatch, k)
-        with pytest.raises(OSError, match="simulated crash"):
-            t.merge_upsert(src)
-        monkeypatch.undo()
-    t.merge_upsert(src)
-    assert _rows(t.read()) == expected
-    live = set(json.load(open(os.path.join(t.path, "_manifest.json")))
-               ["buckets"].values())
-    orphans = [n for n in _listing(t.path)
-               if os.path.isdir(os.path.join(t.path, n)) and n not in live]
-    assert orphans == []
-
-
-def test_stale_commit_version_is_rejected(spark, tmp_path):
-    # committing against a version that is no longer current must raise
-    # (optimistic concurrency), not silently clobber the newer commit
-    t, src, _ = _make(spark, tmp_path)            # seeds version 1
-    t.merge_upsert(src)                           # -> version 2
-    m = json.load(open(os.path.join(t.path, "_manifest.json")))
-    assert m["version"] == 2
-    with pytest.raises(RuntimeError, match="concurrent commit"):
-        t._commit_manifest(m["buckets"], 2)       # planned against v1
-    assert json.load(open(os.path.join(t.path, "_manifest.json"))) == m
-
-
-def test_interleaved_writer_detected_not_clobbered(spark, tmp_path):
-    # writer B commits (to a DIFFERENT bucket) while writer A is between
-    # planning and commit: A must fail its commit loudly — losing B's
-    # update silently is the one unacceptable outcome — and the table
-    # stays exactly at B's committed state
-    from pyspark.sql import functions as F
-
-    t = ParquetTable(spark, str(tmp_path / "tbl"), SCHEMA, "symbol",
-                     buckets=64)
-    t.overwrite(spark.createDataFrame(
-        [(f"S{i:03d}", float(i)) for i in range(40)], SCHEMA))
-    # pick two keys that hash to different buckets (deterministic probe)
-    cands = [f"K{i}" for i in range(20)]
-    bks = {r["k"]: r["b"] for r in spark.createDataFrame(
-        [(k,) for k in cands], "k string").select(
-        "k", F.pmod(F.hash("k"), F.lit(64)).alias("b")).collect()}
-    k_a = cands[0]
-    k_b = next(k for k in cands if bks[k] != bks[k_a])
-
-    t2 = ParquetTable(spark, t.path, SCHEMA, "symbol", buckets=64)
-    src_a = spark.createDataFrame([(k_a, 1.0)], SCHEMA)
-    src_b = spark.createDataFrame([(k_b, 2.0)], SCHEMA)
-
-    def sneaky_combine(tgt, s):
-        t2.merge_upsert(src_b)                    # B lands mid-flight
-        return tgt.unionByName(s)
-
-    with pytest.raises(RuntimeError, match="concurrent commit"):
-        t.merge_with(src_a, sneaky_combine)
-    got = _rows(t.read())
-    assert got[k_b] == 2.0                        # B's commit survives
-    assert k_a not in got                         # A's never published
-    t.repair()                                    # A's orphan dirs collected
-    live = set(json.load(open(os.path.join(t.path, "_manifest.json")))
-               ["buckets"].values())
-    assert all(n in live for n in _listing(t.path)
-               if os.path.isdir(os.path.join(t.path, n)))
-
-
-def test_legacy_hive_layout_migrates_in_place(spark, tmp_path):
-    # a pre-manifest table (hive dirs, no _manifest.json, plus a stray
-    # __old_ crash artifact of the old rename-pair swap) reads via the
-    # legacy fallback and migrates on the first maintenance op
-    t, src, expected = _make(spark, tmp_path)
-    before = _rows(t.read())
-    manifest = os.path.join(t.path, "_manifest.json")
-    os.remove(manifest)
-    # fabricate an old-scheme crash artifact: superseded old copy
-    bucket_dirs = [n for n in os.listdir(t.path) if n.startswith("__bucket=")]
-    stray = os.path.join(t.path, bucket_dirs[0] + "__old_deadbeef")
-    os.makedirs(stray)
-
-    assert _rows(t.read()) == before             # legacy fallback read
-    assert not os.path.exists(manifest)          # ...which never migrates
-
-    t.merge_upsert(src)                          # first op migrates
-    assert os.path.exists(manifest)
-    assert _rows(t.read()) == expected
-    assert not any("__old_" in n for n in os.listdir(t.path))
-
-
-def test_legacy_plain_layout_migrates_without_data_loss(spark, tmp_path):
-    # a PLAIN (unbucketed, root-level parquet files) table opened with
-    # buckets=N: the first maintenance op must carry the existing rows
-    # into the bucketed layout — committing a manifest with an empty
-    # bucket mapping would silently orphan every pre-existing row
-    path = str(tmp_path / "plain")
-    base = spark.createDataFrame(
-        [(f"S{i:03d}", float(i)) for i in range(40)], SCHEMA)
-    base.write.parquet(path)                     # legacy plain layout
-    t = ParquetTable(spark, path, SCHEMA, "symbol", buckets=4)
-    before = _rows(t.read())                     # legacy read path works
-    assert len(before) == 40
-
-    src = spark.createDataFrame([("S000", 999.0), ("NEW1", -1.0)], SCHEMA)
-    t.merge_upsert(src)                          # first op migrates + merges
-    expected = dict(before, S000=999.0, NEW1=-1.0)
-    assert _rows(t.read()) == expected
-    m = json.load(open(os.path.join(path, "_manifest.json")))
-    assert m["buckets"]                          # mapping is NOT empty
-    assert not any(n.endswith(".parquet") for n in os.listdir(path))
-
-    # point lookups prune to the migrated buckets correctly
-    assert _rows(t.read_key("S007")) == {"S007": 7.0}
-
-
-def test_repair_alone_migrates_plain_layout(spark, tmp_path):
-    path = str(tmp_path / "plain2")
-    spark.createDataFrame([("A", 1.0), ("B", 2.0)], SCHEMA).write.parquet(path)
-    t = ParquetTable(spark, path, SCHEMA, "symbol", buckets=4)
-    t.repair()
-    assert _rows(t.read()) == {"A": 1.0, "B": 2.0}
-    m = json.load(open(os.path.join(path, "_manifest.json")))
-    assert m["version"] == 1 and m["buckets"]
-
-
-def test_mixed_legacy_layout_refused_loudly(spark, tmp_path):
-    # root-level parquet files AND __bucket= dirs with no manifest is an
-    # unresolvable half-migrated state: refuse rather than guess
-    t, src, _ = _make(spark, tmp_path)
-    os.remove(os.path.join(t.path, "_manifest.json"))
-    spark.createDataFrame([("ZZZ", 0.0)], SCHEMA).coalesce(1) \
-        .write.mode("overwrite").parquet(str(tmp_path / "one"))
-    import shutil as _sh
-    for n in os.listdir(str(tmp_path / "one")):
-        if n.endswith(".parquet"):
-            _sh.copy(os.path.join(str(tmp_path / "one"), n),
-                     os.path.join(t.path, n))
-    with pytest.raises(RuntimeError, match="mixed legacy layout"):
-        t.merge_upsert(src)
+    t.merge_upsert(spark.createDataFrame([("C", 3.0)], SCHEMA))
+    assert _rows(t) == {"A": 1.0, "B": 2.0, "C": 3.0}
+    assert os.listdir(tmp_path) == ["tbl"]

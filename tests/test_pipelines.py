@@ -209,7 +209,8 @@ def oracle_fundamental(pdf):
 def test_fundamental_pipeline_matches_oracle(spark):
     pdf = make_funda_fixture()
     sdf = spark.createDataFrame(pdf)
-    got = fs.fundamental_scores(sdf).toPandas().set_index("symbol")
+    got = fs.fundamental_scores(sdf, size_hint_rows=len(pdf)) \
+        .toPandas().set_index("symbol")
     oracle = oracle_fundamental(pdf)
     for sym, rec in oracle.items():
         assert got.loc[sym, "peer_level"] == rec["peer_level"], sym
@@ -229,7 +230,8 @@ def test_fundamental_ranks(spark):
     cats = spark.createDataFrame(
         pd.DataFrame({"symbol": pdf["symbol"],
                       "market_cap_category": ["Large Cap"] * len(pdf)}))
-    ranked = fs.fundamental_ranks(fs.fundamental_scores(sdf), cats)
+    ranked = fs.fundamental_ranks(
+        fs.fundamental_scores(sdf, size_hint_rows=len(pdf)), cats)
     rows = ranked.select("symbol", "fundamental_score", "fundamental_rank").collect()
     by_rank = sorted(rows, key=lambda r: r["fundamental_rank"])
     scores = [r["fundamental_score"] for r in by_rank]

@@ -77,7 +77,6 @@ ALLOWLIST = {
     "zorder_value": "export z-order key: " + TESTED,
     "write_zordered": "export z-order layout: " + TESTED,
     "apply_changelog": "CDC changelog replay: " + TESTED,
-    "table_changes": "CDC change feed between table versions: " + TESTED,
     "rows_in_buckets": "fingerprint re-scan of differing buckets: " + TESTED,
     "changelog_fingerprint_delta": "fingerprint delta from a changelog: " + TESTED,
     "apply_fingerprint_delta": "fingerprint delta apply: " + TESTED,
@@ -125,15 +124,6 @@ ALLOWLIST = {
     "save_pca": "batch PCA artifact save: " + TESTED,
     "load_pca": "batch PCA artifact load: " + TESTED,
     "random_projection": "JL random projection: " + TESTED,
-    # ParquetTable's bucketed layout and history: the warehouse's scale
-    # design (merge.py docstring, SURVEY §7 M0); every table the jobs
-    # write is unbucketed today
-    "ParquetTable.read_matching": "bucketed layout: bucket-pruned read for key joins",
-    "ParquetTable.merge_with": "bucketed layout: MERGE with a caller-supplied combine",
-    "ParquetTable.compact": "bucketed layout: small-file maintenance",
-    "ParquetTable.update_where": "K4: the reference's matched-only update, as MERGE",
-    "ParquetTable.rollback": "time travel: restore a retained snapshot",
-    "ParquetTable.vacuum": "time travel: drop history past the retention window",
     "SourceRegistry.register_views": "exposes every source to spark.sql; no caller yet",
     "UserStore.add_user": "serving auth primitive: the user store behind POST /auth/token",
     # media operators

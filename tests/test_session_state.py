@@ -23,8 +23,7 @@ SF = "/root/testdata/sf0.001"
 REGISTRIES = {("plans/analytics.py", "QUERIES"), ("plans/analytics.py", "ORACLE"),
               ("operators/multimodal.py", "_DECODER")}
 # functions that pin one micro-batch's frames with a direct localCheckpoint
-MICRO_BATCH = {("operators/merge.py", "_pin_batch"),
-               ("streaming/news_dedup.py", "sink")}
+MICRO_BATCH = {("streaming/news_dedup.py", "sink")}
 CONTAINER_CALLS = {"dict", "list", "set", "defaultdict", "OrderedDict", "deque",
                    "Counter", "WeakKeyDictionary", "WeakValueDictionary"}
 MUTATORS = {"append", "extend", "insert", "remove", "pop", "popitem", "clear",

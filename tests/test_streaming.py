@@ -154,34 +154,3 @@ def test_news_stream_empty_watermark_batch_commits_nothing(spark, tmp_path,
     assert [p["numInputRows"] for p in q.recentProgress] == [4, 0]
     assert writes == [1]
     assert len(table.read().collect()) == 2
-
-
-def test_stream_merge_sink_builds_time_travel_history(spark, tmp_path):
-    """Streaming MERGE sink on a retention table: each micro-batch is
-    one manifest commit, so the last retain_versions batch states stay
-    point-in-time readable — streaming and time travel compose."""
-    inbox = tmp_path / "inbox_tt"
-    inbox.mkdir()
-    table = ParquetTable(spark, str(tmp_path / "stock_tt"), SCHEMA,
-                         key="symbol", buckets=4, retain_versions=3)
-
-    for i, body in enumerate(["Symbol,Price\nA,1.0\n",
-                              "Symbol,Price\nA,2.0\nB,5.0\n",
-                              "Symbol,Price\nA,3.0\n"]):
-        (inbox / f"Technicals_{i}.csv").write_text(body)
-        q = stream_csv_to_table(spark, str(inbox), HEADER_MAP, table,
-                                str(tmp_path / "ckpt_tt"),
-                                csv_header_columns=["Symbol", "Price"])
-        q.awaitTermination(120)
-
-    vs = table.versions()
-    assert len(vs) == 3
-
-    def prices(version):
-        return {r["symbol"]: r["price"]
-                for r in table.read(version=version).collect()}
-
-    assert prices(vs[0]) == {"A": 1.0}
-    assert prices(vs[1]) == {"A": 2.0, "B": 5.0}
-    assert prices(vs[2]) == {"A": 3.0, "B": 5.0}
-    assert prices(None) == prices(vs[2])

@@ -4,9 +4,9 @@ snapshots, and re-apply it.
 The lakehouse maintenance story at 100 TB: upstreams often deliver FULL
 snapshots (daily dumps, re-scrapes), while downstreams want DELTAS —
 incremental MERGE input, cache invalidation, audit trails. The diff is
-one full-outer join on the key (both sides pre-bucketed at scale — the
-same co-location contract as ``merge.ParquetTable``), with null-safe
-column comparison deciding insert / delete / update:
+one full-outer join on the key (both sides pre-bucketed on it at scale,
+so the join is co-located), with null-safe column comparison deciding
+insert / delete / update:
 
 - ``snapshot_diff(old, new, keys, cols)`` → changelog rows
   ``keys + op + <c>_old/<c>_new`` per compared column; unchanged rows
@@ -14,6 +14,11 @@ column comparison deciding insert / delete / update:
 - ``apply_changelog(base, changelog, keys, cols)`` → replays a
   changelog onto the old snapshot and reconstructs the new one exactly
   (pinned round-trip: ``apply(old, diff(old, new)) == new``).
+
+The inputs are whole frames — two dumps, or a staged load against the
+live table. ``merge.ParquetTable`` keeps no version history, so a feed
+between committed table versions is the table format's job at scale
+(Delta's change data feed).
 
 Cheap pre-filter at scale: run ``fingerprint.fingerprint_diff`` first
 and diff only the buckets that changed — churn-proportional, like the
@@ -84,18 +89,3 @@ def apply_changelog(base: DataFrame, changelog: DataFrame, keys: list[str],
                 .select(*keys, *[F.col(f"{c}_new").alias(c) for c in cols]))
     return kept.unionByName(new_rows)
 
-
-def table_changes(table, from_version: int, to_version: int,
-                  cols: list[str] | None = None) -> DataFrame:
-    """Change-data-feed between two retained versions of a
-    ``merge.ParquetTable`` (the Delta CDF idea, derived rather than
-    logged): snapshot-diff the two point-in-time reads. Cost is one
-    full-outer join of the two snapshots — at scale both sides share
-    the table's bucket layout, and a fingerprint pre-filter
-    (``fingerprint.fingerprint_diff``) can bound it to changed buckets.
-    ``cols`` defaults to every non-key column of the table schema."""
-    key = table.key
-    if cols is None:
-        cols = [f.name for f in table.schema.fields if f.name != key]
-    return snapshot_diff(table.read(version=from_version),
-                         table.read(version=to_version), [key], cols)

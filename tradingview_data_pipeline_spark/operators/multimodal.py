@@ -515,8 +515,8 @@ def video_near_dups(vp: DataFrame, *, bits: int = 60, bands: int = 4,
     # the n_frames joins) that run in PARALLEL stages — a lazy persist
     # races and the per-frame decode pass runs up to three times
     # (measured 24.6 s vs 7 s single-pass at 40k frames). EAGER
-    # DISK_ONLY checkpoint = one evaluation, the merge._pin_batch
-    # pattern; tracked in the checkpoint registry (NOT release_all's,
+    # DISK_ONLY checkpoint = one evaluation, the news sink's batch
+    # pin; tracked in the checkpoint registry (NOT release_all's,
     # whose lazy-recompute safety contract truncated lineage breaks)
     # so harnesses can free the blocks at query boundaries.
     vp = pins.checkpoint(vp)

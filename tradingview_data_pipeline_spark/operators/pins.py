@@ -5,7 +5,7 @@
 | query / job | persisted multi-consumer frames, ``track(df.persist(DISK_ONLY))`` (the NOTES-31/34 DISK_ONLY pin rule) | operators and plans that pin while a query or job is built: ``corpus``, ``similarity.semantic_dedup``, ``multimodal``, ``corpus_queries``, ``training_queries``, ``run_corpus_prep`` | ``release_all()``: the harnesses between queries (``bench.py``, ``perfbench/registry.py``, ``tools/verify_oracle.py``, ``tools/scale_bench.py``, ``tools/qbench.py``); ``run_corpus_prep`` once its shards land |
 | query / job | local checkpoints, ``checkpoint(df, eager=..., storage_level=...)`` | every query- or job-owned checkpoint: the LSH, media and BM25 substrates, ``urls.domain_cap``, ``dedup.connected_components``, ``graph.pagerank``, ``bpe.bpe_train``, ``run_corpus_prep``, q80's URL frame, q83's media encode | ``release_checkpoints()``: the same harnesses, at the same boundary; ``run_corpus_prep`` once its shards land, and again once its tokenize stage's sequences land |
 | session | ``memo(spark, key, build)`` values and the checkpoint a value holds | ``analytics._t`` (base-table readers), ``training_queries._scored_pairs`` (the q28/q42/q70 LSH substrate) | ``forget()``: ``tools/scale_bench.py`` per scale point, ``tools/qbench.py`` per repeat |
-| micro-batch | direct ``localCheckpoint`` calls | ``ParquetTable._pin_batch``, the news sink | untracked: a stream never reaches a release point, so tracking would grow on every batch; Spark's context cleaner frees each batch's blocks once its frames are unreachable |
+| micro-batch | direct ``localCheckpoint`` calls | the news sink | untracked: a stream never reaches a release point, so tracking would grow on every batch; Spark's context cleaner frees each batch's blocks once its frames are unreachable |
 
 Releasing a persisted pin is always safe: lazy recomputation keeps
 results correct if a pin goes while its frame is still referenced.

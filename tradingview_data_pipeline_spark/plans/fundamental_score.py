@@ -86,8 +86,7 @@ def apply_caps(df: DataFrame) -> DataFrame:
     return df.withColumns(caps) if caps else df
 
 
-def fundamental_scores(df: DataFrame, *,
-                       size_hint_rows: int | None = None) -> DataFrame:
+def fundamental_scores(df: DataFrame, *, size_hint_rows: int) -> DataFrame:
     """Adds ``{metric}_percentile``, peer_level, four category scores and
     fundamental_score to ``df``.
 
@@ -166,16 +165,13 @@ def fundamental_scores(df: DataFrame, *,
         # (metric)-partitioned rank window, which shares the exchange of
         # the two keyed windows above; at scale that window holds the FULL
         # table in one task per metric, so set mode uses the set-based
-        # form instead. The mode gate prefers a caller-supplied size hint
-        # (the job path passes ParquetTable.row_count() — exact, from
-        # parquet footers, zero Spark actions); only hint-less callers pay
-        # the bounded LIMIT-probe fallback. Results are identical in
-        # either mode — only the physical plan changes, so a stale/absent
-        # hint can never change answers.
+        # form instead. The mode gate reads the caller's size hint (the
+        # job path passes ParquetTable.row_count() — exact, from parquet
+        # footers, zero Spark actions). Results are identical in either
+        # mode — only the physical plan changes, so a stale hint can never
+        # change answers.
         cap = 2_000_000 // max(len(metrics), 1)
-        n_rows = size_hint_rows if size_hint_rows is not None \
-            else df.limit(cap + 1).count()
-        mode = "small" if n_rows <= cap else "set"
+        mode = "small" if size_hint_rows <= cap else "set"
         long = attach_peer_percentile_exact(long, "sv", "__pct_all",
                                             group_keys=["metric"],
                                             min_peers=2, round_digits=2,

@@ -4,8 +4,8 @@ indscores.py — identical logic, different table).
 clean unit-strings (F3) -> min-max normalize each column over the whole
 table (A2/F9, all-equal -> 1.0) -> three weighted horizontal sums
 (3m/6m/1y holding periods). The reference then PATCHes row-by-row
-(~185 ms/row, indscores.log); our sink is one MERGE (K4 as set-based
-update_where).
+(~185 ms/row, indscores.log); the scores are recomputed for every
+segment at once, so our sink is one overwrite of the table (K4 as K3).
 
 The min-max aggregates are a single global agg (20-119 rows in the
 domain; at scale they stay one reduce of 2 values per column — no global
